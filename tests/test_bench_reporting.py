@@ -4,9 +4,10 @@ when the line embedded the multi-KB scaling protocol). Pin the digest
 shape and size against a detail dict of realistic bulk."""
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import compact_headline  # noqa: E402
 

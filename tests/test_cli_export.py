@@ -2,10 +2,13 @@
 parquet and round-trips with the gate's DataFrame output."""
 
 import json
+import os
 import subprocess
 import sys
 
 import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.mark.spark
@@ -26,7 +29,7 @@ class TestExportTraining:
                 "--stage", "training_prep_v3",
                 "--master", "local[4]",
             ],
-            capture_output=True, text=True, timeout=420, cwd="/root/repo",
+            capture_output=True, text=True, timeout=420, cwd=REPO,
         )
         assert proc.returncode == 0, proc.stderr[-2000:]
         info = json.loads(proc.stdout.strip().splitlines()[-1])

@@ -1,8 +1,11 @@
-"""Per-block bound fold (Lucene impact-sorting analog) in the
-doc-values scorers: admissibility (per-window bounds return EXACTLY the
+"""Per-window bound fold (Lucene impact-sorting analog) of the OR
+kernel under a per-doc score transform (doc-value bonus ``add``, decay
+``mul``): admissibility (per-window bounds return EXACTLY the
 scalar-bound / brute-force results) and the measured skip-rate win on a
 skewed corpus — high-bonus docs and the remaining terms' postings in
 DIFFERENT windows, where the bucket-scalar bound cannot trigger early.
+The scalar reference is the same kernel with its window widened to the
+whole bucket; skip rates are decoded-posting counts.
 
 Pure numpy/pandas unit tests over synthetic segment rows (codec
 pack_postings) — no Spark session.
@@ -13,10 +16,10 @@ import pandas as pd
 import pytest
 
 from uci_searchengine_spark import BM25_B, BM25_K1
+from uci_searchengine_spark.operators import wand
 from uci_searchengine_spark.operators.codec import pack_postings
-from uci_searchengine_spark.operators.docvalues import (
-    _score_bucket_blended,
-    _score_bucket_decayed,
+from uci_searchengine_spark.operators.wand import (
+    _score_bucket,
     _term_window_ub,
     _window_max,
 )
@@ -83,41 +86,56 @@ def _skewed_case():
     return terms, idf_map, bonus, seg
 
 
-def _run(seg, idf_map, bonus, k, per_block):
-    stats = {}
-    out = _score_bucket_blended(
-        seg, idf_map, AVGDL, BUCKET, k, bonus,
-        per_block_bounds=per_block, stats=stats,
-    )
-    return [(int(r.doc_id), float(r.score)) for r in out.itertuples()], stats
+def _kernel(monkeypatch, seg, idf_map, k, per_block, **transform):
+    """Run the kernel; returns (hits, postings decoded). ``per_block``
+    False widens the bound window to the whole bucket (scalar bound)."""
+    decoded = []
+    real = wand.unpack_postings
+
+    def counting(*a, **kw):
+        out = real(*a, **kw)
+        decoded.append(len(out[0]))
+        return out
+
+    with monkeypatch.context() as m:
+        m.setattr(wand, "unpack_postings", counting)
+        if not per_block:
+            m.setattr(wand, "_WINDOW", BUCKET)
+        out = _score_bucket(seg, idf_map, AVGDL, BUCKET, k, **transform)
+    hits = [(int(r.doc_id), float(r.score)) for r in out.itertuples()]
+    return hits, sum(decoded)
+
+
+def _run(monkeypatch, seg, idf_map, bonus, k, per_block):
+    return _kernel(monkeypatch, seg, idf_map, k, per_block, add=bonus)
 
 
 class TestBlendedFold:
-    def test_admissible_and_equal_paths(self):
+    def test_admissible_and_equal_paths(self, monkeypatch):
         terms, idf_map, bonus, seg = _skewed_case()
         want = _brute_blended(terms, idf_map, bonus, k=5)
-        got_pb, _ = _run(seg, idf_map, bonus, 5, per_block=True)
-        got_sc, _ = _run(seg, idf_map, bonus, 5, per_block=False)
+        got_pb, _ = _run(monkeypatch, seg, idf_map, bonus, 5, per_block=True)
+        got_sc, _ = _run(monkeypatch, seg, idf_map, bonus, 5, per_block=False)
         assert [d for d, _ in got_pb] == [d for d, _ in want]
         assert got_pb == got_sc
         for (gd, gs), (wd, ws) in zip(got_pb, want):
             assert abs(gs - ws) < 1e-9
 
-    def test_skip_rate_improves(self):
+    def test_skip_rate_improves(self, monkeypatch):
         _, idf_map, bonus, seg = _skewed_case()
-        _, st_pb = _run(seg, idf_map, bonus, 5, per_block=True)
-        _, st_sc = _run(seg, idf_map, bonus, 5, per_block=False)
-        # per-window bound triggers right after the first term; the
-        # scalar bound needs a second full decode first
-        assert st_pb["trigger_term"] == 0
-        assert st_sc["trigger_term"] > st_pb["trigger_term"]
-        assert st_pb["decoded"] < st_sc["decoded"]
-        # and the win is the whole rare-term volume (64+64 postings
-        # decoded by the scalar path before/at its trigger)
-        assert st_sc["decoded"] - st_pb["decoded"] >= 64
+        _, dec_pb = _run(monkeypatch, seg, idf_map, bonus, 5, per_block=True)
+        _, dec_sc = _run(monkeypatch, seg, idf_map, bonus, 5, per_block=False)
+        # per-window bound triggers right after the first term, so only
+        # t1's postings are decoded; the scalar bound needs a second
+        # full decode first
+        assert dec_pb == BUCKET
+        assert dec_pb < dec_sc
+        # and the win is the whole rare-term volume (64 postings decoded
+        # by the scalar path before its trigger)
+        assert dec_sc - dec_pb >= 64
 
     @pytest.mark.parametrize("seed", [1, 7, 42])
-    def test_fuzz_paths_identical(self, seed):
+    def test_fuzz_paths_identical(self, seed, monkeypatch):
         rng = np.random.RandomState(seed)
         terms = []
         for i in range(5):
@@ -131,21 +149,16 @@ class TestBlendedFold:
         )
         seg = _seg([_seg_row(t, d, tf) for t, d, tf in terms])
         want = _brute_blended(terms, idf_map, bonus, k=10)
-        got_pb, st_pb = _run(seg, idf_map, bonus, 10, per_block=True)
-        got_sc, st_sc = _run(seg, idf_map, bonus, 10, per_block=False)
+        got_pb, dec_pb = _run(monkeypatch, seg, idf_map, bonus, 10, per_block=True)
+        got_sc, dec_sc = _run(monkeypatch, seg, idf_map, bonus, 10, per_block=False)
         assert [d for d, _ in got_pb] == [d for d, _ in want]
         assert got_pb == got_sc
-        assert st_pb.get("decoded", 0) <= st_sc.get("decoded", 0)
+        assert dec_pb <= dec_sc
 
 
 class TestDecayedFold:
-    def _run_decay(self, seg, idf_map, mult, k, per_block):
-        stats = {}
-        out = _score_bucket_decayed(
-            seg, idf_map, AVGDL, BUCKET, k, mult,
-            per_block_bounds=per_block, stats=stats,
-        )
-        return [(int(r.doc_id), float(r.score)) for r in out.itertuples()], stats
+    def _run_decay(self, monkeypatch, seg, idf_map, mult, k, per_block):
+        return _kernel(monkeypatch, seg, idf_map, k, per_block, mul=mult)
 
     def _brute_decay(self, terms, idf_map, mult, k):
         acc = np.zeros(BUCKET)
@@ -170,23 +183,23 @@ class TestDecayedFold:
         mult[640:704] = 1.0
         return terms, idf_map, mult, seg
 
-    def test_admissible_and_equal_paths(self):
+    def test_admissible_and_equal_paths(self, monkeypatch):
         terms, idf_map, mult, seg = self._skewed_decay()
         want = self._brute_decay(terms, idf_map, mult, k=5)
-        got_pb, _ = self._run_decay(seg, idf_map, mult, 5, per_block=True)
-        got_sc, _ = self._run_decay(seg, idf_map, mult, 5, per_block=False)
+        got_pb, _ = self._run_decay(monkeypatch, seg, idf_map, mult, 5, per_block=True)
+        got_sc, _ = self._run_decay(monkeypatch, seg, idf_map, mult, 5, per_block=False)
         assert [d for d, _ in got_pb] == [d for d, _ in want]
         assert got_pb == got_sc
 
-    def test_skip_rate_improves(self):
+    def test_skip_rate_improves(self, monkeypatch):
         terms, idf_map, mult, seg = self._skewed_decay()
-        _, st_pb = self._run_decay(seg, idf_map, mult, 5, per_block=True)
-        _, st_sc = self._run_decay(seg, idf_map, mult, 5, per_block=False)
-        assert st_pb["trigger_term"] <= st_sc.get("trigger_term", 99)
-        assert st_pb["decoded"] < st_sc["decoded"]
+        _, dec_pb = self._run_decay(monkeypatch, seg, idf_map, mult, 5, per_block=True)
+        _, dec_sc = self._run_decay(monkeypatch, seg, idf_map, mult, 5, per_block=False)
+        assert dec_pb == BUCKET  # triggers right after t1
+        assert dec_pb < dec_sc
 
     @pytest.mark.parametrize("seed", [3, 11])
-    def test_fuzz_paths_identical(self, seed):
+    def test_fuzz_paths_identical(self, seed, monkeypatch):
         rng = np.random.RandomState(seed)
         terms = []
         for i in range(4):
@@ -198,8 +211,8 @@ class TestDecayedFold:
         mult = rng.uniform(0, 1, size=BUCKET)
         seg = _seg([_seg_row(t, d, tf) for t, d, tf in terms])
         want = self._brute_decay(terms, idf_map, mult, k=10)
-        got_pb, _ = self._run_decay(seg, idf_map, mult, 10, per_block=True)
-        got_sc, _ = self._run_decay(seg, idf_map, mult, 10, per_block=False)
+        got_pb, _ = self._run_decay(monkeypatch, seg, idf_map, mult, 10, per_block=True)
+        got_sc, _ = self._run_decay(monkeypatch, seg, idf_map, mult, 10, per_block=False)
         assert [d for d, _ in got_pb] == [d for d, _ in want]
         assert got_pb == got_sc
 

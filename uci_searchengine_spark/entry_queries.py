@@ -6112,8 +6112,8 @@ def q_msm_search(spark, sf_dir):
     among docs matching at least 2 of the 3 query terms, scored by the
     SAME OR-sum BM25 — eligibility changes, scores never do. Strictly
     intermediate m runs the full-decode two-accumulator bucket pass
-    (wand._score_bucket_msm — no admissible block-max bound exists on
-    eligibility between OR and AND; docstring there)."""
+    (wand._score_bucket with min_match — no admissible block-max bound
+    exists on eligibility between OR and AND; docstring there)."""
     from uci_searchengine_spark.operators.index_build import load_docs
     from uci_searchengine_spark.operators.wand import score_msm
 
@@ -9224,7 +9224,7 @@ def q_terms_set(spark, sf_dir):
     stand-in for a stored INT doc value; the product path would read it
     from the operators/docvalues.py plane). Eligibility changes, scores
     never do: score = the SAME OR-sum BM25 as msm_search
-    (wand._score_bucket_msm is the scalar-threshold product path; the
+    (wand._score_bucket's min_match is the scalar-threshold product path; the
     per-doc threshold generalization is this relational form). One
     token-stream scan, broadcast stats/df, doc-keyed aggregate —
     no Window, no Python."""

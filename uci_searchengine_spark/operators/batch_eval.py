@@ -1,5 +1,5 @@
 """Batch query evaluation: score MANY queries against the index in ONE
-Spark job.
+Spark plan.
 
 Offline evaluation shape: relevance sweeps, A/B reranking studies, and
 training-data mining (hard-negative retrieval) all run 10^3-10^6 queries
@@ -41,12 +41,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from uci_searchengine_spark.operators.bm25 import idf as idf_fn
 from uci_searchengine_spark.operators.bm25 import terms_for_index
+from uci_searchengine_spark.operators.codec import unpack_postings
 from uci_searchengine_spark.operators.index_build import IndexMeta
 from uci_searchengine_spark.operators.wand import (
+    _bm25,
+    _idf_map,
+    _mask,
     _score_bucket,
     _score_bucket_and,
+    _select,
+    _term_rows,
     apply_per_bucket,
     load_excl,
     pruned_segments,
@@ -96,40 +101,15 @@ def _score_shared(
     excl: "np.ndarray | None",
 ) -> pd.DataFrame:
     """Exhaustive OR scoring from PRE-DECODED postings (the shared-decode
-    batch path): rows already (idf, d, tf, dl) and sorted by upper bound
-    desc — the same float-accumulation order as wand._score_bucket, so
-    scores are bit-equal to the pruned path for every returned doc."""
-    from uci_searchengine_spark import BM25_B, BM25_K1
-
+    batch path): rows (w, d, tf, dl) in the OR kernel's accumulation
+    order (``wand._term_rows``), so every returned score is bit-equal
+    to the pruned path's."""
     acc = np.zeros(bucket_size, dtype=np.float64)
     for w, d, tf, dl in decoded:
-        if excl is not None and excl.size and d.size:
-            p = np.clip(np.searchsorted(excl, d), 0, excl.size - 1)
-            m = excl[p] != d
-            d, tf, dl = d[m], tf[m], dl[m]
-        if not d.size:
-            continue
-        tf_f = tf.astype(np.float64)
-        contrib = w * (
-            tf_f
-            * (BM25_K1 + 1.0)
-            / (tf_f + BM25_K1 * (1.0 - BM25_B + BM25_B * dl.astype(np.float64) / avgdl))
-        )
-        np.add.at(acc, d - base, contrib)
+        d, tf, dl = _mask(d, tf, dl, excl, None)
+        np.add.at(acc, d - base, _bm25(w, tf, dl, avgdl))
     nz = np.flatnonzero(acc > 0)
-    if not nz.size:
-        return pd.DataFrame(
-            {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")}
-        )
-    scores = acc[nz]
-    if nz.size > k:
-        kth = np.partition(scores, nz.size - k)[nz.size - k]
-        keep = scores >= kth
-        nz, scores = nz[keep], scores[keep]
-    order = np.lexsort((nz, -scores))[:k]
-    return pd.DataFrame(
-        {"doc_id": (nz[order] + base).astype("int64"), "score": scores[order]}
-    )
+    return _select(nz, acc[nz], base, k)
 
 
 def batch_topk(
@@ -184,93 +164,44 @@ def batch_topk(
             out = []
             if len(seg_pdf):
                 terms_here = set(seg_pdf["term"])
-                idf_all = {
-                    t: idf_fn(n_docs, int(d))
-                    for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
-                }
-                decode_eff = decode
-                if decode == "auto":
-                    dfm = {
-                        t: int(d)
-                        for t, d in zip(
-                            seg_pdf["term"], seg_pdf["df_global"]
-                        )
-                    }
-                    decode_eff = (
-                        "shared"
-                        if mode == "or"
-                        and decode_multiplicity(q_terms, dfm)
-                        >= DECODE_AUTO_THRESHOLD
-                        else "per-query"
+                idf_all = _idf_map(n_docs, seg_pdf)
+                shared = decode == "shared" or (
+                    decode == "auto"
+                    and mode == "or"
+                    and decode_multiplicity(
+                        q_terms,
+                        {t: int(d) for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])},
                     )
-                if decode_eff == "shared":
-                    from uci_searchengine_spark.operators.codec import (
-                        unpack_postings,
-                    )
-
-                    base = int(seg_pdf["bucket"].iloc[0]) * bucket_size
-                    has_gen = "gen_avgdl" in seg_pdf.columns
-                    by_term: dict[str, list] = {}
-                    for r in seg_pdf.itertuples(index=False):
-                        w = idf_all[r.term]
-                        d, tf, dl = unpack_postings(bytes(r.postings))
-                        # same upper-bound sort key as the pruned scorer
-                        # (incl. the multi-generation avgdl inflation, so
-                        # the accumulation ORDER — and therefore the
-                        # float sum — matches bit for bit)
-                        from uci_searchengine_spark import BM25_K1
-
-                        bm = np.asarray(r.block_max, dtype=np.float64)
-                        infl = (
-                            max(1.0, avgdl / float(r.gen_avgdl))
-                            if has_gen
-                            else 1.0
-                        )
-                        ub = (
-                            w * (BM25_K1 + 1.0)
-                            * (bm.max() if bm.size else 0.0) * infl
-                        )
-                        by_term.setdefault(r.term, []).append((ub, w, d, tf, dl))
-                    for qid, ts in q_terms.items():
-                        rows = [x for t in ts for x in by_term.get(t, [])]
-                        if not rows:
-                            continue
-                        rows.sort(key=lambda x: -x[0])
-                        pdf = _score_shared(
-                            [(w, d, tf, dl) for _, w, d, tf, dl in rows],
-                            avgdl, base, bucket_size, k, excl_local,
-                        )
-                        if len(pdf):
-                            pdf = pdf.copy()
-                            pdf.insert(0, "query_id", qid)
-                            out.append(pdf)
-                    if not out:
-                        return pd.DataFrame(
-                            {
-                                "query_id": pd.Series([], dtype="object"),
-                                "doc_id": pd.Series([], dtype="int64"),
-                                "score": pd.Series([], dtype="float64"),
-                            }
-                        )
-                    return pd.concat(out, ignore_index=True)
+                    >= DECODE_AUTO_THRESHOLD
+                )
+                base = int(seg_pdf["bucket"].iloc[0]) * bucket_size
+                if shared:
+                    # one decode per row, in the kernel's accumulation
+                    # order — any query's subset keeps that order
+                    decoded = [
+                        (r.term, w, *unpack_postings(bytes(r.postings)))
+                        for _ub, w, r in _term_rows(seg_pdf, idf_all, avgdl)
+                    ]
                 for qid, ts in q_terms.items():
                     mine = [t for t in ts if t in terms_here]
-                    if not mine:
-                        continue
-                    if mode == "and" and len(mine) < len(ts):
-                        continue  # some term absent from this bucket
-                    sub = seg_pdf[seg_pdf["term"].isin(mine)]
-                    if mode == "and":
+                    if not mine or (mode == "and" and len(mine) < len(ts)):
+                        continue  # no term / some AND term absent here
+                    if shared:
+                        pdf = _score_shared(
+                            [x[1:] for x in decoded if x[0] in mine],
+                            avgdl, base, bucket_size, k, excl_local,
+                        )
+                    elif mode == "and":
                         pdf = _score_bucket_and(
-                            sub, idf_all, avgdl, bucket_size, len(ts), k,
-                            excl=excl_local,
+                            seg_pdf[seg_pdf["term"].isin(mine)], idf_all,
+                            avgdl, bucket_size, len(ts), k, excl=excl_local,
                         )
                     else:
                         pdf = _score_bucket(
-                            sub, idf_all, avgdl, bucket_size, k, excl=excl_local
+                            seg_pdf[seg_pdf["term"].isin(mine)], idf_all,
+                            avgdl, bucket_size, k, excl=excl_local,
                         )
                     if len(pdf):
-                        pdf = pdf.copy()
                         pdf.insert(0, "query_id", qid)
                         out.append(pdf)
             if not out:

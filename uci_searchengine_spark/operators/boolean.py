@@ -39,40 +39,25 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from uci_searchengine_spark import BM25_B, BM25_K1
 from uci_searchengine_spark.functions.queryparse import BoolQuery, parse_query
 from uci_searchengine_spark.operators.bm25 import analyze_seq
-from uci_searchengine_spark.operators.bm25 import idf as idf_fn
-from uci_searchengine_spark.operators.codec import unpack_postings
 from uci_searchengine_spark.operators.index_build import IndexMeta
 from uci_searchengine_spark.operators.phrase import (
     _candidate_positions,
     _verify_bucket,
 )
 from uci_searchengine_spark.operators.wand import (
-    _decode_for_candidates,
+    _bm25,
+    _decode,
+    _idf_map,
     _score_bucket,
+    _select,
     apply_per_bucket,
     load_excl,
     pruned_segments,
 )
 
 _OUT = "doc_id long, score double"
-
-
-def _row_decode(row, cand: np.ndarray | None, base: int):
-    """Decode one segment row — fully, or restricted to sorted candidate
-    doc ids via block-fence skipping."""
-    blob = bytes(row.postings)
-    if cand is None:
-        return unpack_postings(blob)
-    return _decode_for_candidates(
-        blob,
-        np.asarray(row.block_offsets, dtype=np.int64),
-        np.asarray(row.block_last_doc, dtype=np.int64),
-        cand,
-        base,
-    )
 
 
 def _near_ok(
@@ -338,14 +323,11 @@ def make_boolean_fn(
             in_pos = seg_pdf["term"].isin(pos_set)
             pos_rows = seg_pdf[in_pos]
             neg_rows = seg_pdf[seg_pdf["term"].isin(neg_set)]
-            idf_map = {
-                t: idf_fn(n_docs, int(d))
-                for t, d in zip(pos_rows["term"], pos_rows["df_global"])
-            }
+            idf_map = _idf_map(n_docs, pos_rows)
             if not req_set and not grps:
                 excl = tomb
                 if len(neg_rows):
-                    parts = [_row_decode(r, None, base)[0] for r in neg_rows.itertuples(index=False)]
+                    parts = [_decode(r, None, base)[0] for r in neg_rows.itertuples(index=False)]
                     if parts:
                         neg_ids = np.concatenate(parts)
                         excl = (
@@ -391,7 +373,7 @@ def make_boolean_fn(
             for _df, _key, trows in constraints:
                 parts = []
                 for r in trows:
-                    d, _tf, _dl = _row_decode(r, cand, base)
+                    d, _tf, _dl = _decode(r, cand, base)
                     if d.size:
                         parts.append(d)
                 if not parts:
@@ -405,7 +387,7 @@ def make_boolean_fn(
                 if not cand.size:
                     return out_empty
             for r in neg_rows.itertuples(index=False):
-                d, _tf, _dl = _row_decode(r, cand, base)
+                d, _tf, _dl = _decode(r, cand, base)
                 cand = _setdiff_sorted(cand, d)
                 if not cand.size:
                     return out_empty
@@ -468,29 +450,10 @@ def make_boolean_fn(
             for r in sorted(
                 pos_rows.itertuples(index=False), key=lambda r: r.term
             ):
-                d, tf, dl = _row_decode(r, cand, base)
-                if not d.size:
-                    continue
-                tf_f = tf.astype(np.float64)
-                contrib = idf_map[r.term] * (
-                    tf_f
-                    * (BM25_K1 + 1.0)
-                    / (
-                        tf_f
-                        + BM25_K1
-                        * (1.0 - BM25_B + BM25_B * dl.astype(np.float64) / avgdl)
-                    )
-                )
-                np.add.at(acc, d - base, contrib)
+                d, tf, dl = _decode(r, cand, base)
+                np.add.at(acc, d - base, _bm25(idf_map[r.term], tf, dl, avgdl))
             nz = cand - base
-            scores = acc[nz]
-            order = np.lexsort((nz, -scores))[:k]
-            return pd.DataFrame(
-                {
-                    "doc_id": (nz[order] + base).astype("int64"),
-                    "score": scores[order],
-                }
-            )
+            return _select(nz, acc[nz], base, k)
 
         return score_fn
 

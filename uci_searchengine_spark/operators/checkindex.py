@@ -67,7 +67,7 @@ def _check_seg_rows(meta: IndexMeta):
     bucket_size = meta.bucket_size
     root_avgdl = meta.avgdl
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         issues: list[tuple[str, str]] = []
         has_gen = "gen_avgdl" in pdf.columns
         has_pos = "positions" in pdf.columns
@@ -165,7 +165,7 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
     # doc store: per-bucket order/uniqueness/range + url presence
     bucket_size = meta.bucket_size
 
-    def docs_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def docs_fn(key, pdf):
         issues = []
         b = int(pdf["bucket"].iloc[0]) if len(pdf) else -1
         where = f"docs bucket={b}"

@@ -12,20 +12,17 @@ co-located (a footer-pruned columnar read inside the task; never a join,
 never a shuffle). Values for docs missing from the relation default
 to 0.0.
 
-Pruning stays admissible and is PER-BLOCK (the Lucene impact-sorting
-analog): each term's block_max metadata is folded onto a fixed 128-doc
-window grid and the doc-values plane is folded onto the same grid
-in-task (`_window_max` — O(bucket_size) next to the decode, and the
-dense vector is needed for per-hit values anyway, so a build-time
-sidecar would save no IO). The θ-test then bounds unseen docs per
-window by ``remaining_win_ub[j] + bonus_win_max[j]`` and candidates by
-``blended[d] + remaining_win_ub[win(d)]`` — strictly tighter than the
-bucket-scalar ``remaining_term_ub + max_bucket_bonus`` bound (kept as
-the ``per_block_bounds=False`` reference path): high-bonus docs and
-the remaining terms' heavy blocks are usually not in the same window,
-and a term bounds to ZERO in windows where it has no postings at all.
-The candidate set and θ itself are maintained over the BLENDED scores.
-With weight == 0 this degrades to exactly the BM25 bound.
+Scoring runs the OR kernel ``wand._score_bucket`` with the values as a
+per-doc transform: blending adds ``add = weight * values``, decay
+multiplies by ``mul = decay_curve(values)``. The values are read in-task
+into a dense bucket-local vector (needed for the per-hit values anyway,
+so a build-time sidecar would save no IO). Pruning stays admissible and
+bounds docs per 128-doc window (the Lucene impact-sorting analog): each
+term's block_max metadata and the transform are folded onto the same
+window grid, so high-bonus docs and the remaining terms' heavy blocks —
+usually in different windows — do not add up into one loose bound, and
+a term bounds to ZERO in windows where it has no postings. θ and the
+candidate set are maintained over the transformed scores.
 
 Hit semantics: doc-values are a RANKING signal, not a matching signal —
 only docs matching ≥1 query term (OR) / all terms (AND) are hits, and
@@ -45,16 +42,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from uci_searchengine_spark import BM25_B, BM25_K1
-from uci_searchengine_spark.operators.bm25 import idf as idf_fn
 from uci_searchengine_spark.operators.bm25 import terms_for_index
-from uci_searchengine_spark.operators.codec import unpack_postings
 from uci_searchengine_spark.operators.index_build import IndexMeta
 from uci_searchengine_spark.operators.wand import (
-    _TOPK_SCHEMA,
-    _decode_for_candidates,
+    _idf_map,
     _score_bucket,
     _score_bucket_and,
+    _topk_over_segments,
     apply_per_bucket,
     load_excl,
     pruned_segments,
@@ -116,217 +110,6 @@ def _load_bucket_values(
     return vec
 
 
-# doc-range window for the per-block bound fold: term block metadata
-# (block_last_doc / block_max) is projected onto this fixed grid so the
-# θ-test can bound unseen/candidate docs per WINDOW instead of by one
-# bucket-wide scalar. 128 matches the codec's postings block size —
-# a dense term's blocks land ~1:1 on windows.
-_WINDOW = 128
-
-
-def _term_window_ub(
-    rows: list, base: int, bucket_size: int, window: int = _WINDOW
-) -> np.ndarray:
-    """(T, n_win) additive upper-bound grid: entry [i, j] bounds term
-    i's BM25 contribution to ANY doc in doc-range window j; 0 where the
-    term has no postings (the real per-block win — an absent term
-    contributes nothing there, where the scalar bound assumed every
-    term could land anywhere). Sound because postings are doc-sorted:
-    block b's docs lie in (block_last_doc[b-1], block_last_doc[b]], and
-    block_max bounds the per-doc contribution inside block b — folding
-    it onto every window that range overlaps can only over-cover."""
-    n_win = (bucket_size + window - 1) // window
-    grid = np.zeros((len(rows), n_win), dtype=np.float64)
-    for i, (ub_scalar, _w, r) in enumerate(rows):
-        bm = np.asarray(r.block_max, dtype=np.float64)
-        if not bm.size or ub_scalar <= 0:
-            continue
-        peak = bm.max()
-        if peak <= 0:
-            continue
-        # ub_scalar = w*(k1+1)*infl*peak → recover the per-block scale
-        vals = bm * (ub_scalar / peak)
-        last = np.asarray(r.block_last_doc, dtype=np.int64) - base
-        lo = np.empty_like(last)
-        lo[0] = 0
-        lo[1:] = last[:-1] + 1
-        wlo = lo // window
-        whi = last // window
-        g = grid[i]
-        single = wlo == whi
-        if single.any():
-            np.maximum.at(g, wlo[single], vals[single])
-        for b in np.flatnonzero(~single):
-            j0, j1 = int(wlo[b]), int(whi[b])
-            seg_slice = g[j0 : j1 + 1]
-            np.maximum(seg_slice, vals[b], out=seg_slice)
-    return grid
-
-
-def _window_max(vec: np.ndarray, n_win: int, window: int = _WINDOW) -> np.ndarray:
-    """Per-window max of a dense bucket-local vector (the in-task fold
-    of the doc-values plane onto the block grid: O(bucket_size), free
-    next to postings decode — and the dense vector is needed for the
-    per-hit values anyway, so a build-time sidecar would save no IO)."""
-    pad = n_win * window - vec.size
-    if pad:
-        vec = np.concatenate([vec, np.zeros(pad, dtype=vec.dtype)])
-    return vec.reshape(n_win, window).max(axis=1)
-
-
-def _score_bucket_blended(
-    seg: pd.DataFrame,
-    idf_map: dict,
-    avgdl: float,
-    bucket_size: int,
-    k: int,
-    bonus: "np.ndarray | None",
-    excl: "np.ndarray | None" = None,
-    per_block_bounds: bool = True,
-    stats: "dict | None" = None,
-) -> pd.DataFrame:
-    """OR-mode block-max scoring with a per-doc additive bonus; θ and
-    the candidate set are maintained over blended scores. Mirrors
-    wand._score_bucket (same decode, same exclusion point, same
-    tie-aware top-k) with the bonus lane added.
-
-    Bounds (Lucene impact-sorting analog, per-block fold): with
-    ``per_block_bounds`` the θ-test bounds docs per doc-range WINDOW —
-    unseen docs by max_j(remaining_win_ub[j] + bonus_win_max[j]),
-    candidates by blended[d] + remaining_win_ub[win(d)] — where
-    remaining_win_ub sums each remaining term's folded block_max over
-    that window (0 where the term has no postings). Strictly tighter
-    than the scalar remaining_ub + max(bonus) bound (kept as the
-    ``per_block_bounds=False`` reference path, and the degenerate
-    n_win==1 case): the high-bonus docs and the remaining terms'
-    heavy blocks are usually NOT in the same window. ``stats`` (dict)
-    collects decoded-posting counts and the candidate-trigger term for
-    skip-rate measurement."""
-    _empty = pd.DataFrame(
-        {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")}
-    )
-    if not len(seg):
-        return _empty
-    bucket = int(seg["bucket"].iloc[0])
-    base = bucket * bucket_size
-    max_bonus = float(bonus.max()) if bonus is not None and bonus.size else 0.0
-
-    has_gen = "gen_avgdl" in seg.columns
-    rows = []
-    for r in seg.itertuples(index=False):
-        w = idf_map[r.term]
-        bm = np.asarray(r.block_max, dtype=np.float64)
-        infl = max(1.0, avgdl / float(r.gen_avgdl)) if has_gen else 1.0
-        rows.append((w * (BM25_K1 + 1.0) * bm.max() * infl, w, r))
-    rows.sort(key=lambda x: -x[0])
-
-    acc = np.zeros(bucket_size, dtype=np.float64)
-    theta = -np.inf
-    cand: "np.ndarray | None" = None
-    # exact suffix sums (empty suffix == 0.0; see wand._score_bucket —
-    # sequential subtraction's -1e-15 residue dropped exact-θ ties)
-    _suf = [0.0]
-    for _ub, _w2, _r2 in reversed(rows):
-        _suf.append(_suf[-1] + _ub)
-    _suf.reverse()
-
-    rem_win = None  # (T+1, n_win) suffix sums of the per-term UB grid
-    bonus_win = None
-    if per_block_bounds:
-        grid = _term_window_ub(rows, base, bucket_size)
-        n_win = grid.shape[1]
-        rem_win = np.zeros((len(rows) + 1, n_win), dtype=np.float64)
-        rem_win[:-1] = np.cumsum(grid[::-1], axis=0)[::-1]
-        bonus_win = (
-            _window_max(bonus, n_win)
-            if bonus is not None and bonus.size
-            else np.zeros(n_win, dtype=np.float64)
-        )
-
-    def blended(loc_ids: np.ndarray) -> np.ndarray:
-        s = acc[loc_ids]
-        return s if bonus is None else s + bonus[loc_ids]
-
-    for ti, (ub, w, r) in enumerate(rows):
-        remaining_ub = _suf[ti + 1]
-        blob = bytes(r.postings)
-        if cand is None:
-            d, tf, dl = unpack_postings(blob)
-        else:
-            d, tf, dl = _decode_for_candidates(
-                blob,
-                np.asarray(r.block_offsets, dtype=np.int64),
-                np.asarray(r.block_last_doc, dtype=np.int64),
-                cand,
-                base,
-            )
-            if stats is not None:
-                stats["decoded"] = stats.get("decoded", 0) + int(d.size)
-            if d.size == 0:
-                continue
-        if cand is None and stats is not None:
-            stats["decoded"] = stats.get("decoded", 0) + int(d.size)
-        if excl is not None and excl.size and d.size:
-            p = np.clip(np.searchsorted(excl, d), 0, excl.size - 1)
-            m = excl[p] != d
-            d, tf, dl = d[m], tf[m], dl[m]
-            if d.size == 0:
-                continue
-        tf_f = tf.astype(np.float64)
-        contrib = w * (
-            tf_f
-            * (BM25_K1 + 1.0)
-            / (tf_f + BM25_K1 * (1.0 - BM25_B + BM25_B * dl.astype(np.float64) / avgdl))
-        )
-        np.add.at(acc, d - base, contrib)
-
-        if cand is None:
-            nz = np.flatnonzero(acc > 0)
-            if nz.size >= k:
-                bl = blended(nz)
-                theta = np.partition(bl, nz.size - k)[nz.size - k]
-            if rem_win is not None:
-                rw = rem_win[ti + 1]
-                # unseen docs in window j reach at most rw[j] + bonus max
-                if (rw + bonus_win).max() < theta:
-                    bl = blended(nz)
-                    cand = nz[bl + rw[nz // _WINDOW] >= theta] + base
-                    if stats is not None:
-                        stats.setdefault("trigger_term", ti)
-                        stats["cand0"] = int(cand.size)
-            else:
-                # unseen docs can reach at most remaining_ub + max_bonus
-                if remaining_ub + max_bonus < theta:
-                    bl = blended(nz)
-                    cand = nz[bl + remaining_ub >= theta] + base
-                    if stats is not None:
-                        stats.setdefault("trigger_term", ti)
-                        stats["cand0"] = int(cand.size)
-        else:
-            nz = cand - base
-            if nz.size >= k:
-                bl = blended(nz)
-                theta = np.partition(bl, nz.size - k)[nz.size - k]
-                if rem_win is not None:
-                    cand = cand[bl + rem_win[ti + 1][nz // _WINDOW] >= theta]
-                else:
-                    cand = cand[bl + remaining_ub >= theta]
-
-    nz = np.flatnonzero(acc > 0) if cand is None else np.unique(cand - base)
-    nz = nz[acc[nz] > 0]
-    if nz.size == 0:
-        return _empty
-    scores = blended(nz)
-    if nz.size > k:
-        kth = np.partition(scores, nz.size - k)[nz.size - k]
-        keep = scores >= kth
-        nz, scores = nz[keep], scores[keep]
-    order = np.lexsort((nz, -scores))[:k]
-    return pd.DataFrame(
-        {"doc_id": (nz[order] + base).astype("int64"), "score": scores[order]}
-    )
-
-
 def blended_topk(
     spark: SparkSession,
     index_dir: str,
@@ -342,35 +125,16 @@ def blended_topk(
     terms = terms_for_index(meta, query)
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
-    seg = pruned_segments(spark, index_dir, meta, terms)
-    n_docs, avgdl, bucket_size = meta.n_docs, meta.avgdl, meta.bucket_size
-    idx_dir, name, wgt = index_dir, dv_name, float(weight)
+    bucket_size, wgt = meta.bucket_size, float(weight)
 
-    def make_fn(excl_local):
-        def fn(key, seg_pdf):
-            if not len(seg_pdf):
-                return pd.DataFrame(
-                    {
-                        "doc_id": pd.Series([], dtype="int64"),
-                        "score": pd.Series([], dtype="float64"),
-                    }
-                )
-            bucket = int(seg_pdf["bucket"].iloc[0])
-            vec = _load_bucket_values(idx_dir, name, bucket, bucket_size)
-            bonus = None if vec is None or wgt == 0.0 else wgt * vec
-            idf_map = {
-                t: idf_fn(n_docs, int(d))
-                for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
-            }
-            return _score_bucket_blended(
-                seg_pdf, idf_map, avgdl, bucket_size, k, bonus, excl=excl_local
-            )
+    def transform(bucket):
+        vec = _load_bucket_values(index_dir, dv_name, bucket, bucket_size)
+        return None, (None if vec is None or wgt == 0.0 else wgt * vec)
 
-        return fn
-
-    excl = load_excl(index_dir, spark, meta.bucket_size)
-    per_bucket = apply_per_bucket(seg, excl, make_fn, _TOPK_SCHEMA)
-    return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _topk_over_segments(
+        pruned_segments(spark, index_dir, meta, terms), meta, k,
+        excl=load_excl(index_dir, spark, bucket_size), transform=transform,
+    )
 
 
 def _decay_multiplier(
@@ -406,145 +170,6 @@ def _decay_multiplier(
     raise ValueError(f"kind must be gauss|exp|linear, got {kind!r}")
 
 
-def _score_bucket_decayed(
-    seg: pd.DataFrame,
-    idf_map: dict,
-    avgdl: float,
-    bucket_size: int,
-    k: int,
-    mult: np.ndarray,
-    excl: "np.ndarray | None" = None,
-    per_block_bounds: bool = True,
-    stats: "dict | None" = None,
-) -> pd.DataFrame:
-    """OR-mode block-max scoring with a per-doc MULTIPLICATIVE factor in
-    [0, 1] (function_score decay): final = bm25 · mult. Admissibility:
-    an unseen doc's final score is ≤ remaining_ub · max(mult) — with
-    ``per_block_bounds``, per doc-range window j it is
-    ≤ remaining_win_ub[j] · mult_win_max[j] (the per-block fold; heavy
-    remaining blocks and undecayed docs are rarely in the same window);
-    a seen candidate's is ≤ (acc + remaining_win_ub[win(d)]) · mult[d].
-    θ and the candidate set are maintained over DECAYED scores.
-    Matching stays score>0 on the raw BM25 accumulator (decay is a
-    ranking signal, not a matching signal — a fully-decayed hit is
-    still a hit at rank bottom)."""
-    _empty = pd.DataFrame(
-        {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")}
-    )
-    if not len(seg):
-        return _empty
-    bucket = int(seg["bucket"].iloc[0])
-    base = bucket * bucket_size
-    max_mult = float(mult.max()) if mult.size else 0.0
-
-    has_gen = "gen_avgdl" in seg.columns
-    rows = []
-    for r in seg.itertuples(index=False):
-        w = idf_map[r.term]
-        bm = np.asarray(r.block_max, dtype=np.float64)
-        infl = max(1.0, avgdl / float(r.gen_avgdl)) if has_gen else 1.0
-        rows.append((w * (BM25_K1 + 1.0) * bm.max() * infl, w, r))
-    rows.sort(key=lambda x: -x[0])
-
-    acc = np.zeros(bucket_size, dtype=np.float64)
-    theta = -np.inf
-    cand: "np.ndarray | None" = None
-    # exact suffix sums (empty suffix == 0.0; see wand._score_bucket)
-    _suf = [0.0]
-    for _ub, _w2, _r2 in reversed(rows):
-        _suf.append(_suf[-1] + _ub)
-    _suf.reverse()
-
-    rem_win = None
-    mult_win = None
-    if per_block_bounds:
-        grid = _term_window_ub(rows, base, bucket_size)
-        n_win = grid.shape[1]
-        rem_win = np.zeros((len(rows) + 1, n_win), dtype=np.float64)
-        rem_win[:-1] = np.cumsum(grid[::-1], axis=0)[::-1]
-        mult_win = _window_max(mult, n_win)
-
-    for ti, (ub, w, r) in enumerate(rows):
-        remaining_ub = _suf[ti + 1]
-        blob = bytes(r.postings)
-        if cand is None:
-            d, tf, dl = unpack_postings(blob)
-        else:
-            d, tf, dl = _decode_for_candidates(
-                blob,
-                np.asarray(r.block_offsets, dtype=np.int64),
-                np.asarray(r.block_last_doc, dtype=np.int64),
-                cand,
-                base,
-            )
-            if stats is not None:
-                stats["decoded"] = stats.get("decoded", 0) + int(d.size)
-            if d.size == 0:
-                continue
-        if cand is None and stats is not None:
-            stats["decoded"] = stats.get("decoded", 0) + int(d.size)
-        if excl is not None and excl.size and d.size:
-            p = np.clip(np.searchsorted(excl, d), 0, excl.size - 1)
-            m = excl[p] != d
-            d, tf, dl = d[m], tf[m], dl[m]
-            if d.size == 0:
-                continue
-        tf_f = tf.astype(np.float64)
-        contrib = w * (
-            tf_f
-            * (BM25_K1 + 1.0)
-            / (tf_f + BM25_K1 * (1.0 - BM25_B + BM25_B * dl.astype(np.float64) / avgdl))
-        )
-        np.add.at(acc, d - base, contrib)
-
-        if cand is None:
-            nz = np.flatnonzero(acc > 0)
-            if nz.size >= k:
-                dc = acc[nz] * mult[nz]
-                theta = np.partition(dc, nz.size - k)[nz.size - k]
-            if rem_win is not None:
-                rw = rem_win[ti + 1]
-                if (rw * mult_win).max() < theta:
-                    cand = (
-                        nz[(acc[nz] + rw[nz // _WINDOW]) * mult[nz] >= theta]
-                        + base
-                    )
-                    if stats is not None:
-                        stats.setdefault("trigger_term", ti)
-                        stats["cand0"] = int(cand.size)
-            elif remaining_ub * max_mult < theta:
-                cand = nz[(acc[nz] + remaining_ub) * mult[nz] >= theta] + base
-                if stats is not None:
-                    stats.setdefault("trigger_term", ti)
-                    stats["cand0"] = int(cand.size)
-        else:
-            nz = cand - base
-            if nz.size >= k:
-                dc = acc[nz] * mult[nz]
-                theta = np.partition(dc, nz.size - k)[nz.size - k]
-                if rem_win is not None:
-                    cand = cand[
-                        (acc[nz] + rem_win[ti + 1][nz // _WINDOW]) * mult[nz]
-                        >= theta
-                    ]
-                else:
-                    cand = cand[(acc[nz] + remaining_ub) * mult[nz] >= theta]
-
-    nz = np.flatnonzero(acc > 0) if cand is None else np.unique(cand - base)
-    nz = nz[acc[nz] > 0]
-    if nz.size == 0:
-        return _empty
-    scores = acc[nz] * mult[nz]
-    if nz.size > k:
-        kth = np.partition(scores, nz.size - k)[nz.size - k]
-        keep = scores >= kth
-        nz, scores = nz[keep], scores[keep]
-    order = np.lexsort((nz, -scores))[:k]
-    return pd.DataFrame(
-        {"doc_id": (nz[order] + base).astype("int64"), "score": scores[order]}
-    )
-
-
 def decay_topk(
     spark: SparkSession,
     index_dir: str,
@@ -570,38 +195,19 @@ def decay_topk(
     terms = terms_for_index(meta, query)
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
-    seg = pruned_segments(spark, index_dir, meta, terms)
-    n_docs, avgdl, bucket_size = meta.n_docs, meta.avgdl, meta.bucket_size
-    idx_dir, name = index_dir, dv_name
+    bucket_size = meta.bucket_size
     params = (kind, float(origin), float(scale), float(offset), float(decay))
 
-    def make_fn(excl_local):
-        def fn(key, seg_pdf):
-            if not len(seg_pdf):
-                return pd.DataFrame(
-                    {
-                        "doc_id": pd.Series([], dtype="int64"),
-                        "score": pd.Series([], dtype="float64"),
-                    }
-                )
-            bucket = int(seg_pdf["bucket"].iloc[0])
-            vec = _load_bucket_values(idx_dir, name, bucket, bucket_size)
-            if vec is None:
-                vec = np.zeros(bucket_size, dtype=np.float64)
-            mult = _decay_multiplier(vec, *params)
-            idf_map = {
-                t: idf_fn(n_docs, int(d))
-                for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
-            }
-            return _score_bucket_decayed(
-                seg_pdf, idf_map, avgdl, bucket_size, k, mult, excl=excl_local
-            )
+    def transform(bucket):
+        vec = _load_bucket_values(index_dir, dv_name, bucket, bucket_size)
+        if vec is None:
+            vec = np.zeros(bucket_size, dtype=np.float64)
+        return _decay_multiplier(vec, *params), None
 
-        return fn
-
-    excl = load_excl(index_dir, spark, meta.bucket_size)
-    per_bucket = apply_per_bucket(seg, excl, make_fn, _TOPK_SCHEMA)
-    return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _topk_over_segments(
+        pruned_segments(spark, index_dir, meta, terms), meta, k,
+        excl=load_excl(index_dir, spark, bucket_size), transform=transform,
+    )
 
 
 _SORT_SCHEMA = "doc_id long, value double, score double"
@@ -651,10 +257,7 @@ def sort_by_field_topk(
             )
             if not len(seg_pdf):
                 return empty
-            idf_map = {
-                t: idf_fn(n_docs, int(d))
-                for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
-            }
+            idf_map = _idf_map(n_docs, seg_pdf)
             if mode == "and":
                 scored = _score_bucket_and(
                     seg_pdf, idf_map, avgdl, bucket_size, n_terms, None,

@@ -34,7 +34,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from uci_searchengine_spark.operators.bm25 import idf as idf_fn
 from uci_searchengine_spark.operators.bm25 import terms_for_index
 from uci_searchengine_spark.operators.index_build import IndexMeta
 from uci_searchengine_spark.operators.wand import (
@@ -165,10 +164,7 @@ def filtered_topk(
                 }
             )
         incl = np.unique(incl_pdf["doc_id"].to_numpy().astype(np.int64))
-        idf_map = {
-            t: idf_fn(n_docs, int(d))
-            for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
-        }
+        idf_map = _idf_map(n_docs, seg_pdf)
         if mode == "and":
             return _score_bucket_and(
                 seg_pdf, idf_map, avgdl, bucket_size, n_terms, k,
@@ -198,8 +194,8 @@ def filtered_topk_count(
     boosts: "dict[str, float] | None" = None,
 ) -> "tuple[list[tuple[int, float]], int]":
     """Envelope primitive: filtered global top-k AND the exact
-    post-filter match count from ONE Spark job (mirror of
-    wand.topk_and_count, with the inclusion cogroup). The count is the
+    post-filter match count from ONE Spark action (the kernel's
+    ``count_matches`` mode, with the inclusion cogroup). The count is the
     OR-union (or intersection) size AMONG allowed docs — exactly what a
     ``site:`` results page reports as total_results. ``boosts`` maps
     analyzed terms to query-time weight multipliers (wand._idf_map)."""

@@ -41,13 +41,13 @@ from uci_searchengine_spark.functions.phrase import (
     count_phrase_py,
 )
 from uci_searchengine_spark.operators.bm25 import analyze_seq
-from uci_searchengine_spark.operators.bm25 import idf as idf_fn
 from uci_searchengine_spark.operators.codec import (
     unpack_positions,
     unpack_postings,
 )
 from uci_searchengine_spark.operators.index_build import IndexMeta
 from uci_searchengine_spark.operators.wand import (
+    _idf_map,
     _score_bucket_and,
     apply_per_bucket,
     load_excl,
@@ -294,10 +294,7 @@ def make_phrase_fn(
             )
             if not len(seg_pdf):
                 return out_empty
-            idf_map = {
-                t: idf_fn(n_docs, int(d))
-                for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
-            }
+            idf_map = _idf_map(n_docs, seg_pdf)
             # k=None: the FULL intersection — truncating before adjacency
             # verification would be wrong (a verified doc outside the raw
             # AND top-k could belong in the phrase top-k)

@@ -909,10 +909,12 @@ class Searcher:
         Matching terms follow the index's analysis chain (stemmed iff the
         index is); snippets highlight the raw query forms (display rule).
         The WHOLE envelope — hits, total_results, AND the doc-store
-        url/title/snippet — comes from ONE action: either one Spark job
-        (wand.topk_count_docs — each scoring task reads its own bucket's
-        co-located docs for its local winners, no doc join, no second
-        job) or, when the pruned scan fits one task
+        url/title/snippet — comes from ONE action: either one Spark
+        collect (wand.topk_count_docs — each scoring task reads its own
+        bucket's co-located docs for its local winners, no doc join, no
+        second action; adaptive execution still runs each of its
+        shuffles as its own job, ~3 jobs a query on one generation) or,
+        when the pruned scan fits one task
         (``local_bytes_limit``), the identical closure run in-process
         (local_search.local_topk_count_docs) with no job at all.
         ``plan``: "auto" (bytes-based choice), "local", "spark".

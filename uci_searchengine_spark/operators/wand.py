@@ -19,17 +19,19 @@ Query lifecycle (rebuild of backend/app/api/search.py:67-126, SURVEY.md §3.1):
 5. global top-k = orderBy(score desc, doc_id asc).limit(k) over ≤
    n_buckets*k candidate rows (TakeOrderedAndProject on tiny data).
 
-Pruning logic (per bucket): terms sorted by whole-list upper bound
-``ub(t) = idf(t)*(k1+1)*max(block_max)`` descending. Terms are accumulated
-into a dense score array (np.add.at — no per-row Python). Once the running
-k-th best partial score θ exceeds the summed upper bounds of all remaining
-terms, no unseen doc can enter the top-k: remaining terms only *update*
-existing candidates, and their blocks are decoded only if the block's
-doc-id range (block_last_doc fences) contains a candidate and the block's
-ub can still matter (θ-test against block_max). This is the
+Pruning logic (per bucket, ``_score_bucket``): terms are accumulated in
+one bucket-independent order, weight ``w = idf·boost`` descending, into a
+dense score array (np.add.at — no per-row Python); each term's list is
+bounded by ``ub(t) = w*(k1+1)*max(block_max)``. Once the running k-th best
+score θ exceeds the summed upper bounds of all remaining terms, no unseen
+doc can enter the top-k: remaining terms only *update* existing
+candidates, and their blocks are decoded only if the block's doc-id range
+(block_last_doc fences) contains a candidate. This is the
 MaxScore/block-max family — same skipping data (per-block max score,
 last-doc fences, byte offsets) as BMW, organized term-at-a-time so every
-inner step stays a numpy vector op.
+inner step stays a numpy vector op. The same kernel serves
+minimum_should_match and per-doc score transforms (doc-value blending,
+decay); the conjunctive mode is the rarest-first ``_score_bucket_and``.
 
 Verified rank-identical against the exhaustive naive scorer and the
 single-node oracle on the full reference query set (tests/test_query.py).
@@ -37,7 +39,6 @@ single-node oracle on the full reference query set (tests/test_query.py).
 
 from __future__ import annotations
 
-import math
 import os
 
 import numpy as np
@@ -127,50 +128,175 @@ def _shards_for_terms(terms: list[str], num_shards: int) -> dict[str, int]:
     return {t: term_shard(t, num_shards) for t in terms}
 
 
-def _decode_for_candidates(
-    blob: bytes,
-    offs: np.ndarray,
-    lasts: np.ndarray,
-    cand: np.ndarray,
-    base: int,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode only the blocks whose doc-id range (block_last_doc fences)
-    contains a candidate, then keep candidate docs only. The skipping
-    primitive shared by the OR path's θ-restricted phase and the AND
-    path's rarest-first intersection."""
+# doc-range window of the per-window bound: term block metadata
+# (block_last_doc / block_max) is folded onto this fixed grid so the
+# θ-test bounds unseen/candidate docs per WINDOW instead of by one
+# bucket-wide scalar. 128 matches the codec's postings block size — a
+# dense term's blocks land ~1:1 on windows.
+_WINDOW = 128
+
+
+def _select(
+    nz: np.ndarray, scores: np.ndarray, base: int, k: "int | None"
+) -> pd.DataFrame:
+    """(doc_id, score) frame of the top-``k`` bucket-local ids ``nz``
+    (all when k is None) in (score desc, doc_id asc) order. Tie-aware:
+    every doc at the k-th score boundary survives the partition, so the
+    lexsort — not argpartition's arbitrary pick — decides among exact
+    ties (rank-identity contract with score_naive/the oracle)."""
+    if k is not None and nz.size > k:
+        kth = np.partition(scores, nz.size - k)[nz.size - k]
+        keep = scores >= kth
+        nz, scores = nz[keep], scores[keep]
+    order = np.lexsort((nz, -scores))[:k]
+    return pd.DataFrame(
+        {"doc_id": (nz[order] + base).astype("int64"), "score": scores[order]}
+    )
+
+
+def _empty_topk() -> pd.DataFrame:
+    return _select(np.empty(0, dtype=np.int64), np.empty(0), 0, None)
+
+
+def _term_rows(seg: pd.DataFrame, idf_map: dict, avgdl: float) -> list:
+    """One bucket's segment rows as ``(ub, w, row)`` in the accumulation
+    order, (w desc, term asc) with w = idf·boost. The order is the same
+    in every bucket, so docs with mathematically equal scores in
+    different buckets get bit-equal float sums (a per-bucket order made
+    such ties differ in the last bit and rank against doc-id order).
+
+    ``ub = w·(k1+1)·max(block_max)`` bounds the row's contribution to
+    any doc. Multi-generation indexes carry gen_avgdl: each generation's
+    block_max was computed with ITS build avgdl, while scoring uses the
+    blended root avgdl — inflate the bound by max(1, avgdl/gen)
+    (f = tf/(tf + c + m*dl) satisfies f_new <= f_old * avgdl_new/
+    avgdl_old when avgdl grows) so pruning stays admissible."""
+    has_gen = "gen_avgdl" in seg.columns
+    rows = []
+    for r in seg.itertuples(index=False):
+        w = idf_map[r.term]
+        bm = np.asarray(r.block_max, dtype=np.float64)
+        infl = max(1.0, avgdl / float(r.gen_avgdl)) if has_gen else 1.0
+        rows.append((w * (BM25_K1 + 1.0) * bm.max() * infl, w, r))
+    rows.sort(key=lambda x: (-x[1], x[2].term))
+    return rows
+
+
+def _term_window_ub(
+    rows: list, base: int, bucket_size: int, window: int = _WINDOW
+) -> np.ndarray:
+    """(T, n_win) additive upper-bound grid: entry [i, j] bounds row i's
+    BM25 contribution to ANY doc in doc-range window j; 0 where the row
+    has no postings (an absent term contributes nothing there, where a
+    scalar bound assumes every term can land anywhere). Sound because
+    postings are doc-sorted: block b's docs lie in (block_last_doc[b-1],
+    block_last_doc[b]], and block_max bounds the per-doc contribution
+    inside block b — folding it onto every window that range overlaps
+    can only over-cover. One window (``window >= bucket_size``) is the
+    rows' scalar bounds."""
+    if window >= bucket_size:
+        return np.array([ub for ub, _w, _r in rows], dtype=np.float64)[:, None]
+    n_win = (bucket_size + window - 1) // window
+    grid = np.zeros((len(rows), n_win), dtype=np.float64)
+    for i, (ub_scalar, _w, r) in enumerate(rows):
+        bm = np.asarray(r.block_max, dtype=np.float64)
+        if not bm.size or ub_scalar <= 0:
+            continue
+        peak = bm.max()
+        if peak <= 0:
+            continue
+        # ub_scalar = w*(k1+1)*infl*peak → recover the per-block scale
+        vals = bm * (ub_scalar / peak)
+        last = np.asarray(r.block_last_doc, dtype=np.int64) - base
+        lo = np.empty_like(last)
+        lo[0] = 0
+        lo[1:] = last[:-1] + 1
+        wlo = lo // window
+        whi = last // window
+        g = grid[i]
+        single = wlo == whi
+        if single.any():
+            np.maximum.at(g, wlo[single], vals[single])
+        for b in np.flatnonzero(~single):
+            seg_slice = g[int(wlo[b]) : int(whi[b]) + 1]
+            np.maximum(seg_slice, vals[b], out=seg_slice)
+    return grid
+
+
+def _window_max(vec: np.ndarray, n_win: int, window: int = _WINDOW) -> np.ndarray:
+    """Per-window max of a dense bucket-local vector (the in-task fold
+    of a per-doc transform onto the bound grid: O(bucket_size), free
+    next to postings decode)."""
+    pad = n_win * window - vec.size
+    if pad:
+        vec = np.concatenate([vec, np.zeros(pad, dtype=vec.dtype)])
+    return vec.reshape(n_win, window).max(axis=1)
+
+
+def _decode(r, cand: "np.ndarray | None", base: int):
+    """One segment row's (doc_id, tf, doc_len) arrays: in full, or —
+    ``cand`` = sorted global candidate ids — only the blocks whose doc-id
+    range (block_last_doc fences) holds a candidate, restricted to the
+    candidates. The skipping primitive of the OR kernel's θ-restricted
+    phase and the AND walk's rarest-first intersection."""
+    blob = bytes(r.postings)
+    if cand is None:
+        return unpack_postings(blob)
+    from uci_searchengine_spark import BLOCK_SIZE
+
+    offs = np.asarray(r.block_offsets, dtype=np.int64)
+    lasts = np.asarray(r.block_last_doc, dtype=np.int64)
     firsts = np.concatenate(([base - 1], lasts[:-1]))
     lo = np.searchsorted(cand, firsts, side="right")
     hi = np.searchsorted(cand, lasts, side="right")
     keep = hi > lo
-    empty = np.array([], dtype=np.int64)
     if not keep.any():
+        empty = np.array([], dtype=np.int64)
         return empty, empty, empty
-    parts_d, parts_tf, parts_dl = [], [], []
-    nblocks = len(offs)
-    from uci_searchengine_spark import BLOCK_SIZE
-
+    parts = []
     for bi in np.flatnonzero(keep):
-        cnt = (
-            BLOCK_SIZE
-            if bi < nblocks - 1
-            else None  # last block: decode to end
-        )
+        # the last block decodes to the end
+        cnt = BLOCK_SIZE if bi < len(offs) - 1 else None
         db, tb, lb = unpack_postings(blob, offset=int(offs[bi]), count=cnt)
         # gaps are block-local only for the first block; later
         # blocks chain off the previous block's last doc — rebase:
         if bi > 0:
             db = db + (lasts[bi - 1] + 1)
-        parts_d.append(db)
-        parts_tf.append(tb)
-        parts_dl.append(lb)
-    d = np.concatenate(parts_d)
-    tf = np.concatenate(parts_tf)
-    dl = np.concatenate(parts_dl)
-    # keep only candidate docs
-    pos = np.searchsorted(cand, d)
-    pos = np.clip(pos, 0, cand.size - 1)
-    mask = cand[pos] == d
-    return d[mask], tf[mask], dl[mask]
+        parts.append((db, tb, lb))
+    d, tf, dl = (np.concatenate(x) for x in zip(*parts))
+    m = _member(cand, d)
+    return d[m], tf[m], dl[m]
+
+
+def _member(ids: np.ndarray, d: np.ndarray) -> np.ndarray:
+    """Boolean mask: which of ``d`` are in the sorted array ``ids``."""
+    if not ids.size:
+        return np.zeros(d.size, dtype=bool)
+    return ids[np.minimum(np.searchsorted(ids, d), ids.size - 1)] == d
+
+
+def _mask(d, tf, dl, excl: "np.ndarray | None", incl: "np.ndarray | None"):
+    """Drop the sorted global ids ``excl`` (tombstones, boolean NOT) and
+    keep only ``incl`` (filter context) from decoded postings."""
+    keep = None
+    if excl is not None and excl.size:
+        keep = ~_member(excl, d)
+    if incl is not None:
+        m = _member(incl, d)
+        keep = m if keep is None else keep & m
+    if keep is None:
+        return d, tf, dl
+    return d[keep], tf[keep], dl[keep]
+
+
+def _bm25(w: float, tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
+    """Per-posting BM25 contribution of a term with weight ``w``."""
+    tf_f = tf.astype(np.float64)
+    return w * (
+        tf_f
+        * (BM25_K1 + 1.0)
+        / (tf_f + BM25_K1 * (1.0 - BM25_B + BM25_B * dl.astype(np.float64) / avgdl))
+    )
 
 
 def _score_bucket(
@@ -180,126 +306,98 @@ def _score_bucket(
     bucket_size: int,
     k: int,
     excl: "np.ndarray | None" = None,
-    count_matches: bool = False,
     incl: "np.ndarray | None" = None,
+    count_matches: bool = False,
+    min_match: int = 1,
+    mul: "np.ndarray | None" = None,
+    add: "np.ndarray | None" = None,
 ) -> pd.DataFrame:
-    """``excl``: sorted global doc ids to EXCLUDE (boolean NOT). Applied
-    at accumulation time — before θ ever tightens — so block-max pruning
-    stays admissible for the post-exclusion top-k.
+    """θ-pruned top-k of one bucket for the OR family: plain OR,
+    minimum_should_match, doc-value blended and decayed scoring.
 
-    ``incl``: sorted global doc ids to KEEP (filter context — only docs
-    in the set are eligible hits). Applied at the same accumulation
-    point as ``excl`` and for the same reason: masking before θ ever
-    tightens keeps the pruning admissible for the post-filter top-k.
+    Rows accumulate term-at-a-time (``_term_rows`` order) into a dense
+    bucket array. A doc matches when it holds ≥ ``min_match`` distinct
+    query terms (rows of one term cover disjoint doc ranges, so counting
+    rows is exact); its score is ``acc·mul + add`` — acc the OR-sum
+    BM25, ``mul``/``add`` optional dense bucket-local per-doc arrays
+    (decay multiplier ≥ 0, weighted doc-value bonus). The transform is
+    monotone in acc, so θ (the k-th best final score) and the candidate
+    set live on final scores: once no unseen doc can reach θ — in
+    window j it scores at most rem[j]·max(mul over j) + max(add over j),
+    rem summing the remaining rows' bounds over j — remaining rows
+    decode only the blocks holding a candidate, and a candidate d stays
+    only while (acc[d] + rem[win(d)])·mul[d] + add[d] ≥ θ. The window is
+    the whole bucket without a transform (the scalar suffix-sum bound)
+    and the 128-doc grid with one: high-bonus docs and the remaining
+    terms' heavy blocks are rarely in the same window.
 
-    ``count_matches``: also return this bucket's exact matched-doc count
-    as ``(pdf, n)``. Counting the OR-union's cardinality requires decoding
-    every term's doc ids, so candidate restriction (which skips blocks)
-    is disabled — the envelope path trades pruning for folding the
-    total_results count into the same pass (one job instead of two)."""
-    _empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")})
-    if not len(seg):
-        return (_empty, 0) if count_matches else _empty
-    bucket = int(seg["bucket"].iloc[0])
-    base = bucket * bucket_size
+    ``excl`` / ``incl``: sorted global doc ids to drop (boolean NOT,
+    tombstones) / to keep (filter context). Masked at accumulation time
+    — before θ ever tightens — so pruning stays admissible for the
+    post-mask top-k.
 
-    # per-term data, sorted by whole-list upper bound descending.
-    # Multi-generation indexes carry gen_avgdl: each generation's
-    # block_max was computed with ITS build avgdl, while scoring uses
-    # the blended root avgdl — inflate the bound by max(1, avgdl/gen)
-    # (f = tf/(tf + c + m*dl) satisfies f_new <= f_old * avgdl_new/
-    # avgdl_old when avgdl grows) so pruning stays admissible.
-    has_gen = "gen_avgdl" in seg.columns
-    rows = []
-    for r in seg.itertuples(index=False):
-        w = idf_map[r.term]
-        bm = np.asarray(r.block_max, dtype=np.float64)
-        infl = max(1.0, avgdl / float(r.gen_avgdl)) if has_gen else 1.0
-        rows.append((w * (BM25_K1 + 1.0) * bm.max() * infl, w, r))
-    rows.sort(key=lambda x: -x[0])
+    ``count_matches``: also return the bucket's exact match count as
+    ``(pdf, n)`` — it folds total_results into the scoring action.
+    Counting needs every list decoded in full, and so does
+    ``min_match > 1`` (no admissible block-max bound exists on per-doc
+    ELIGIBILITY: a θ over all accumulated docs could out-tighten the
+    true k-th eligible score), so both turn candidate restriction off."""
+    if not len(seg) or seg["term"].nunique() < min_match:
+        return (_empty_topk(), 0) if count_matches else _empty_topk()
+    base = int(seg["bucket"].iloc[0]) * bucket_size
+    rows = _term_rows(seg, idf_map, avgdl)
+    window = bucket_size if mul is None and add is None else _WINDOW
+    grid = _term_window_ub(rows, base, bucket_size, window)
+    # exact suffix sums: rem[i] bounds rows i.. per window, and the empty
+    # suffix rem[-1] is exactly 0.0. Sequential `remaining -= ub` left a
+    # ~-1e-15 residue at the final row, which bounded a doc whose score
+    # ties θ EXACTLY (the k-th doc itself) one ulp below θ and dropped it
+    # from the top-k.
+    rem = np.zeros((len(rows) + 1, grid.shape[1]), dtype=np.float64)
+    rem[:-1] = np.cumsum(grid[::-1], axis=0)[::-1]
+    unseen = rem
+    if mul is not None:
+        unseen = unseen * _window_max(mul, grid.shape[1], window)
+    if add is not None:
+        unseen = unseen + _window_max(add, grid.shape[1], window)
+    unseen_max = unseen.max(axis=1)
 
     acc = np.zeros(bucket_size, dtype=np.float64)
-    theta = -np.inf
-    cand: np.ndarray | None = None  # sorted candidate local ids, None = all
-    # exact suffix sums of the per-term bounds (suffix[i] = Σ_{t>=i} ub):
-    # the empty suffix is exactly 0.0. Sequential `remaining_ub -= ub`
-    # left a ~-1e-15 residue at the final term, which bounded a doc
-    # whose score ties θ EXACTLY (the k-th doc itself) one ulp below θ
-    # and dropped it from the top-k (caught by the impact-fold fuzz).
-    _suf = [0.0]
-    for _ub, _w2, _r2 in reversed(rows):
-        _suf.append(_suf[-1] + _ub)
-    _suf.reverse()
 
-    for _ti, (ub, w, r) in enumerate(rows):
-        remaining_ub = _suf[_ti + 1]
-        blob = bytes(r.postings)
-        offs = np.asarray(r.block_offsets, dtype=np.int64)
-        lasts = np.asarray(r.block_last_doc, dtype=np.int64)
-        bmax = np.asarray(r.block_max, dtype=np.float64)
-        if cand is None:
-            d, tf, dl = unpack_postings(blob)
-        else:
-            d, tf, dl = _decode_for_candidates(blob, offs, lasts, cand, base)
-            if d.size == 0:
-                continue
-        if excl is not None and excl.size and d.size:
-            p = np.clip(np.searchsorted(excl, d), 0, excl.size - 1)
-            m = excl[p] != d
-            d, tf, dl = d[m], tf[m], dl[m]
-            if d.size == 0:
-                continue
-        if incl is not None and d.size:
-            if incl.size == 0:
-                continue
-            p = np.clip(np.searchsorted(incl, d), 0, incl.size - 1)
-            m = incl[p] == d
-            d, tf, dl = d[m], tf[m], dl[m]
-            if d.size == 0:
-                continue
-        local = d - base
-        tf_f = tf.astype(np.float64)
-        contrib = w * (
-            tf_f
-            * (BM25_K1 + 1.0)
-            / (tf_f + BM25_K1 * (1.0 - BM25_B + BM25_B * dl.astype(np.float64) / avgdl))
-        )
-        np.add.at(acc, local, contrib)
+    def final(loc: np.ndarray, s: np.ndarray) -> np.ndarray:
+        if mul is not None:
+            s = s * mul[loc]
+        if add is not None:
+            s = s + add[loc]
+        return s
 
-        if count_matches:
-            continue  # exact union count needs every list decoded in full
-        if cand is None:
-            nz = np.flatnonzero(acc > 0)
-            if nz.size >= k:
-                theta = np.partition(acc[nz], nz.size - k)[nz.size - k]
-            if remaining_ub < theta:
-                # unseen docs can never reach θ → restrict to candidates
-                keep_mask = acc[nz] + remaining_ub >= theta
-                cand = nz[keep_mask] + base
-        else:
-            # tighten candidate set as θ grows
-            nz = cand - base
-            if nz.size >= k:
-                theta = np.partition(acc[nz], nz.size - k)[nz.size - k]
-                cand = cand[acc[nz] + remaining_ub >= theta]
+    cnt = np.zeros(bucket_size, dtype=np.int32) if min_match > 1 else None
+    exhaustive = count_matches or cnt is not None
+    cand: np.ndarray | None = None  # sorted global candidate ids, None = all
+    for i, (_ub, w, r) in enumerate(rows):
+        d, tf, dl = _mask(*_decode(r, cand, base), excl, incl)
+        if not d.size:
+            continue
+        loc = d - base
+        np.add.at(acc, loc, _bm25(w, tf, dl, avgdl))
+        if cnt is not None:
+            cnt[loc] += 1
+        if exhaustive:
+            continue
+        nz = np.flatnonzero(acc > 0) if cand is None else cand - base
+        if nz.size < k:
+            continue
+        theta = np.partition(final(nz, acc[nz]), nz.size - k)[nz.size - k]
+        if cand is None and unseen_max[i + 1] >= theta:
+            continue  # an unseen doc may still reach θ
+        cand = nz[final(nz, acc[nz] + rem[i + 1][nz // window]) >= theta] + base
 
-    nz = np.flatnonzero(acc > 0) if cand is None else np.unique(cand - base)
-    nz = nz[acc[nz] > 0]
-    n_matched = int(nz.size)
-    if nz.size == 0:
-        return (_empty, 0) if count_matches else _empty
-    scores = acc[nz]
-    if nz.size > k:
-        # tie-aware top-k: keep EVERY doc at the k-th score boundary so the
-        # final (score desc, doc_id asc) lexsort — not argpartition's
-        # arbitrary pick — decides among exact ties (rank-identity contract
-        # with score_naive/the oracle)
-        kth = np.partition(scores, nz.size - k)[nz.size - k]
-        keep = scores >= kth
-        nz, scores = nz[keep], scores[keep]
-    order = np.lexsort((nz, -scores))[:k]
-    out = pd.DataFrame({"doc_id": (nz[order] + base).astype("int64"), "score": scores[order]})
-    return (out, n_matched) if count_matches else out
+    if cnt is not None:
+        nz = np.flatnonzero(cnt >= min_match)
+    else:
+        nz = np.flatnonzero(acc > 0) if cand is None else cand - base
+    out = _select(nz, final(nz, acc[nz]), base, k)
+    return (out, int(nz.size)) if count_matches else out
 
 
 def _score_bucket_and(
@@ -318,21 +416,19 @@ def _score_bucket_and(
     returns ``(pdf, n)`` where n is the full intersection size — free
     here, the intersection is exact before the top-k truncation.
 
-    The rarest term (smallest global df) is decoded in full and defines
-    the candidate set; every later list decodes ONLY the blocks whose
-    doc-id fences contain a surviving candidate (`_decode_for_candidates`)
-    and shrinks the set — the classic conjunctive skip-pointer walk, here
-    over block-max segment metadata with numpy set steps. Cost is bounded
-    by the rarest list's length, not the head term's."""
-    empty = pd.DataFrame(
-        {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")}
-    )
+    The rarest term (smallest global df, then term) is decoded in full
+    and defines the candidate set; every later list decodes ONLY the
+    blocks whose doc-id fences contain a surviving candidate and shrinks
+    the set — the classic conjunctive skip-pointer walk, here over
+    block-max segment metadata with numpy set steps. Cost is bounded by
+    the rarest list's length, not the head term's. Without boosts
+    (df asc, term asc) is the OR kernel's (w desc, term asc) order, so
+    both sum a doc's contributions in the same float order."""
     if not len(seg) or seg["term"].nunique() < n_terms:
         # a query term with no postings in this bucket ⇒ no doc here
         # holds all terms
-        return (empty, 0) if count_matches else empty
-    bucket = int(seg["bucket"].iloc[0])
-    base = bucket * bucket_size
+        return (_empty_topk(), 0) if count_matches else _empty_topk()
+    base = int(seg["bucket"].iloc[0]) * bucket_size
 
     # group rows by TERM: in a multi-generation index a boundary bucket
     # (doc ranges spanning generations) holds one row per generation for
@@ -340,7 +436,7 @@ def _score_bucket_and(
     # intersecting the rows separately (disjoint doc ranges!) would
     # wrongly empty the result
     by_term: dict[str, list] = {}
-    for r in seg.itertuples(index=False):
+    for _ub, _w, r in _term_rows(seg, idf_map, avgdl):
         by_term.setdefault(r.term, []).append(r)
     groups = sorted(
         by_term.items(), key=lambda kv: (int(kv[1][0].df_global), kv[0])
@@ -348,150 +444,23 @@ def _score_bucket_and(
     acc = np.zeros(bucket_size, dtype=np.float64)
     cand: np.ndarray | None = None
     for term, trows in groups:
-        w = idf_map[term]
-        parts = []
-        for r in trows:
-            blob = bytes(r.postings)
-            if cand is None:
-                d, tf, dl = unpack_postings(blob)
-                if excl is not None and excl.size and d.size:
-                    p = np.clip(np.searchsorted(excl, d), 0, excl.size - 1)
-                    m = excl[p] != d
-                    d, tf, dl = d[m], tf[m], dl[m]
-                if incl is not None and d.size:
-                    if incl.size == 0:
-                        d = d[:0]; tf = tf[:0]; dl = dl[:0]
-                    else:
-                        # filter context: the rarest list defines the
-                        # candidate set, so masking it here filters the
-                        # whole intersection
-                        p = np.clip(np.searchsorted(incl, d), 0, incl.size - 1)
-                        m = incl[p] == d
-                        d, tf, dl = d[m], tf[m], dl[m]
-            else:
-                d, tf, dl = _decode_for_candidates(
-                    blob,
-                    np.asarray(r.block_offsets, dtype=np.int64),
-                    np.asarray(r.block_last_doc, dtype=np.int64),
-                    cand,
-                    base,
-                )
-            if d.size:
-                parts.append((d, tf, dl))
+        # the mask on the rarest list filters the whole intersection
+        parts = [_mask(*_decode(r, cand, base), excl, incl) for r in trows]
+        parts = [p for p in parts if p[0].size]
         if not parts:
-            return (empty, 0) if count_matches else empty
-        if len(parts) == 1:
-            d, tf, dl = parts[0]
-        else:
-            # generations hold disjoint doc ranges; concatenate + one
-            # argsort restores global doc order
-            d = np.concatenate([p[0] for p in parts])
-            tf = np.concatenate([p[1] for p in parts])
-            dl = np.concatenate([p[2] for p in parts])
+            return (_empty_topk(), 0) if count_matches else _empty_topk()
+        d, tf, dl = (np.concatenate(x) for x in zip(*parts))
+        if len(parts) > 1:
+            # generations hold disjoint doc ranges; one argsort restores
+            # global doc order
             o = np.argsort(d, kind="stable")
             d, tf, dl = d[o], tf[o], dl[o]
-        tf_f = tf.astype(np.float64)
-        contrib = w * (
-            tf_f
-            * (BM25_K1 + 1.0)
-            / (tf_f + BM25_K1 * (1.0 - BM25_B + BM25_B * dl.astype(np.float64) / avgdl))
-        )
-        np.add.at(acc, d - base, contrib)
+        np.add.at(acc, d - base, _bm25(idf_map[term], tf, dl, avgdl))
         cand = d  # sorted ascending
 
     nz = cand - base
-    scores = acc[nz]
-    n_matched = int(nz.size)
-    if k is not None and nz.size > k:
-        # tie-aware boundary keep, then full (score desc, doc_id asc)
-        # lexsort — identical rank contract to the OR path
-        kth = np.partition(scores, nz.size - k)[nz.size - k]
-        keep = scores >= kth
-        nz, scores = nz[keep], scores[keep]
-    order = np.lexsort((nz, -scores))
-    if k is not None:
-        order = order[:k]
-    out = pd.DataFrame(
-        {"doc_id": (nz[order] + base).astype("int64"), "score": scores[order]}
-    )
-    return (out, n_matched) if count_matches else out
-
-
-def _score_bucket_msm(
-    seg: pd.DataFrame,
-    idf_map: dict[str, float],
-    avgdl: float,
-    bucket_size: int,
-    m: int,
-    k: int | None,
-    excl: "np.ndarray | None" = None,
-    incl: "np.ndarray | None" = None,
-) -> pd.DataFrame:
-    """minimum_should_match top-k for one bucket: docs matching at
-    least ``m`` DISTINCT query terms, scored by the same OR-sum BM25.
-
-    Between OR (m=1, θ-pruned) and AND (m=n, rarest-first skips) no
-    admissible block-max bound exists on the per-doc ELIGIBILITY —
-    a θ computed over all accumulated docs could out-tighten the true
-    k-th eligible score when high scorers are ineligible — so this path
-    decodes every term's list in full (exactly what the envelope's
-    count_matches mode already does) and accumulates (score, distinct
-    match count) in two dense bucket arrays. Multi-generation rows of
-    one term hold disjoint doc ranges, so counting once per term GROUP
-    is exact."""
-    empty = pd.DataFrame(
-        {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")}
-    )
-    if not len(seg) or seg["term"].nunique() < m:
-        # fewer distinct query terms present in this bucket than m ⇒ no
-        # doc here can reach the threshold
-        return empty
-    bucket = int(seg["bucket"].iloc[0])
-    base = bucket * bucket_size
-    by_term: dict[str, list] = {}
-    for r in seg.itertuples(index=False):
-        by_term.setdefault(r.term, []).append(r)
-    acc = np.zeros(bucket_size, dtype=np.float64)
-    cnt = np.zeros(bucket_size, dtype=np.int32)
-    for term, trows in by_term.items():
-        w = idf_map[term]
-        for r in trows:
-            d, tf, dl = unpack_postings(bytes(r.postings))
-            if excl is not None and excl.size and d.size:
-                p = np.clip(np.searchsorted(excl, d), 0, excl.size - 1)
-                mk = excl[p] != d
-                d, tf, dl = d[mk], tf[mk], dl[mk]
-            if incl is not None and d.size:
-                if incl.size == 0:
-                    continue
-                p = np.clip(np.searchsorted(incl, d), 0, incl.size - 1)
-                mk = incl[p] == d
-                d, tf, dl = d[mk], tf[mk], dl[mk]
-            if not d.size:
-                continue
-            local = d - base
-            tf_f = tf.astype(np.float64)
-            contrib = w * (
-                tf_f
-                * (BM25_K1 + 1.0)
-                / (tf_f + BM25_K1 * (1.0 - BM25_B + BM25_B * dl.astype(np.float64) / avgdl))
-            )
-            np.add.at(acc, local, contrib)
-            cnt[local] += 1  # once per term GROUP: gen doc ranges disjoint
-    nz = np.flatnonzero(cnt >= m)
-    if nz.size == 0:
-        return empty
-    scores = acc[nz]
-    if k is not None and nz.size > k:
-        kth = np.partition(scores, nz.size - k)[nz.size - k]
-        keep = scores >= kth
-        nz, scores = nz[keep], scores[keep]
-    order = np.lexsort((nz, -scores))
-    if k is not None:
-        order = order[:k]
-    return pd.DataFrame(
-        {"doc_id": (nz[order] + base).astype("int64"), "score": scores[order]}
-    )
+    out = _select(nz, acc[nz], base, k)
+    return (out, int(nz.size)) if count_matches else out
 
 
 def resolve_msm(spec: "int | str", n_terms: int) -> int:
@@ -542,27 +511,10 @@ def score_msm(
     if m == len(terms):
         return score_wand(spark, index_dir, query, k, mode="and")
     seg = pruned_segments(spark, index_dir, meta, terms)
-    excl = load_excl(index_dir, spark, meta.bucket_size)
-    n_docs, avgdl, bucket_size = meta.n_docs, meta.avgdl, meta.bucket_size
-
-    def make_fn(excl_local):
-        def score_fn(key, seg_pdf):
-            if not len(seg_pdf):
-                return pd.DataFrame(
-                    {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")}
-                )
-            idf_map = {
-                t: idf_fn(n_docs, int(d))
-                for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
-            }
-            return _score_bucket_msm(
-                seg_pdf, idf_map, avgdl, bucket_size, m, k, excl=excl_local
-            )
-
-        return score_fn
-
-    per_bucket = apply_per_bucket(seg, excl, make_fn, _TOPK_SCHEMA)
-    return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _topk_over_segments(
+        seg, meta, k, excl=load_excl(index_dir, spark, meta.bucket_size),
+        min_match=m,
+    )
 
 
 def _idf_map(
@@ -573,13 +525,9 @@ def _idf_map(
     multiplies the SAME w every block-max upper bound uses
     (``w·(k1+1)·block_max``), so θ-pruning stays admissible under
     boosts with no extra bookkeeping."""
-    if boosts:
-        return {
-            t: idf_fn(n_docs, int(d)) * boosts.get(t, 1.0)
-            for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
-        }
+    boosts = boosts or {}
     return {
-        t: idf_fn(n_docs, int(d))
+        t: idf_fn(n_docs, int(d)) * boosts.get(t, 1.0)
         for t, d in zip(seg_pdf["term"], seg_pdf["df_global"])
     }
 
@@ -645,7 +593,7 @@ def prune_relation(
         # index holds multiple generations (each gen counted only its own
         # docs). The pruned scan already covers each query term's ENTIRE
         # posting list across fragments/generations, so the true df is an
-        # in-plan aggregate + broadcast join — still a single Spark job,
+        # in-plan aggregate + broadcast join — still one action,
         # only the query terms' rows touched.
         dfs = seg.groupBy("term").agg(F.sum("df").cast("long").alias("_df"))
         seg = (
@@ -666,10 +614,15 @@ def _topk_over_segments(
     n_terms: int | None = None,
     excl: "np.ndarray | BucketedExcl | None" = None,
     boosts: "dict[str, float] | None" = None,
+    min_match: int = 1,
+    transform=None,
 ) -> DataFrame:
-    """Scoring tail shared by score_wand and serving.Searcher: per-bucket
-    block-max scoring over an (already pruned, df-resolved) segment
-    relation, then global top-k."""
+    """Scoring tail shared by the top-k scorers and serving.Searcher:
+    per-bucket block-max scoring over an (already pruned, df-resolved)
+    segment relation, then global top-k. ``min_match`` and
+    ``transform(bucket) -> (mul, add)`` (a bucket's per-doc score
+    transform, e.g. read from a doc-values plane) pass through to the
+    OR kernel ``_score_bucket``."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
     n_docs = meta.n_docs
@@ -678,15 +631,19 @@ def _topk_over_segments(
     def make_fn(excl_local):
         def score_fn(key, seg_pdf):
             if not len(seg_pdf):
-                return pd.DataFrame(
-                    {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")}
-                )
+                return _empty_topk()
             idf_map = _idf_map(n_docs, seg_pdf, boosts)
             if mode == "and":
                 return _score_bucket_and(
                     seg_pdf, idf_map, avgdl, bucket_size, n_terms, k, excl=excl_local
                 )
-            return _score_bucket(seg_pdf, idf_map, avgdl, bucket_size, k, excl=excl_local)
+            mul, add = (None, None)
+            if transform is not None:
+                mul, add = transform(int(seg_pdf["bucket"].iloc[0]))
+            return _score_bucket(
+                seg_pdf, idf_map, avgdl, bucket_size, k, excl=excl_local,
+                min_match=min_match, mul=mul, add=add,
+            )
 
         return score_fn
 
@@ -714,81 +671,6 @@ _TOPK_COUNT_SCHEMA = T.StructType(
         ),
     ]
 )
-
-
-def topk_and_count(
-    seg: DataFrame,
-    meta: IndexMeta,
-    k: int,
-    mode: str = "or",
-    n_terms: int | None = None,
-    excl: "np.ndarray | None" = None,
-    boosts: "dict[str, float] | None" = None,
-) -> tuple[list[tuple[int, float]], int]:
-    """Envelope primitive: global top-k hits AND the exact total match
-    count from ONE Spark job (the envelope previously ran the scorer and
-    then a second count job over the same relation — 2× query fan-out).
-
-    Per bucket the pandas fn returns a single row
-    ``(bucket, n_matched, top[:k])``; the global step is one aggregate:
-    ``sum(n_matched)`` + flatten/sort_array/slice of ≤ n_buckets·k
-    structs — the same driver-bound data volume TakeOrderedAndProject
-    already shipped. Exact OR-union counting requires decoding every
-    term's doc ids, so the OR path scores exhaustively here (no block
-    skipping); that work replaces the old second job's full flat-postings
-    scan, strictly less total I/O."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    n_docs = meta.n_docs
-    avgdl, bucket_size = meta.avgdl, meta.bucket_size
-
-    def make_fn(excl_local):
-        def fn(key, seg_pdf):
-            empty = pd.DataFrame(
-                {
-                    "bucket": pd.Series([], dtype="int64"),
-                    "n_matched": pd.Series([], dtype="int64"),
-                    "top": pd.Series([], dtype="object"),
-                }
-            )
-            if not len(seg_pdf):
-                return empty
-            idf_map = _idf_map(n_docs, seg_pdf, boosts)
-            if mode == "and":
-                pdf, n = _score_bucket_and(
-                    seg_pdf, idf_map, avgdl, bucket_size, n_terms, k,
-                    excl=excl_local, count_matches=True,
-                )
-            else:
-                pdf, n = _score_bucket(
-                    seg_pdf, idf_map, avgdl, bucket_size, k,
-                    excl=excl_local, count_matches=True,
-                )
-            if not n:
-                return empty
-            top = [
-                {"neg_score": -float(s), "doc_id": int(d)}
-                for d, s in zip(pdf["doc_id"], pdf["score"])
-            ]
-            return pd.DataFrame(
-                {
-                    "bucket": pd.Series([int(seg_pdf["bucket"].iloc[0])], dtype="int64"),
-                    "n_matched": pd.Series([n], dtype="int64"),
-                    "top": pd.Series([top], dtype="object"),
-                }
-            )
-
-        return fn
-
-    per_bucket = apply_per_bucket(seg, excl, make_fn, _TOPK_COUNT_SCHEMA)
-    row = per_bucket.agg(
-        F.coalesce(F.sum("n_matched"), F.lit(0)).alias("total"),
-        F.slice(
-            F.sort_array(F.flatten(F.collect_list("top"))), 1, k
-        ).alias("top"),
-    ).collect()[0]
-    hits = [(int(r["doc_id"]), -float(r["neg_score"])) for r in row["top"]]
-    return hits, int(row["total"])
 
 
 _TOPK_DOCS_SCHEMA = T.StructType(
@@ -922,7 +804,7 @@ def make_envelope_fn(
     snippet come back None): the local path scores all buckets first and
     fetches docs for the ≤k GLOBAL winners only — the distributed plan
     fetches per bucket because its tasks run in parallel and a second
-    round-trip would cost another job."""
+    round-trip would cost another action."""
     n_docs = meta.n_docs
     avgdl, bucket_size = meta.avgdl, meta.bucket_size
 
@@ -992,14 +874,16 @@ def topk_count_docs(
     excl: "np.ndarray | BucketedExcl | None" = None,
     boosts: "dict[str, float] | None" = None,
 ) -> tuple[list[dict], int]:
-    """The WHOLE search envelope from ONE Spark job.
+    """The WHOLE search envelope from ONE Spark action (one collect;
+    adaptive execution runs each of its two shuffles as its own job, so
+    the status store shows ~3 jobs per query on one generation).
 
-    ``topk_and_count`` folded the match count into the scoring pass;
-    this folds the doc-store fetch in too. The doc store is bucketed on
-    the SAME doc-range grid as the segments, so each scoring task reads
-    its own bucket's docs for its ≤k local winners — a task-local
-    pyarrow read with a doc_id row-group filter (the co-location pattern
-    phrase verification already uses), never a join, never a second job.
+    The match count folds into the scoring pass (``count_matches``) and
+    so does the doc-store fetch: the doc store is bucketed on the SAME
+    doc-range grid as the segments, so each scoring task reads its own
+    bucket's docs for its ≤k local winners — a task-local pyarrow read
+    with a doc_id row-group filter (the co-location pattern phrase
+    verification already uses), never a join, never a second action.
     Returns (rows, total): rows ordered (score desc, doc_id asc) with
     url/title/snippet attached, snippets under the reference display
     rule (raw query forms — bm25.snippet_text)."""
