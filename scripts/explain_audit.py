@@ -8,13 +8,14 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from uci_searchengine_spark.session import get_spark  # noqa: E402
 
-IDX = "/root/repo/_data/audit_index"
+IDX = os.path.join(REPO, "_data", "audit_index")
 
 
 def main() -> None:
@@ -225,7 +226,7 @@ def main() -> None:
         )
     )
 
-    PIDX = "/root/repo/_data/audit_index_pos"
+    PIDX = os.path.join(REPO, "_data", "audit_index_pos")
     if not os.path.exists(os.path.join(PIDX, "meta.json")):
         shutil.rmtree(PIDX, ignore_errors=True)
         build_index(

@@ -136,6 +136,15 @@ class TestLocalSearch:
         b = s.search("arbakk", plan="local")
         assert a == b
         assert a["total_results"] == 0
+        url = s.search("stop0", plan="local")["results"][0]["url"]
+        host = url.split("://")[1].split("/")[0].lower()
+        # a boost suffix is no term, and a filter is no term either
+        for q in ("arbakk^2", f"arbakk site:{host}"):
+            sa = s.search(q, plan="spark")
+            sb = s.search(q, plan="local")
+            assert sa == sb, q
+            assert sa["total_results"] == 0
+            assert sa["did_you_mean"] == a["did_you_mean"], q
 
     def test_pruned_shard_bytes_counts_generations(self, spark, index_small):
         from uci_searchengine_spark.operators.local_search import (

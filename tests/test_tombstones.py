@@ -123,10 +123,12 @@ class TestBucketedTombstones:
         assert isinstance(arr, np.ndarray) and arr.tolist() == [0, 1]
 
     def test_all_paths_match_driver_array(self, spark, index_tomb, oracle_small, low_cap):
-        """or / and / phrase / boolean / envelope: cogrouped exclusion ≡
-        driver-array exclusion ≡ oracle-minus-deleted."""
+        """or / and / phrase / boolean / envelope / filtered: cogrouped
+        exclusion (folded into the allowed set by anti-join under a
+        filter) ≡ driver-array exclusion ≡ oracle-minus-deleted."""
         from uci_searchengine_spark.operators import tombstones
         from uci_searchengine_spark.operators.boolean import boolean_search
+        from uci_searchengine_spark.operators.filtered import filtered_topk
         from uci_searchengine_spark.operators.phrase import phrase_search
         from uci_searchengine_spark.operators.serving import Searcher
         from uci_searchengine_spark.operators.tombstones import delete_docs
@@ -137,6 +139,13 @@ class TestBucketedTombstones:
         deleted = {full[0][0], full[1][0], full[5][0]}
         delete_docs(index_tomb, deleted)
         exp = _minus(full, deleted)
+        # a host holding a deleted doc, and every other doc id
+        url = oracle_small.urls[full[0][0]]
+        host = url.split("://")[1].split("/")[0].lower()
+        allowed = spark.createDataFrame(
+            [(d,) for d in range(oracle_small.n_docs) if d % 2 == 0],
+            "doc_id long",
+        )
 
         def run_all():
             out = {}
@@ -160,10 +169,25 @@ class TestBucketedTombstones:
             ]
             env = Searcher(spark, index_tomb).search(q, per_page=5)
             out["env"] = (env["total_results"], [r["url"] for r in env["results"]])
+            env = Searcher(spark, index_tomb).search(f"{q} site:{host}")
+            out["site"] = (env["total_results"], env["results"])
+            out["filtered"] = [
+                (r["doc_id"], round(r["score"], 9))
+                for r in filtered_topk(spark, index_tomb, q, allowed, 10).collect()
+            ]
             return out
 
         cog = run_all()  # DRIVER_CAP=1 → cogrouped path
         assert [d for d, _ in cog["or"]] == [d for d, _ in exp]
+        assert [d for d, _ in cog["filtered"]] == [
+            d for d, _ in _minus(full, deleted, 10**9) if d % 2 == 0
+        ][:10]
+        in_host = {
+            d
+            for d, _ in _minus(full, deleted, 10**9)
+            if oracle_small.urls[d].split("://")[1].split("/")[0].lower() == host
+        }
+        assert cog["site"][0] == len(in_host)
         tombstones.DRIVER_CAP = 10_000_000
         arr = run_all()  # normal driver-array path
         assert cog == arr

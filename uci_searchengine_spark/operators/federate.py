@@ -49,7 +49,7 @@ def _global_stats(metas: "list[IndexMeta]") -> tuple[int, float]:
     return n, total_len / n
 
 
-def _prepare_members(
+def _member_segments(
     spark: SparkSession, index_dirs: "list[str]", query: str
 ) -> "tuple[list[str], list[tuple[str, IndexMeta, DataFrame]]]":
     """Shared federation prelude: validate the members, analyze the
@@ -122,7 +122,7 @@ def federated_topk(
     through each index's doc store. Per-index top-k is a superset of
     that index's contribution to the global top-k, so the final
     ``orderBy … limit k`` over ≤ k·n_indexes rows is exact."""
-    terms, members = _prepare_members(spark, index_dirs, query)
+    terms, members = _member_segments(spark, index_dirs, query)
     if not members:
         return spark.createDataFrame(
             [], "index_id int, doc_id long, score double"
@@ -176,7 +176,7 @@ def federated_envelope(
     labels = labels or [str(i) for i in range(len(index_dirs))]
     if len(labels) != len(index_dirs):
         raise ValueError("labels must match index_dirs")
-    terms, members = _prepare_members(spark, index_dirs, query)
+    terms, members = _member_segments(spark, index_dirs, query)
     if not members:
         return {
             "query": query,

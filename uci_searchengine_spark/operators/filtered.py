@@ -1,25 +1,23 @@
-"""Filter-context search: BM25 top-k restricted to an ALLOWED set of
-documents given as a Spark relation (Lucene's filter clause / Elastic's
+"""Filter context: query syntax for filters and BM25 top-k restricted to
+an ALLOWED set of documents (Lucene's filter clause / Elastic's
 ``bool.filter`` — the filter constrains eligibility, never the score).
 
-The allowed set arrives as a DataFrame of global doc ids — itself the
-output of an arbitrary relational predicate (language, domain, date
-range, a join against an allowlist...), so the filter composes with the
-whole DataFrame API. Delivery to the scorers reuses the tombstone
-machinery's bucket grid: the relation is keyed by ``doc_id div
-bucket_size`` and COGROUPED with the segment rows per scoring bucket, so
-each task receives only its own bucket's allowed ids — constant driver
-memory at any filter size, no join against the postings, no shuffle of
-the (huge) segment relation beyond the groupBy(bucket) it already does.
+``parse_site_filters`` / ``parse_range_filters`` split ``site:host`` and
+``field:[lo TO hi]`` tokens from a query; ``serving.Searcher`` turns
+them into an allowed set and runs its one envelope path with it.
+``filtered_topk`` takes the allowed set as a DataFrame of global doc ids
+— the output of any relational predicate (language, domain, date range,
+a join against an allowlist...).
 
-Correctness: the inclusion mask is applied at accumulation time inside
-``_score_bucket`` / ``_score_bucket_and`` — before θ ever tightens — so
-block-max pruning stays admissible for the post-filter top-k (same
-argument as tombstone exclusion; a post-scoring filter would silently
-drop filtered-in docs that unfiltered docs had pruned away).
-
-Tombstones compose by folding into the allowed relation (anti-join) —
-one mechanism per bucket, no 3-way cogroup.
+There is no filtered scorer here: an allowed set is one more input of
+the shared scoring tails. The distributed plan keys the relation on the
+bucket grid and cogroups it per scoring bucket
+(``wand.apply_per_bucket``; tombstones past the driver cap fold in by
+anti-join), the task-local plan passes a sorted driver array. Either
+way the kernel masks at accumulation time — before θ ever tightens — so
+block-max pruning stays admissible for the post-filter top-k (a
+post-scoring filter would drop filtered-in docs that unfiltered docs had
+pruned away).
 
 Reference: no filtered search exists in UCI-SearchEngine; breadth
 extension with Lucene semantics.
@@ -29,19 +27,12 @@ from __future__ import annotations
 
 import re
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from uci_searchengine_spark.operators.bm25 import terms_for_index
 from uci_searchengine_spark.operators.index_build import IndexMeta
 from uci_searchengine_spark.operators.wand import (
-    _TOPK_COUNT_SCHEMA,
-    _TOPK_SCHEMA,
-    _idf_map,
-    _score_bucket,
-    _score_bucket_and,
+    _topk_over_segments,
     load_excl,
     pruned_segments,
 )
@@ -97,39 +88,15 @@ def parse_range_filters(
     return " ".join(rest.split()), ranges
 
 
-def _bucketed(allowed: DataFrame, bucket_size: int) -> DataFrame:
-    return allowed.select(
-        (F.col("doc_id").cast("long") / F.lit(bucket_size))
-        .cast("long")
-        .alias("bucket"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-    )
-
-
-def _prep(spark, index_dir: str, query: str, allowed: DataFrame,
-          terms: "list[str] | None" = None, excl="__load__"):
-    """Shared prelude: analyze, resolve tombstones (driver array rides
-    alongside the inclusion mask; a BucketedExcl relation anti-joins into
-    the filter — one cogroup mechanism per bucket either way), pruned
-    segment scan. Returns None when the query has no analyzable terms.
-    ``terms`` overrides analysis (already-analyzed term lists — e.g.
-    wildcard expansions, which must not round-trip the analyzer);
-    ``excl`` passes an already-loaded exclusion set (serving loads it for
-    the plan choice — don't read the tombstone files twice)."""
-    meta = IndexMeta.load(index_dir)
-    if terms is None:
-        terms = terms_for_index(meta, query)
-    if not terms:
-        return None
-    if isinstance(excl, str) and excl == "__load__":
-        excl = load_excl(index_dir, spark, meta.bucket_size)
-    excl_arr: "np.ndarray | None" = None
-    if isinstance(excl, np.ndarray):
-        excl_arr = excl
-    elif excl is not None:
-        allowed = allowed.join(excl.df.select("doc_id"), "doc_id", "left_anti")
-    seg = pruned_segments(spark, index_dir, meta, terms)
-    return meta, terms, excl_arr, allowed, seg
+def in_range(v, lo, hi, lo_inclusive, hi_inclusive, m):
+    """``m`` narrowed to the docs whose value ``v`` lies in one parsed
+    range (``None`` = open end) — numpy arrays and Spark columns
+    alike."""
+    if lo is not None:
+        m = m & ((v >= lo) if lo_inclusive else (v > lo))
+    if hi is not None:
+        m = m & ((v <= hi) if hi_inclusive else (v < hi))
+    return m
 
 
 def filtered_topk(
@@ -147,113 +114,12 @@ def filtered_topk(
     the same doc (filter context, not a boost)."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    prep = _prep(spark, index_dir, query, allowed)
-    if prep is None:
-        return empty
-    meta, terms, excl_arr, allowed, seg = prep
-    n_docs, avgdl, bucket_size = meta.n_docs, meta.avgdl, meta.bucket_size
-    n_terms = len(terms)
-
-    def fn(key, seg_pdf, incl_pdf):
-        if not len(seg_pdf):
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series([], dtype="int64"),
-                    "score": pd.Series([], dtype="float64"),
-                }
-            )
-        incl = np.unique(incl_pdf["doc_id"].to_numpy().astype(np.int64))
-        idf_map = _idf_map(n_docs, seg_pdf)
-        if mode == "and":
-            return _score_bucket_and(
-                seg_pdf, idf_map, avgdl, bucket_size, n_terms, k,
-                excl=excl_arr, incl=incl,
-            )
-        return _score_bucket(
-            seg_pdf, idf_map, avgdl, bucket_size, k, excl=excl_arr, incl=incl
-        )
-
-    per_bucket = (
-        seg.groupBy("bucket")
-        .cogroup(_bucketed(allowed, bucket_size).groupBy("bucket"))
-        .applyInPandas(fn, schema=_TOPK_SCHEMA)
+    meta = IndexMeta.load(index_dir)
+    terms = terms_for_index(meta, query)
+    if not terms:
+        return spark.createDataFrame([], "doc_id long, score double")
+    return _topk_over_segments(
+        pruned_segments(spark, index_dir, meta, terms), meta, k, mode=mode,
+        n_terms=len(terms), excl=load_excl(index_dir, spark, meta.bucket_size),
+        incl=allowed,
     )
-    return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def filtered_topk_count(
-    spark: SparkSession,
-    index_dir: str,
-    query: str,
-    allowed: DataFrame,
-    k: int = 10,
-    mode: str = "or",
-    terms: "list[str] | None" = None,
-    excl="__load__",
-    boosts: "dict[str, float] | None" = None,
-) -> "tuple[list[tuple[int, float]], int]":
-    """Envelope primitive: filtered global top-k AND the exact
-    post-filter match count from ONE Spark action (the kernel's
-    ``count_matches`` mode, with the inclusion cogroup). The count is the
-    OR-union (or intersection) size AMONG allowed docs — exactly what a
-    ``site:`` results page reports as total_results. ``boosts`` maps
-    analyzed terms to query-time weight multipliers (wand._idf_map)."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    prep = _prep(spark, index_dir, query, allowed, terms=terms, excl=excl)
-    if prep is None:
-        return [], 0
-    meta, terms, excl_arr, allowed, seg = prep
-    n_docs, avgdl, bucket_size = meta.n_docs, meta.avgdl, meta.bucket_size
-    n_terms = len(terms)
-
-    def fn(key, seg_pdf, incl_pdf):
-        empty = pd.DataFrame(
-            {
-                "bucket": pd.Series([], dtype="int64"),
-                "n_matched": pd.Series([], dtype="int64"),
-                "top": pd.Series([], dtype="object"),
-            }
-        )
-        if not len(seg_pdf):
-            return empty
-        incl = np.unique(incl_pdf["doc_id"].to_numpy().astype(np.int64))
-        idf_map = _idf_map(n_docs, seg_pdf, boosts)
-        if mode == "and":
-            pdf, n = _score_bucket_and(
-                seg_pdf, idf_map, avgdl, bucket_size, n_terms, k,
-                excl=excl_arr, incl=incl, count_matches=True,
-            )
-        else:
-            pdf, n = _score_bucket(
-                seg_pdf, idf_map, avgdl, bucket_size, k,
-                excl=excl_arr, incl=incl, count_matches=True,
-            )
-        if not n:
-            return empty
-        top = [
-            {"neg_score": -float(s), "doc_id": int(d)}
-            for d, s in zip(pdf["doc_id"], pdf["score"])
-        ]
-        return pd.DataFrame(
-            {
-                "bucket": pd.Series([int(seg_pdf["bucket"].iloc[0])], dtype="int64"),
-                "n_matched": pd.Series([n], dtype="int64"),
-                "top": pd.Series([top], dtype="object"),
-            }
-        )
-
-    per_bucket = (
-        seg.groupBy("bucket")
-        .cogroup(_bucketed(allowed, bucket_size).groupBy("bucket"))
-        .applyInPandas(fn, schema=_TOPK_COUNT_SCHEMA)
-    )
-    row = per_bucket.agg(
-        F.coalesce(F.sum("n_matched"), F.lit(0)).alias("total"),
-        F.slice(
-            F.sort_array(F.flatten(F.collect_list("top"))), 1, k
-        ).alias("top"),
-    ).collect()[0]
-    hits = [(int(r["doc_id"]), -float(r["neg_score"])) for r in row["top"]]
-    return hits, int(row["total"])

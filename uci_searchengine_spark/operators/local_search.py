@@ -122,25 +122,26 @@ def local_topk_count_docs(
     excl: "np.ndarray | None" = None,
     pf_cache: "dict | None" = None,
     boosts: "dict[str, float] | None" = None,
+    incl: "np.ndarray | None" = None,
 ) -> tuple[list[dict], int]:
     """In-process twin of ``wand.topk_count_docs``: the SAME per-bucket
     closure over the same pruned rows, buckets iterated with a pandas
     groupby instead of applyInPandas, merged with the same
     (neg_score, doc_id) order the Spark path's sort_array uses.
-    Returns (rows, total) in the identical shape."""
+    Returns (rows, total) in the identical shape. ``incl``: filter
+    context as the sorted driver array of allowed doc ids."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
     seg = read_pruned_segments_local(index_dir, meta, terms)
     if not len(seg):
         return [], 0
-    docs_dirs = [os.path.join(d, "docs") for d in generation_dirs(index_dir)]
     lowered = [t.lower() for t in display_terms]
     # score every bucket docs-OFF: the doc-store fetch runs once, for the
     # ≤k GLOBAL winners, instead of per bucket (the distributed closure
     # fetches per bucket because its tasks are parallel — serially that
     # would multiply the fetch cost by n_buckets)
     fn = _wand.make_envelope_fn(
-        meta, docs_dirs, lowered, k, mode, len(terms), with_docs=False,
+        meta, [], lowered, k, mode, len(terms), with_docs=False,
         boosts=boosts,
     )(excl)
     # serial bucket loop: measured faster than a thread pool here — the
@@ -149,23 +150,17 @@ def local_topk_count_docs(
     total = 0
     top: list[dict] = []
     for _, gpdf in seg.groupby("bucket", sort=False):
-        out = fn(None, gpdf.reset_index(drop=True))
+        out = fn(None, gpdf.reset_index(drop=True), incl=incl)
         if not len(out):
             continue
         total += int(out["n_matched"].iloc[0])
         top.extend(out["top"].iloc[0])
     top.sort(key=lambda t: (t["neg_score"], t["doc_id"]))
     top = top[:k]
-    by_bucket: dict[int, list[int]] = {}
-    for t in top:
-        by_bucket.setdefault(
-            int(t["doc_id"]) // meta.bucket_size, []
-        ).append(int(t["doc_id"]))
-    docs: dict[int, tuple[str, str, str]] = {}
-    for bucket, ids in by_bucket.items():
-        docs.update(
-            _wand.fetch_bucket_docs(docs_dirs, bucket, ids, lowered, pf_cache)
-        )
+    docs = _wand.fetch_winner_docs(
+        index_dir, meta.bucket_size, [t["doc_id"] for t in top], lowered,
+        pf_cache,
+    )
     rows = []
     for t in top:
         url, title, snip = docs.get(int(t["doc_id"]), (None, None, None))

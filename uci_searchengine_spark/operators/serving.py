@@ -128,16 +128,9 @@ class Searcher:
         excl = _wand.load_excl(
             self.index_dir, self.spark, self.meta.bucket_size
         )
-        # doc-store verification tokenizes candidate docs in-process —
-        # its cost follows the DOC STORE, not the pruned segment bytes,
-        # so the local choice must also fit the doc store in budget
-        # (positional verify is index-only and needs no such guard)
-        local_ok = self._use_local(terms, excl, plan) and (
-            use_pos
-            or plan == "local"
-            or self._docstore_bytes() <= self.local_bytes_limit
-        )
-        if local_ok:
+        # positional verify is index-only; doc-store verify tokenizes
+        # candidate docs in-process
+        if self._use_local(terms, excl, plan, docstore=not use_pos):
             self.last_plan = "local"
             return phrase_topk_local(
                 self.index_dir, self.meta, phrase, k, method, excl=excl,
@@ -187,15 +180,9 @@ class Searcher:
         excl = _wand.load_excl(
             self.index_dir, self.spark, self.meta.bucket_size
         )
-        # same doc-store guard as phrase_rows, only when phrases will
-        # verify from the doc store
-        needs_docstore = bool(bq.phrases) and not use_pos
-        local_ok = self._use_local(all_terms, excl, plan) and (
-            not needs_docstore
-            or plan == "local"
-            or self._docstore_bytes() <= self.local_bytes_limit
-        )
-        if local_ok:
+        # phrases verify from the doc store unless positional
+        docstore = bool(bq.phrases) and not use_pos
+        if self._use_local(all_terms, excl, plan, docstore=docstore):
             self.last_plan = "local"
             return boolean_topk_local(
                 self.index_dir, self.meta, query, k, excl=excl,
@@ -208,37 +195,15 @@ class Searcher:
         )
         return [r.asDict() for r in df.collect()]
 
-    def _docs_for_rows(
-        self, rows: list[dict], display_terms: list[str]
-    ) -> dict[int, tuple]:
-        """Co-located doc-store fetch for ≤k winner rows (bounded —
-        never a join): per-bucket footer-stats-pruned row-group reads
-        through the resident footer memo. Shared display rule
-        (bm25.snippet_text) with every other serving surface."""
-        from uci_searchengine_spark.operators.index_build import (
-            generation_dirs,
-        )
-
-        docs_dirs = [
-            os.path.join(d, "docs") for d in generation_dirs(self.index_dir)
-        ]
-        lowered = [t.lower() for t in display_terms]
-        by_bucket: dict[int, list[int]] = {}
-        for r in rows:
-            by_bucket.setdefault(
-                int(r["doc_id"]) // self.meta.bucket_size, []
-            ).append(int(r["doc_id"]))
-        found: dict[int, tuple] = {}
-        for b, ids in by_bucket.items():
-            found.update(
-                _wand.fetch_bucket_docs(
-                    docs_dirs, b, ids, lowered, self._pf_cache
-                )
-            )
-        return found
-
     def _attach(self, rows: list[dict], display_terms: list[str]) -> list[dict]:
-        docs = self._docs_for_rows(rows, display_terms)
+        """Doc-attach ≤k winner rows through the resident footer memo
+        (wand.fetch_winner_docs — bounded, never a join); snippets under
+        the shared display rule (bm25.snippet_text)."""
+        docs = _wand.fetch_winner_docs(
+            self.index_dir, self.meta.bucket_size,
+            [r["doc_id"] for r in rows],
+            [t.lower() for t in display_terms], self._pf_cache,
+        )
         out = []
         for r in rows:
             url, title, snip = docs.get(int(r["doc_id"]), (None, None, None))
@@ -624,11 +589,17 @@ class Searcher:
         return suggest(self.spark, self.index_dir, word, k, max_dist)
 
     # ------------------------------------------------------------- envelope
-    def _use_local(self, terms: list[str], excl, plan: str) -> bool:
+    def _use_local(
+        self, terms: list[str], excl, plan: str, docstore: bool = False
+    ) -> bool:
         """Per-query local/distributed choice. A BucketedExcl exclusion
         set (tombstones past the driver cap) is a Spark relation and
         forces the distributed plan; otherwise "auto" compares the
-        pruned shard dirs' on-disk bytes against ``local_bytes_limit``."""
+        pruned shard dirs' on-disk bytes against ``local_bytes_limit``.
+        ``docstore``: the local path also works over the doc store
+        in-process (doc-store phrase verify, filter frames), a cost that
+        follows the doc store rather than the pruned segment bytes — so
+        "auto" also needs the whole doc store within the budget."""
         if plan not in ("auto", "local", "spark"):
             raise ValueError(f"plan must be auto|local|spark, got {plan!r}")
         if plan == "spark":
@@ -642,6 +613,8 @@ class Searcher:
                 )
             return True
         if bucketed or not self.local_bytes_limit:
+            return False
+        if docstore and self._docstore_bytes() > self.local_bytes_limit:
             return False
         from uci_searchengine_spark.operators.local_search import (
             pruned_shard_bytes,
@@ -797,10 +770,7 @@ class Searcher:
     def _dv_frame(self, field: str):
         """Resident (doc_id, value) pandas frame of one doc-values
         plane — the task-local range filter's input. Memoized per
-        field; raises loudly when the plane doesn't exist (a silent
-        empty frame would make every range query return zero hits)."""
-        import os as _os
-
+        field."""
         import pyarrow.parquet as pq
 
         from uci_searchengine_spark.operators.docvalues import dv_dir
@@ -809,17 +779,54 @@ class Searcher:
         if cache is None:
             cache = self._dv_pdfs = {}
         if field not in cache:
-            root = dv_dir(self.index_dir, field)
-            if not _os.path.isdir(root):
-                raise ValueError(
-                    f"unknown range field {field!r}: no doc-values "
-                    f"plane at {root}"
-                )
-            cache[field] = (
-                pq.read_table(root, columns=["doc_id", "value"])
-                .to_pandas()
-            )
+            cache[field] = pq.read_table(
+                dv_dir(self.index_dir, field), columns=["doc_id", "value"]
+            ).to_pandas()
         return cache[field]
+
+    def _allowed(self, hosts: list[str], ranges: list[tuple], local: bool):
+        """The docs that pass every ``site:`` / range filter (hosts OR
+        together, ranges AND; a doc missing from a range's plane does
+        not match — ES rule): a sorted driver array from the resident
+        authority / doc-value frames on the local plan, a ``doc_id``
+        relation on the distributed plan. Both sides compare lowercased
+        authorities (parse_site_filters lowercases the hosts)."""
+        from uci_searchengine_spark.operators.docvalues import dv_dir
+        from uci_searchengine_spark.operators.filtered import in_range
+
+        if local:
+            import numpy as np
+
+            sets = []
+            if hosts:
+                auth = self._authority_frame()
+                hit = auth["authority"].isin(hosts).to_numpy()
+                sets.append(auth["doc_id"].to_numpy()[hit])
+            for fld, *bounds in ranges:
+                dv = self._dv_frame(fld)
+                v = dv["value"].to_numpy()
+                m = in_range(v, *bounds, np.ones(len(v), dtype=bool))
+                sets.append(dv["doc_id"].to_numpy()[m])
+            allowed = np.unique(sets[0]).astype(np.int64)
+            for ids in sets[1:]:
+                allowed = np.intersect1d(allowed, ids)
+            return allowed
+        rels = []
+        if hosts:
+            url = F.parse_url(F.col("url"), F.lit("AUTHORITY"))
+            rels.append(
+                self._docs.filter(F.lower(url).isin(hosts)).select("doc_id")
+            )
+        for fld, *bounds in ranges:
+            plane = self.spark.read.parquet(dv_dir(self.index_dir, fld))
+            rels.append(
+                plane.filter(in_range(F.col("value"), *bounds, F.lit(True)))
+                .select("doc_id")
+            )
+        allowed = rels[0]
+        for rel in rels[1:]:
+            allowed = allowed.join(rel, "doc_id", "left_semi")
+        return allowed
 
     def _vocab_raw(self):
         """Resident (term, df) pandas frame — shared input of the
@@ -929,19 +936,17 @@ class Searcher:
         ``site:host`` tokens (Google-style) become a filter context:
         eligibility restricted to docs whose url authority equals a
         given host (multiple site: tokens OR together), scores
-        unchanged. Runs the distributed filtered plan
-        (operators/filtered.py — one scoring job with the allowed
-        relation cogrouped per bucket, plus the bounded co-located
-        winner fetch, same shape as the boolean/phrase envelopes).
-
-        ``field:[10 TO 200]`` / ``field:{10 TO 200}`` tokens (Lucene
-        numeric range queries, ``*`` = open end) are filter context
-        too: ``field`` names a doc-values plane of this index; docs
-        missing from the plane don't match (ES rule); multiple ranges
-        and site: filters AND together. Same two filtered plans as
-        site: (task-local complement-exclusion / distributed
-        allowed-set semi-joined from the scan-pruned plane); an
-        unknown field raises."""
+        unchanged. ``field:[10 TO 200]`` / ``field:{10 TO 200}`` tokens
+        (Lucene numeric range queries, ``*`` = open end) are filter
+        context too: ``field`` names a doc-values plane of this index
+        (an unknown field raises); docs missing from the plane don't
+        match (ES rule); multiple ranges and site: filters AND
+        together. A filtered query runs the same envelope with the
+        allowed set (``_allowed``) as one more input — a sorted driver
+        array on the local plan, a relation cogrouped per bucket on the
+        distributed one — and takes the local plan only when the doc
+        store also fits ``local_bytes_limit``."""
+        from uci_searchengine_spark.operators.docvalues import dv_dir
         from uci_searchengine_spark.operators.filtered import (
             parse_range_filters,
             parse_site_filters,
@@ -957,17 +962,12 @@ class Searcher:
         # plane names eagerly — an unknown field must raise even when
         # the query ends up with no scoring terms (loud contract).
         rest, ranges = parse_range_filters(query)
-        if ranges:
-            import os as _os
-
-            from uci_searchengine_spark.operators.docvalues import dv_dir
-
-            for fld, *_bounds in ranges:
-                if not _os.path.isdir(dv_dir(self.index_dir, fld)):
-                    raise ValueError(
-                        f"unknown range field {fld!r}: no doc-values "
-                        f"plane at {dv_dir(self.index_dir, fld)}"
-                    )
+        for fld, *_bounds in ranges:
+            root = dv_dir(self.index_dir, fld)
+            if not os.path.isdir(root):
+                raise ValueError(
+                    f"unknown range field {fld!r}: no doc-values plane at {root}"
+                )
         rest, hosts = parse_site_filters(rest)
         # Lucene term^N query-time boosts: strip the suffixes up front so
         # the de-boosted chunks flow through the normal rewrite pipeline
@@ -1031,145 +1031,9 @@ class Searcher:
                 "did_you_mean": None,
                 "results": [],
             }
-        if hosts or ranges:
-            from uci_searchengine_spark.operators.filtered import (
-                filtered_topk_count,
-            )
-
-            import numpy as np
-
-            excl0 = _wand.load_excl(
-                self.index_dir, self.spark, self.meta.bucket_size
-            )
-            start = (page - 1) * per_page
-            if self._use_local(terms, excl0, plan) and (
-                plan == "local"
-                or self._docstore_bytes() <= self.local_bytes_limit
-            ):
-                # task-local filter context — inclusion == exclusion of
-                # the complement (universe = the resident doc store,
-                # which the local-bytes policy just bounded); the SAME
-                # local envelope closure runs with the combined
-                # exclusion set. site: and range filters AND together:
-                # the drop sets union.
-                from uci_searchengine_spark.operators.local_search import (
-                    local_topk_count_docs,
-                )
-
-                auth = self._authority_frame()
-                drops = []
-                if hosts:
-                    drops.append(
-                        auth["doc_id"][
-                            ~auth["authority"].isin(hosts)
-                        ].to_numpy()
-                    )
-                universe = auth["doc_id"].to_numpy()
-                for fld, lo, hi, ilo, ihi in ranges:
-                    dv = self._dv_frame(fld)
-                    m = np.ones(len(dv), dtype=bool)
-                    v = dv["value"].to_numpy()
-                    if lo is not None:
-                        m &= (v >= lo) if ilo else (v > lo)
-                    if hi is not None:
-                        m &= (v <= hi) if ihi else (v < hi)
-                    keep = dv["doc_id"].to_numpy()[m]
-                    # docs missing from the plane don't match (ES rule)
-                    drops.append(
-                        universe[~np.isin(universe, keep)]
-                    )
-                drop = (
-                    np.unique(np.concatenate(drops))
-                    if drops
-                    else np.array([], dtype=np.int64)
-                )
-                excl_all = (
-                    np.unique(np.concatenate([excl0, drop]))
-                    if isinstance(excl0, np.ndarray)
-                    else np.unique(drop)
-                )
-                self.last_plan = "local"
-                rows_l, total = local_topk_count_docs(
-                    self.index_dir, self.meta, disp, terms,
-                    k=page * per_page, mode=mode, excl=excl_all,
-                    pf_cache=self._pf_cache, boosts=boosts,
-                )
-                rows = [
-                    {
-                        "url": r["url"],
-                        "title": r["title"],
-                        "snippet": r["snippet"],
-                        "score": r["score"],
-                    }
-                    for r in rows_l[start : start + per_page]
-                ]
-            else:
-                # lowercase BOTH sides (parse_site_filters lowercases the
-                # hosts; an uppercase authority in a stored url must
-                # still match — plan equality with the local path).
-                # Filters AND together: host allowed-set ∩ each range
-                # plane's in-bounds rows (left-semi joins — the planes
-                # are bucket-partitioned parquet, scan-pruned on read).
-                allowed = self._docs.select("doc_id")
-                if hosts:
-                    allowed = self._docs.filter(
-                        F.lower(
-                            F.parse_url(F.col("url"), F.lit("AUTHORITY"))
-                        ).isin(hosts)
-                    ).select("doc_id")
-                for fld, lo, hi, ilo, ihi in ranges:
-                    from uci_searchengine_spark.operators.docvalues import (
-                        dv_dir,
-                    )
-
-                    import os as _os
-
-                    root = dv_dir(self.index_dir, fld)
-                    if not _os.path.isdir(root):
-                        raise ValueError(
-                            f"unknown range field {fld!r}: no doc-values "
-                            f"plane at {root}"
-                        )
-                    plane = self.spark.read.parquet(root)
-                    v = F.col("value")
-                    if lo is not None:
-                        plane = plane.filter(v >= lo if ilo else v > lo)
-                    if hi is not None:
-                        plane = plane.filter(v <= hi if ihi else v < hi)
-                    allowed = allowed.join(
-                        plane.select("doc_id"), "doc_id", "left_semi"
-                    )
-                self.last_plan = "spark"
-                hits, total = filtered_topk_count(
-                    self.spark, self.index_dir, rest, allowed,
-                    k=page * per_page, mode=mode, terms=terms,
-                    excl=excl0, boosts=boosts,
-                )
-                rows = self._attach(
-                    [
-                        {"doc_id": d, "score": s}
-                        for d, s in hits[start : start + per_page]
-                    ],
-                    disp,
-                )
-            dym = None
-            if total == 0:
-                from uci_searchengine_spark.operators.suggest import (
-                    suggest_query,
-                )
-
-                dym = suggest_query(self.spark, self.index_dir, rest)
-            return {
-                "query": query,
-                "total_results": total,
-                "page": page,
-                "per_page": per_page,
-                "total_pages": math.ceil(total / per_page),
-                "did_you_mean": dym,
-                "results": rows,
-            }
         excl = _wand.load_excl(self.index_dir, self.spark, self.meta.bucket_size)
-        if self._use_local(terms, excl, plan):
+        filtered = bool(hosts or ranges)
+        if self._use_local(terms, excl, plan, docstore=filtered):
             from uci_searchengine_spark.operators.local_search import (
                 local_topk_count_docs,
             )
@@ -1179,6 +1043,7 @@ class Searcher:
                 self.index_dir, self.meta, disp, terms,
                 k=page * per_page, mode=mode, excl=excl,
                 pf_cache=self._pf_cache, boosts=boosts,
+                incl=self._allowed(hosts, ranges, True) if filtered else None,
             )
         else:
             self.last_plan = "spark"
@@ -1187,6 +1052,7 @@ class Searcher:
                 seg, self.meta, self.index_dir, disp,
                 k=page * per_page, mode=mode, n_terms=len(terms),
                 excl=excl, boosts=boosts,
+                incl=self._allowed(hosts, ranges, False) if filtered else None,
             )
         start = (page - 1) * per_page
         sel = rows[start : start + per_page]
@@ -1197,20 +1063,22 @@ class Searcher:
             # On the local plan the vocabulary (term+df plane, the
             # smallest plane of the index) is served from a resident
             # frame — the whole zero-hit envelope stays job-free.
+            # Corrections read ``rest``: filter and boost syntax stripped
+            # (a ``^2`` suffix is no term).
             if self.last_plan == "local" and self._vocab_fits_local():
                 from uci_searchengine_spark.operators.local_search import (
                     suggest_query_local,
                 )
 
                 dym = suggest_query_local(
-                    self.index_dir, self.meta, query, self._vocab()
+                    self.index_dir, self.meta, rest, self._vocab()
                 )
             else:
                 from uci_searchengine_spark.operators.suggest import (
                     suggest_query,
                 )
 
-                dym = suggest_query(self.spark, self.index_dir, query)
+                dym = suggest_query(self.spark, self.index_dir, rest)
         return {
             "query": query,
             "total_results": total,

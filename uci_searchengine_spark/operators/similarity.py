@@ -963,7 +963,7 @@ def mine_bitext(
     all-pairs oracle path). Returns (id_a, id_b, cos, margin),
     margins and cosines rounded for engine-order determinism."""
 
-    def _prep(df, side):
+    def _normed(df, side):
         v = F.transform(vec_col, lambda x: x.cast("double"))
         n = F.sqrt(
             F.aggregate(
@@ -976,8 +976,8 @@ def mine_bitext(
             F.col(id_col).alias(f"i{side}"), v.alias(f"v{side}")
         ).withColumn(f"n{side}", n)
 
-    a = _prep(emb_a, "a")
-    b = _prep(emb_b, "b")
+    a = _normed(emb_a, "a")
+    b = _normed(emb_b, "b")
     if candidates is None:
         pairs = a.crossJoin(b)
     else:

@@ -88,29 +88,56 @@ def load_excl(
     return t if t.size else None
 
 
-def apply_per_bucket(seg: DataFrame, excl, make_fn, schema) -> DataFrame:
-    """groupBy(bucket).applyInPandas with tombstone delivery: the common
-    path closes the driver exclusion array (or None) into the scoring fn;
-    a BucketedExcl cogroups the exclusion relation on the SAME bucket key
-    so each task receives only its bucket's ids — constant driver memory
-    at any tombstone count.
+def apply_per_bucket(
+    seg: DataFrame,
+    excl,
+    make_fn,
+    schema,
+    incl: "DataFrame | None" = None,
+    bucket_size: int = 0,
+) -> DataFrame:
+    """groupBy(bucket).applyInPandas with tombstone and filter delivery:
+    the common path closes the driver exclusion array (or None) into the
+    scoring fn; a Spark relation of ids is keyed on the SAME bucket grid
+    and cogrouped, so each task receives only its bucket's ids — constant
+    driver memory at any tombstone count or filter size.
 
     ``make_fn(local_excl) -> (key, seg_pdf) -> pdf`` builds the scoring
-    fn for one bucket's (possibly None) sorted exclusion ids."""
-    if isinstance(excl, BucketedExcl):
+    fn for one bucket's (possibly None) sorted exclusion ids.
 
-        def fn2(key, seg_pdf, tomb_pdf):
-            loc = None
-            if len(tomb_pdf):
-                loc = np.unique(tomb_pdf["doc_id"].to_numpy().astype(np.int64))
-            return make_fn(loc)(key, seg_pdf)
-
-        return (
-            seg.groupBy("bucket")
-            .cogroup(excl.df.groupBy("bucket"))
-            .applyInPandas(fn2, schema=schema)
+    ``incl`` (filter context): a ``doc_id`` relation of ALLOWED docs,
+    keyed on ``bucket_size``; the fn gets the bucket's sorted allowed
+    ids as keyword ``incl`` — empty when the bucket has none, which
+    allows nothing (applyInPandas takes two positional parameters, so
+    the optional third one is keyword-only). A BucketedExcl folds into
+    it by anti-join, so at most one relation is cogrouped."""
+    bucketed = isinstance(excl, BucketedExcl)
+    if incl is None and not bucketed:
+        return seg.groupBy("bucket").applyInPandas(make_fn(excl), schema=schema)
+    side = excl.df if bucketed else None
+    if incl is not None:
+        if bucketed:
+            incl = incl.join(side.select("doc_id"), "doc_id", "left_anti")
+        doc = F.col("doc_id").cast("long")
+        side = incl.select(
+            (doc / F.lit(bucket_size)).cast("long").alias("bucket"),
+            doc.alias("doc_id"),
         )
-    return seg.groupBy("bucket").applyInPandas(make_fn(excl), schema=schema)
+    # the task closure must capture no relation — only plain values
+    filtered, arr = incl is not None, None if bucketed else excl
+
+    def fn2(key, seg_pdf, side_pdf):
+        ids = np.unique(side_pdf["doc_id"].to_numpy().astype(np.int64))
+        if filtered:
+            return make_fn(arr)(key, seg_pdf, incl=ids)
+        return make_fn(ids if ids.size else None)(key, seg_pdf)
+
+    return (
+        seg.groupBy("bucket")
+        .cogroup(side.groupBy("bucket"))
+        .applyInPandas(fn2, schema=schema)
+    )
+
 
 _TOPK_SCHEMA = T.StructType(
     [
@@ -616,61 +643,44 @@ def _topk_over_segments(
     boosts: "dict[str, float] | None" = None,
     min_match: int = 1,
     transform=None,
+    incl: "DataFrame | None" = None,
 ) -> DataFrame:
     """Scoring tail shared by the top-k scorers and serving.Searcher:
     per-bucket block-max scoring over an (already pruned, df-resolved)
     segment relation, then global top-k. ``min_match`` and
     ``transform(bucket) -> (mul, add)`` (a bucket's per-doc score
     transform, e.g. read from a doc-values plane) pass through to the
-    OR kernel ``_score_bucket``."""
+    OR kernel ``_score_bucket``; ``incl`` restricts eligibility to a
+    ``doc_id`` relation of allowed docs (``apply_per_bucket``)."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
     n_docs = meta.n_docs
     avgdl, bucket_size = meta.avgdl, meta.bucket_size
 
     def make_fn(excl_local):
-        def score_fn(key, seg_pdf):
+        def score_fn(key, seg_pdf, *, incl=None):
             if not len(seg_pdf):
                 return _empty_topk()
             idf_map = _idf_map(n_docs, seg_pdf, boosts)
             if mode == "and":
                 return _score_bucket_and(
-                    seg_pdf, idf_map, avgdl, bucket_size, n_terms, k, excl=excl_local
+                    seg_pdf, idf_map, avgdl, bucket_size, n_terms, k,
+                    excl=excl_local, incl=incl,
                 )
             mul, add = (None, None)
             if transform is not None:
                 mul, add = transform(int(seg_pdf["bucket"].iloc[0]))
             return _score_bucket(
                 seg_pdf, idf_map, avgdl, bucket_size, k, excl=excl_local,
-                min_match=min_match, mul=mul, add=add,
+                incl=incl, min_match=min_match, mul=mul, add=add,
             )
 
         return score_fn
 
-    per_bucket = apply_per_bucket(seg, excl, make_fn, _TOPK_SCHEMA)
+    per_bucket = apply_per_bucket(
+        seg, excl, make_fn, _TOPK_SCHEMA, incl=incl, bucket_size=bucket_size
+    )
     return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-_TOPK_COUNT_SCHEMA = T.StructType(
-    [
-        T.StructField("bucket", T.LongType(), False),
-        T.StructField("n_matched", T.LongType(), False),
-        T.StructField(
-            "top",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        # neg_score first: sort_array(asc) then yields
-                        # (score desc, doc_id asc) — the ranking contract
-                        T.StructField("neg_score", T.DoubleType(), False),
-                        T.StructField("doc_id", T.LongType(), False),
-                    ]
-                )
-            ),
-            False,
-        ),
-    ]
-)
 
 
 _TOPK_DOCS_SCHEMA = T.StructType(
@@ -682,6 +692,8 @@ _TOPK_DOCS_SCHEMA = T.StructType(
             T.ArrayType(
                 T.StructType(
                     [
+                        # neg_score first: sort_array(asc) then yields
+                        # (score desc, doc_id asc) — the ranking contract
                         T.StructField("neg_score", T.DoubleType(), False),
                         T.StructField("doc_id", T.LongType(), False),
                         T.StructField("url", T.StringType(), True),
@@ -783,6 +795,32 @@ def fetch_bucket_docs(
     return docs
 
 
+def _docs_dirs(index_dir: str) -> list[str]:
+    """The doc-store dir of every generation, oldest first."""
+    from uci_searchengine_spark.operators.index_build import generation_dirs
+
+    return [os.path.join(d, "docs") for d in generation_dirs(index_dir)]
+
+
+def fetch_winner_docs(
+    index_dir: str,
+    bucket_size: int,
+    ids: list[int],
+    lowered: list[str],
+    pf_cache: "dict | None" = None,
+) -> dict[int, tuple[str, str, str]]:
+    """Driver-side doc-store fetch for ≤k winners from any buckets: one
+    ``fetch_bucket_docs`` per bucket they fall in (never a join)."""
+    dirs = _docs_dirs(index_dir)
+    by_bucket: dict[int, list[int]] = {}
+    for d in ids:
+        by_bucket.setdefault(int(d) // bucket_size, []).append(int(d))
+    docs: dict[int, tuple[str, str, str]] = {}
+    for bucket, bids in by_bucket.items():
+        docs.update(fetch_bucket_docs(dirs, bucket, bids, lowered, pf_cache))
+    return docs
+
+
 def make_envelope_fn(
     meta: IndexMeta,
     docs_dirs: list[str],
@@ -797,8 +835,9 @@ def make_envelope_fn(
     (``topk_count_docs``) and the task-local path
     (``operators.local_search``) — one code path, so the two plans are
     rank- and byte-identical by construction. Returns
-    ``make_fn(excl_local) -> (key, seg_pdf) -> pdf`` in the
-    ``apply_per_bucket`` shape.
+    ``make_fn(excl_local) -> (key, seg_pdf, *, incl=None) -> pdf`` in the
+    ``apply_per_bucket`` shape; ``incl`` is the bucket's sorted allowed
+    ids under a filter (None: no filter).
 
     ``with_docs=False`` skips the per-bucket doc-store fetch (url/title/
     snippet come back None): the local path scores all buckets first and
@@ -809,7 +848,7 @@ def make_envelope_fn(
     avgdl, bucket_size = meta.avgdl, meta.bucket_size
 
     def make_fn(excl_local):
-        def fn(key, seg_pdf):
+        def fn(key, seg_pdf, *, incl=None):
             empty = pd.DataFrame(
                 {
                     "bucket": pd.Series([], dtype="int64"),
@@ -823,12 +862,12 @@ def make_envelope_fn(
             if mode == "and":
                 pdf, n = _score_bucket_and(
                     seg_pdf, idf_map, avgdl, bucket_size, n_terms, k,
-                    excl=excl_local, count_matches=True,
+                    excl=excl_local, count_matches=True, incl=incl,
                 )
             else:
                 pdf, n = _score_bucket(
                     seg_pdf, idf_map, avgdl, bucket_size, k,
-                    excl=excl_local, count_matches=True,
+                    excl=excl_local, incl=incl, count_matches=True,
                 )
             if not n:
                 return empty
@@ -873,6 +912,7 @@ def topk_count_docs(
     n_terms: int | None = None,
     excl: "np.ndarray | BucketedExcl | None" = None,
     boosts: "dict[str, float] | None" = None,
+    incl: "DataFrame | None" = None,
 ) -> tuple[list[dict], int]:
     """The WHOLE search envelope from ONE Spark action (one collect;
     adaptive execution runs each of its two shuffles as its own job, so
@@ -886,17 +926,19 @@ def topk_count_docs(
     verification already uses), never a join, never a second action.
     Returns (rows, total): rows ordered (score desc, doc_id asc) with
     url/title/snippet attached, snippets under the reference display
-    rule (raw query forms — bm25.snippet_text)."""
-    from uci_searchengine_spark.operators.index_build import generation_dirs
-
+    rule (raw query forms — bm25.snippet_text). ``incl``: filter
+    context, a ``doc_id`` relation of the allowed docs — hits and total
+    count only those (``apply_per_bucket``)."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    docs_dirs = [os.path.join(d, "docs") for d in generation_dirs(index_dir)]
     make_fn = make_envelope_fn(
-        meta, docs_dirs, [t.lower() for t in display_terms], k, mode, n_terms,
-        boosts=boosts,
+        meta, _docs_dirs(index_dir), [t.lower() for t in display_terms], k,
+        mode, n_terms, boosts=boosts,
     )
-    per_bucket = apply_per_bucket(seg, excl, make_fn, _TOPK_DOCS_SCHEMA)
+    per_bucket = apply_per_bucket(
+        seg, excl, make_fn, _TOPK_DOCS_SCHEMA, incl=incl,
+        bucket_size=meta.bucket_size,
+    )
     row = per_bucket.agg(
         F.coalesce(F.sum("n_matched"), F.lit(0)).alias("total"),
         F.slice(
