@@ -6,11 +6,12 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from uci_searchengine_spark.schema import TESTDATA_TABLES  # noqa: E402

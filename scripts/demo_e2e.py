@@ -5,7 +5,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from uci_searchengine_spark.session import get_spark
 from uci_searchengine_spark.sources.synth import synth_pages
@@ -13,7 +14,7 @@ from uci_searchengine_spark.operators.index_build import build_index, build_metr
 from uci_searchengine_spark.operators.bm25 import search, score_naive
 from uci_searchengine_spark.operators.wand import score_wand
 
-IDX = "/root/repo/_data/verify_index"
+IDX = os.path.join(ROOT, "_data", "verify_index")
 shutil.rmtree(IDX, ignore_errors=True)
 
 spark = get_spark(master="local[4]", shuffle_partitions=8)

@@ -10,9 +10,11 @@ the corpus staying fixed — both engines encode/score with the same
 literals — so regeneration is only needed to keep the books
 REPRESENTATIVE of the data, never for the gate to pass."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from uci_searchengine_spark.session import get_spark  # noqa: E402
 from uci_searchengine_spark.operators.similarity import pq_codebooks  # noqa: E402
@@ -26,7 +28,8 @@ def main():
     books = pq_codebooks(emb, m=8, k=16)
     m, k, dsub = books.shape
     with open(
-        "/root/repo/uci_searchengine_spark/operators/pq_gate_books.py", "w"
+        os.path.join(ROOT, "uci_searchengine_spark", "operators", "pq_gate_books.py"),
+        "w",
     ) as f:
         f.write(
             '"""Pinned PQ codebooks for the cross-engine pq_ann gate.\n\n'

@@ -76,15 +76,23 @@ def _build_lifecycle(spark, tmp_path, positions=False):
     return d
 
 
+@pytest.fixture(scope="module")
+def lifecycle(spark, tmp_path_factory):
+    """One lifecycle index for the module, built once. Read-only: every
+    test merges or compacts it into its own tmp_path (a test that must
+    write into it copies the directory first)."""
+    return _build_lifecycle(spark, tmp_path_factory.mktemp("lifecycle"))
+
+
 @pytest.mark.spark
 class TestMerge:
-    def test_merge_equals_compact(self, spark, tmp_path):
+    def test_merge_equals_compact(self, spark, tmp_path, lifecycle):
         from uci_searchengine_spark.operators.compact import compact_index
         from uci_searchengine_spark.operators.index_build import IndexMeta
         from uci_searchengine_spark.operators.merge import merge_generations
         from uci_searchengine_spark.operators.wand import score_wand
 
-        src = _build_lifecycle(spark, tmp_path)
+        src = lifecycle
         md = str(tmp_path / "merged")
         cd = str(tmp_path / "compacted")
         mmeta = merge_generations(spark, src, md)
@@ -108,7 +116,7 @@ class TestMerge:
             for (_, sa), (_, sb) in zip(a, b):
                 assert math.isclose(sa, sb, rel_tol=1e-9), (q, mode)
 
-    def test_merged_flat_plane(self, spark, tmp_path):
+    def test_merged_flat_plane(self, spark, tmp_path, lifecycle):
         """The merged postings_flat plane agrees with the segments:
         naive ≡ wand on the merged index, and the cold-path envelope's
         match_count works."""
@@ -120,7 +128,7 @@ class TestMerge:
         from uci_searchengine_spark.operators.serving import Searcher
         from uci_searchengine_spark.operators.wand import score_wand
 
-        src = _build_lifecycle(spark, tmp_path)
+        src = lifecycle
         md = str(tmp_path / "merged")
         merge_generations(spark, src, md)
         for q, mode in QUERIES:
@@ -140,14 +148,14 @@ class TestMerge:
             r["url"] for r in srch["results"]
         ]
 
-    def test_merge_boolean_phrase_and_envelope(self, spark, tmp_path):
+    def test_merge_boolean_phrase_and_envelope(self, spark, tmp_path, lifecycle):
         from uci_searchengine_spark.operators.boolean import boolean_search
         from uci_searchengine_spark.operators.compact import compact_index
         from uci_searchengine_spark.operators.merge import merge_generations
         from uci_searchengine_spark.operators.phrase import phrase_search
         from uci_searchengine_spark.operators.serving import Searcher
 
-        src = _build_lifecycle(spark, tmp_path)
+        src = lifecycle
         md = str(tmp_path / "merged")
         cd = str(tmp_path / "compacted")
         merge_generations(spark, src, md)
@@ -206,13 +214,13 @@ class TestMerge:
                 (mu[r["doc_id"]], r["n_occ"], r["score"]) for r in via_doc
             ], phrase
 
-    def test_merge_idempotent_resume(self, spark, tmp_path):
+    def test_merge_idempotent_resume(self, spark, tmp_path, lifecycle):
         """Re-running the merge skips every committed task: no data file
         is rewritten (mtime-stable), results unchanged."""
         from uci_searchengine_spark.operators.merge import merge_generations
         from uci_searchengine_spark.operators.wand import score_wand
 
-        src = _build_lifecycle(spark, tmp_path)
+        src = lifecycle
         md = str(tmp_path / "merged")
         merge_generations(spark, src, md)
         before = {}
@@ -353,7 +361,7 @@ class TestAppendAfterMerge:
 
 @pytest.mark.spark
 class TestMergeSegSplit:
-    def test_merge_seg_split_equivalent(self, spark, tmp_path):
+    def test_merge_seg_split_equivalent(self, spark, tmp_path, lifecycle):
         """seg_split>1 (shard ≫ task memory): bucket-striped merge tasks
         write fragment files with fragment-local df; queries aggregate
         df in-plan (meta.seg_split contract) — results identical to the
@@ -364,7 +372,7 @@ class TestMergeSegSplit:
         from uci_searchengine_spark.operators.phrase import phrase_search
         from uci_searchengine_spark.operators.wand import score_wand
 
-        src = _build_lifecycle(spark, tmp_path)
+        src = lifecycle
         m1 = str(tmp_path / "m1")
         m2 = str(tmp_path / "m2")
         merge_generations(spark, src, m1)

@@ -93,10 +93,11 @@ class TestTombstones:
 
 @pytest.mark.spark
 class TestBucketedTombstones:
-    """Past DRIVER_CAP the scorers cogroup the bucketed tombstone relation
-    instead of shipping a driver array — results must be identical on
-    every query path. Exercised by lowering the cap to 1 (any delete set
-    of ≥2 ids takes the cogrouped path)."""
+    """Past DRIVER_CAP no driver array is shipped: the top-k scorers
+    cogroup the bucketed tombstone relation, and the search envelope's
+    range tasks read the tombstone files with a doc_id range filter —
+    results must be identical on every query path. Exercised by lowering
+    the cap to 1 (any delete set of ≥2 ids takes those paths)."""
 
     @pytest.fixture()
     def low_cap(self):
@@ -116,6 +117,9 @@ class TestBucketedTombstones:
         meta = IndexMeta.load(index_tomb)
         e = load_excl(index_tomb, spark, meta.bucket_size)
         assert isinstance(e, BucketedExcl)
+        # the cogroup relation is built only when a scorer consumes it
+        assert "df" not in vars(e)
+        assert sorted(r.doc_id for r in e.df.collect()) == [0, 1]
         # without spark, caller still gets the exact driver array
         import numpy as np
 
@@ -123,9 +127,11 @@ class TestBucketedTombstones:
         assert isinstance(arr, np.ndarray) and arr.tolist() == [0, 1]
 
     def test_all_paths_match_driver_array(self, spark, index_tomb, oracle_small, low_cap):
-        """or / and / phrase / boolean / envelope / filtered: cogrouped
-        exclusion (folded into the allowed set by anti-join under a
-        filter) ≡ driver-array exclusion ≡ oracle-minus-deleted."""
+        """or / and / phrase / boolean / filtered: cogrouped exclusion
+        (folded into the allowed set by anti-join under a filter) ≡
+        driver-array exclusion ≡ oracle-minus-deleted; envelope and
+        site: envelope: tombstone files read per range by the
+        distributed plan's tasks ≡ the driver array on the local plan."""
         from uci_searchengine_spark.operators import tombstones
         from uci_searchengine_spark.operators.boolean import boolean_search
         from uci_searchengine_spark.operators.filtered import filtered_topk
@@ -147,6 +153,8 @@ class TestBucketedTombstones:
             "doc_id long",
         )
 
+        plans = []
+
         def run_all():
             out = {}
             out["or"] = [
@@ -167,10 +175,12 @@ class TestBucketedTombstones:
                     spark, index_tomb, "+arbak stop1 -stop9", 10
                 ).collect()
             ]
-            env = Searcher(spark, index_tomb).search(q, per_page=5)
+            s = Searcher(spark, index_tomb)
+            env = s.search(q, per_page=5)
             out["env"] = (env["total_results"], [r["url"] for r in env["results"]])
-            env = Searcher(spark, index_tomb).search(f"{q} site:{host}")
+            env = s.search(f"{q} site:{host}")
             out["site"] = (env["total_results"], env["results"])
+            plans.append(s.last_plan)
             out["filtered"] = [
                 (r["doc_id"], round(r["score"], 9))
                 for r in filtered_topk(spark, index_tomb, q, allowed, 10).collect()
@@ -191,3 +201,4 @@ class TestBucketedTombstones:
         tombstones.DRIVER_CAP = 10_000_000
         arr = run_all()  # normal driver-array path
         assert cog == arr
+        assert plans == ["spark", "local"]

@@ -21,7 +21,9 @@ class as manifest lists); each index then scores its own buckets with
 its own block-max metadata — bounds stay admissible against the global
 avgdl through the existing per-generation inflation (gen_avgdl =
 that index's build avgdl). Union of per-index bounded top-k, global
-TakeOrderedAndProject. No cross-index shuffle of postings, ever.
+TakeOrderedAndProject (``federated_topk``) or a driver merge of the
+members' envelopes (``federated_envelope``). No cross-index shuffle of
+postings, ever.
 """
 
 from __future__ import annotations
@@ -49,14 +51,14 @@ def _global_stats(metas: "list[IndexMeta]") -> tuple[int, float]:
     return n, total_len / n
 
 
-def _member_segments(
-    spark: SparkSession, index_dirs: "list[str]", query: str
-) -> "tuple[list[str], list[tuple[str, IndexMeta, DataFrame]]]":
+def _union_stats(index_dirs: "list[str]", query: str):
     """Shared federation prelude: validate the members, analyze the
-    query once, and return each member's pruned segment relation with
-    the UNION-corpus statistics substituted in (global df on rows,
-    per-index avgdl preserved as gen_avgdl so block-max bounds inflate
-    admissibly, meta rewritten to global n_docs/avgdl)."""
+    query once, and resolve the UNION-corpus statistics. Returns
+    (terms, member metas, n_docs, avgdl, df per term); the per-term df
+    totals are driver-side term/df scans of each member's pruned files
+    (``local_search.term_dfs``), ≤ n_query_terms rows per member."""
+    from uci_searchengine_spark.operators.local_search import term_dfs
+
     if not index_dirs:
         raise ValueError("federation needs at least one index dir")
     metas = [IndexMeta.load(d) for d in index_dirs]
@@ -66,29 +68,27 @@ def _member_segments(
             f"constants; got {[(m.stem, m.k1, m.b) for m in metas]}"
         )
     terms = terms_for_index(metas[0], query)
+    df_global: dict[str, int] = {t: 0 for t in terms}
+    for d, m in zip(index_dirs, metas):
+        for t, df in term_dfs(d, m, terms).items():
+            df_global[t] += df
+    return terms, metas, *_global_stats(metas), df_global
+
+
+def _member_segments(
+    spark: SparkSession, index_dirs: "list[str]", query: str
+) -> "tuple[list[str], list[tuple[str, IndexMeta, DataFrame]]]":
+    """Each member's pruned segment relation with the UNION-corpus
+    statistics substituted in (global df on rows, per-index avgdl
+    preserved as gen_avgdl so block-max bounds inflate admissibly, meta
+    rewritten to global n_docs/avgdl)."""
+    terms, metas, n_docs, avgdl, df_global = _union_stats(index_dirs, query)
     if not terms:
         return [], []
-    n_docs, avgdl = _global_stats(metas)
-
-    # pruned per-index relations (shard + term pruning, per-index df
-    # resolved onto rows by prune_relation's multi-gen/split logic)
-    segs = [
-        prune_relation(load_segments(spark, d), m, terms)
-        for d, m in zip(index_dirs, metas)
-    ]
-    # exact global df: tiny bounded exchange (≤ |terms| rows per index)
-    df_global: dict[str, int] = {t: 0 for t in terms}
-    for seg in segs:
-        for r in (
-            seg.select("term", "df_global")
-            .groupBy("term")
-            .agg(F.max("df_global").alias("df"))
-            .collect()
-        ):
-            df_global[r["term"]] += int(r["df"])
-
     members = []
-    for d, m, seg in zip(index_dirs, metas, segs):
+    for d, m in zip(index_dirs, metas):
+        # pruned relation (shard + term pruning)
+        seg = prune_relation(load_segments(spark, d), m, terms)
         # global df onto rows as a when-chain keyed on term (terms are
         # few; the pruned relation only contains these terms)
         df_expr = None
@@ -158,9 +158,10 @@ def federated_envelope(
     """The reference search envelope over a federation: doc-attached
     results (url/title/snippet/score + the member label each hit came
     from) and the EXACT union match count, one topk_count_docs job per
-    member. Cross-member ordering is (score desc, url asc) — a total,
-    engine-independent order (doc ids are index-local and urls are
-    globally unique by the crawler's dedup invariant).
+    member (one scatter-gather stage each). Cross-member ordering is
+    (score desc, url asc) — a total, engine-independent order (doc ids
+    are index-local and urls are globally unique by the crawler's dedup
+    invariant).
 
     PRECONDITION — member indexes must be url-DISJOINT. ``total_results``
     sums per-member match counts, which double-counts a url present in
@@ -176,8 +177,8 @@ def federated_envelope(
     labels = labels or [str(i) for i in range(len(index_dirs))]
     if len(labels) != len(index_dirs):
         raise ValueError("labels must match index_dirs")
-    terms, members = _member_segments(spark, index_dirs, query)
-    if not members:
+    terms, metas, n_docs, avgdl, dfs = _union_stats(index_dirs, query)
+    if not terms:
         return {
             "query": query,
             "total_results": 0,
@@ -190,16 +191,11 @@ def federated_envelope(
     disp = query.split()
     total = 0
     rows: list[dict] = []
-    for lbl, (d, meta_g, seg) in zip(labels, members):
+    for lbl, d, m in zip(labels, index_dirs, metas):
         rows_i, total_i = topk_count_docs(
-            seg,
-            meta_g,
-            d,
-            disp,
-            k=page * per_page,
-            mode=mode,
-            n_terms=len(terms),
-            excl=load_excl(d, spark, meta_g.bucket_size),
+            spark, d, m, disp, terms, k=page * per_page, mode=mode,
+            excl=load_excl(d, spark, m.bucket_size),
+            stats=(n_docs, avgdl, dfs),
         )
         total += total_i
         for r in rows_i:

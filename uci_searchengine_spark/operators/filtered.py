@@ -10,14 +10,18 @@ them into an allowed set and runs its one envelope path with it.
 a join against an allowlist...).
 
 There is no filtered scorer here: an allowed set is one more input of
-the shared scoring tails. The distributed plan keys the relation on the
+the shared scoring tails. The Searcher's filters pass ``allowed_ids``,
+one numpy predicate over (doc_id, authority) and doc-value frames: the
+task-local plan evaluates it over resident whole-index frames into a
+sorted driver array, each range task of the distributed envelope over
+its own buckets of the doc store and doc-value planes
+(``wand.topk_count_docs``). ``filtered_topk`` keys its relation on the
 bucket grid and cogroups it per scoring bucket
 (``wand.apply_per_bucket``; tombstones past the driver cap fold in by
-anti-join), the task-local plan passes a sorted driver array. Either
-way the kernel masks at accumulation time — before θ ever tightens — so
-block-max pruning stays admissible for the post-filter top-k (a
-post-scoring filter would drop filtered-in docs that unfiltered docs had
-pruned away).
+anti-join). Either way the kernel masks at accumulation time — before
+θ ever tightens — so block-max pruning stays admissible for the
+post-filter top-k (a post-scoring filter would drop filtered-in docs
+that unfiltered docs had pruned away).
 
 Reference: no filtered search exists in UCI-SearchEngine; breadth
 extension with Lucene semantics.
@@ -25,12 +29,19 @@ extension with Lucene semantics.
 
 from __future__ import annotations
 
+import os
 import re
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from uci_searchengine_spark.operators.bm25 import terms_for_index
-from uci_searchengine_spark.operators.index_build import IndexMeta
+from uci_searchengine_spark.operators.index_build import (
+    IndexMeta,
+    generation_dirs,
+    parquet_files,
+)
 from uci_searchengine_spark.operators.wand import (
     _topk_over_segments,
     load_excl,
@@ -97,6 +108,74 @@ def in_range(v, lo, hi, lo_inclusive, hi_inclusive, m):
     if hi is not None:
         m = m & ((v <= hi) if hi_inclusive else (v < hi))
     return m
+
+
+def _read(files: list[str], cols: list[str]) -> pd.DataFrame:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if not files:
+        return pd.DataFrame({c: [] for c in cols})
+    return pa.concat_tables(
+        [pq.read_table(f, columns=cols) for f in files]
+    ).to_pandas()
+
+
+def read_authority(
+    index_dir: str, buckets: "tuple[int, int] | None" = None
+) -> pd.DataFrame:
+    """(doc_id, authority) of every generation's doc store — or of its
+    buckets ``[b0, b1)`` — off its two cheapest columns: the ``site:``
+    filter's input. Authority = everything between ``scheme://`` and the
+    next ``/``, ``?`` or ``#``, lowercased (port kept — the crawler's own
+    domain rule, and Spark's parse_url AUTHORITY)."""
+    files = [
+        f for d in generation_dirs(index_dir)
+        for f in parquet_files(os.path.join(d, "docs"), buckets)
+    ]
+    pdf = _read(files, ["doc_id", "url"])
+    pdf["authority"] = (
+        pdf["url"].astype(object).str.extract(r"^[a-zA-Z][\w+.-]*://([^/?#]+)")[0]
+        .str.lower()
+    )
+    return pdf[["doc_id", "authority"]]
+
+
+def read_doc_values(
+    index_dir: str, field: str, buckets: "tuple[int, int] | None" = None
+) -> pd.DataFrame:
+    """(doc_id, value) of one doc-values plane — or of its buckets
+    ``[b0, b1)``: a range filter's input."""
+    from uci_searchengine_spark.operators.docvalues import dv_dir
+
+    files = parquet_files(dv_dir(index_dir, field), buckets)
+    return _read(files, ["doc_id", "value"])
+
+
+def allowed_ids(
+    hosts: list[str], ranges: list[tuple], authority, values
+) -> np.ndarray:
+    """Sorted ids of the docs that pass every ``site:`` / range filter
+    (hosts OR together, ranges AND; a doc missing from a range's plane
+    does not match — ES rule). ``authority()`` gives the (doc_id,
+    authority) frame and ``values(field)`` a plane's (doc_id, value)
+    frame: the Searcher's resident whole-index frames on the task-local
+    plan, one range's buckets in a distributed envelope task. Hosts come
+    lowercased from ``parse_site_filters``."""
+    sets = []
+    if hosts:
+        auth = authority()
+        hit = auth["authority"].isin(hosts).to_numpy()
+        sets.append(auth["doc_id"].to_numpy()[hit])
+    for fld, *bounds in ranges:
+        dv = values(fld)
+        v = dv["value"].to_numpy()
+        m = in_range(v, *bounds, np.ones(len(v), dtype=bool))
+        sets.append(dv["doc_id"].to_numpy()[m])
+    allowed = np.unique(sets[0]).astype(np.int64)
+    for ids in sets[1:]:
+        allowed = np.intersect1d(allowed, ids.astype(np.int64))
+    return allowed
 
 
 def filtered_topk(

@@ -1771,6 +1771,24 @@ def generation_dirs(index_dir: str) -> list[str]:
     return out
 
 
+def parquet_files(root: str, buckets: "tuple[int, int] | None" = None) -> list[str]:
+    """Sorted paths of the ``*.parquet`` files under ``root`` ([] if it
+    is no dir): its own, and those of its ``bucket=<b>`` partition dirs —
+    all of them, or b in ``[b0, b1)`` when ``buckets`` is given."""
+    if not os.path.isdir(root):
+        return []
+    out = []
+    for name in sorted(os.listdir(root)):
+        p = os.path.join(root, name)
+        if name.endswith(".parquet"):
+            out.append(p)
+        elif name.startswith("bucket=") and (
+            buckets is None or buckets[0] <= int(name[7:]) < buckets[1]
+        ):
+            out += parquet_files(p)
+    return out
+
+
 def generation_avgdl(gen_dir: str) -> float:
     """The avgdl this generation's block_max bounds were computed with
     (its own stage-docs manifest — the root meta gets re-blended on

@@ -4,16 +4,19 @@ At serving time a query's pruned input is tiny no matter how big the
 corpus is: partition pruning keeps only the query terms' ``shard=``
 dirs, and the row filter keeps only those terms' posting rows. When
 those pruned bytes fit ONE task's budget, scheduling a distributed job
-buys nothing — the whole query is one task — and costs a full Spark
-job launch + Python-worker round-trip per query (~hundreds of ms). This
-module runs the IDENTICAL per-bucket envelope closure
-(``wand.make_envelope_fn`` — shared, not copied) over a pyarrow scan of
-the same pruned files, in-process: the same decision AQE makes when it
-replaces an exchange with a local read once the data is provably small.
+buys nothing — the whole query is one task — and costs a Spark job
+launch + Python-worker round-trip per query. This module scores the
+pruned frame of a pyarrow scan of those files in-process, as ONE doc-id
+range, with the range closure the distributed plan runs per task
+(``wand.make_envelope_fn`` — shared, not copied): the distributed plan
+is this plan, sharded into bucket ranges (``wand.topk_count_docs``),
+and both finish with ``wand.gather_envelope``.
 
 Rank/byte identity with the distributed plan is by construction (one
-closure) and asserted by tests/test_local_search.py across or/and
-modes, multi-generation appends, seg_split>1 fragments, and tombstones.
+closure, one range-independent accumulation order) and asserted by
+tests/test_local_search.py and tests/test_range_split.py across or/and
+modes, multi-generation appends, seg_split>1 fragments, tombstones and
+filters.
 
 The distributed plan remains the executor for head-term / analytic
 queries: ``serving.Searcher`` picks per query by the pruned shard
@@ -39,7 +42,22 @@ from uci_searchengine_spark.operators.index_build import (
     IndexMeta,
     generation_avgdl,
     generation_dirs,
+    parquet_files,
 )
+
+
+def _shard_files(index_dir: str, shards: "list[int] | None" = None) -> list[str]:
+    """Segment files of the ``shard=`` dirs ``shards`` (None = all),
+    every generation."""
+    out: list[str] = []
+    for d in generation_dirs(index_dir):
+        root = os.path.join(d, "segments")
+        if shards is not None:
+            names = [f"shard={s}" for s in shards]
+        else:
+            names = sorted(os.listdir(root)) if os.path.isdir(root) else []
+        out += [f for n in names for f in parquet_files(os.path.join(root, n))]
+    return out
 
 
 def pruned_shard_bytes(index_dir: str, shards: list[int]) -> int:
@@ -47,16 +65,18 @@ def pruned_shard_bytes(index_dir: str, shards: list[int]) -> int:
     dirs across all generations. The local/distributed decision input —
     an upper bound on what the local path will read (the term row filter
     only shrinks it)."""
-    total = 0
-    for d in generation_dirs(index_dir):
-        for s in shards:
-            p = os.path.join(d, "segments", f"shard={s}")
-            if not os.path.isdir(p):
-                continue
-            for fn in os.listdir(p):
-                if fn.endswith(".parquet"):
-                    total += os.path.getsize(os.path.join(p, fn))
-    return total
+    return sum(os.path.getsize(f) for f in _shard_files(index_dir, shards))
+
+
+def _sum_dfs(terms, dfs) -> dict[str, int]:
+    """The multi-fragment / multi-generation df rule outside the Spark
+    plan (``wand.prune_relation`` holds it there): a term's global df is
+    the sum of its rows' fragment-local ``df`` — exact, because the
+    pruned files hold each query term's ENTIRE posting list."""
+    out: dict[str, int] = {}
+    for t, d in zip(terms, dfs):
+        out[t] = out.get(t, 0) + int(d)
+    return out
 
 
 def read_pruned_segments_local(
@@ -64,18 +84,26 @@ def read_pruned_segments_local(
     meta: IndexMeta,
     terms: list[str],
     with_positions: bool = False,
+    buckets: "tuple[int, int] | None" = None,
+    dfs: "dict[str, int] | None" = None,
 ) -> pd.DataFrame:
     """pyarrow replica of ``wand.prune_relation`` over the same files:
     shard-dir (partition) pruning, term row filter, positional-plane
     column pruning (kept when ``with_positions`` — the phrase path),
     per-generation ``gen_avgdl``, and the identical multi-fragment/
     multi-generation df_global resolution (sum of fragment-local df per
-    term)."""
+    term). ``buckets`` = ``(b0, b1)`` keeps one bucket range's rows (a
+    distributed envelope task), whose df then comes from the driver as
+    ``dfs`` (``term_dfs``)."""
     import pyarrow as pa
     import pyarrow.dataset as pads
 
     shard_map = _wand._shards_for_terms(terms, meta.num_shards)
     shards = sorted(set(shard_map.values()))
+    filt = pads.field("term").isin(terms)
+    if buckets is not None:
+        bucket = pads.field("bucket")
+        filt = filt & (bucket >= buckets[0]) & (bucket < buckets[1])
     dirs = generation_dirs(index_dir)
     multi = len(dirs) > 1
     parts = []
@@ -91,9 +119,7 @@ def read_pruned_segments_local(
                 for c in ds.schema.names
                 if with_positions or c not in ("positions", "pos_block_off")
             ]
-            tbl = ds.to_table(
-                columns=cols, filter=pads.field("term").isin(terms)
-            )
+            tbl = ds.to_table(columns=cols, filter=filt)
             if multi:
                 tbl = tbl.append_column(
                     "gen_avgdl", pa.array([ga] * len(tbl), pa.float64())
@@ -102,14 +128,41 @@ def read_pruned_segments_local(
     if not parts:
         return pd.DataFrame()
     pdf = pa.concat_tables(parts, promote_options="default").to_pandas()
-    if getattr(meta, "seg_split", 1) > 1 or getattr(meta, "gens", 1) > 1:
-        # same rule as prune_relation: fragment-local df rows summed to
-        # the true global df — the pruned scan covers each term's ENTIRE
-        # posting list, so the sum is exact
-        pdf["df_global"] = (
-            pdf.groupby("term")["df"].transform("sum").astype("int64")
-        )
+    if dfs is None and (
+        getattr(meta, "seg_split", 1) > 1 or getattr(meta, "gens", 1) > 1
+    ):
+        dfs = _sum_dfs(pdf["term"], pdf["df"])
+    if dfs is not None:
+        pdf["df_global"] = pdf["term"].map(dfs).astype("int64")
     return pdf
+
+
+def term_dfs(index_dir: str, meta: IndexMeta, terms: list[str]) -> dict[str, int]:
+    """Global df of each query term present in the index: row ``df``
+    summed over the pruned files of every generation and fragment — the
+    df the distributed envelope resolves on the driver and ships to its
+    range tasks. A footer-pruned read of the term/df columns (row groups
+    whose term range holds a query term): the driver runs it every
+    query, and a pyarrow dataset scan there held ~10 MB more peak RSS."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    shards = sorted(set(_wand._shards_for_terms(terms, meta.num_shards).values()))
+    want = pa.array(terms)
+    rows_t: list[str] = []
+    rows_df: list[int] = []
+    for f in _shard_files(index_dir, shards):
+        pf = pq.ParquetFile(f)
+        rgs = [
+            i for i, (lo, hi) in enumerate(_wand._row_group_ranges(pf, "term"))
+            if lo is None or any(lo <= t <= hi for t in terms)
+        ]
+        t = pf.read_row_groups(rgs, columns=["term", "df"], use_threads=False)
+        t = t.filter(pc.is_in(t["term"], value_set=want))
+        rows_t += t["term"].to_pylist()
+        rows_df += t["df"].to_pylist()
+    return _sum_dfs(rows_t, rows_df)
 
 
 def local_topk_count_docs(
@@ -124,56 +177,22 @@ def local_topk_count_docs(
     boosts: "dict[str, float] | None" = None,
     incl: "np.ndarray | None" = None,
 ) -> tuple[list[dict], int]:
-    """In-process twin of ``wand.topk_count_docs``: the SAME per-bucket
-    closure over the same pruned rows, buckets iterated with a pandas
-    groupby instead of applyInPandas, merged with the same
-    (neg_score, doc_id) order the Spark path's sort_array uses.
-    Returns (rows, total) in the identical shape. ``incl``: filter
-    context as the sorted driver array of allowed doc ids."""
+    """In-process twin of ``wand.topk_count_docs``: the SAME range
+    closure, called once over the whole pruned frame, then the same
+    ``gather_envelope`` (≤k winners' docs fetched once, through the
+    resident footer memo ``pf_cache``). Returns (rows, total) in the
+    identical shape. ``incl``: filter context as the sorted driver array
+    of allowed doc ids."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
     seg = read_pruned_segments_local(index_dir, meta, terms)
     if not len(seg):
         return [], 0
-    lowered = [t.lower() for t in display_terms]
-    # score every bucket docs-OFF: the doc-store fetch runs once, for the
-    # ≤k GLOBAL winners, instead of per bucket (the distributed closure
-    # fetches per bucket because its tasks are parallel — serially that
-    # would multiply the fetch cost by n_buckets)
-    fn = _wand.make_envelope_fn(
-        meta, [], lowered, k, mode, len(terms), with_docs=False,
-        boosts=boosts,
-    )(excl)
-    # serial bucket loop: measured faster than a thread pool here — the
-    # per-bucket glue is GIL-bound pandas, and the numpy decode slices
-    # are too small to amortize pool handoff
-    total = 0
-    top: list[dict] = []
-    for _, gpdf in seg.groupby("bucket", sort=False):
-        out = fn(None, gpdf.reset_index(drop=True), incl=incl)
-        if not len(out):
-            continue
-        total += int(out["n_matched"].iloc[0])
-        top.extend(out["top"].iloc[0])
-    top.sort(key=lambda t: (t["neg_score"], t["doc_id"]))
-    top = top[:k]
-    docs = _wand.fetch_winner_docs(
-        index_dir, meta.bucket_size, [t["doc_id"] for t in top], lowered,
-        pf_cache,
+    fn = _wand.make_envelope_fn(meta, k, mode, len(terms), boosts)(excl)
+    return _wand.gather_envelope(
+        index_dir, meta.bucket_size, [fn(None, seg, incl=incl)], k,
+        display_terms, pf_cache,
     )
-    rows = []
-    for t in top:
-        url, title, snip = docs.get(int(t["doc_id"]), (None, None, None))
-        rows.append(
-            {
-                "doc_id": int(t["doc_id"]),
-                "score": -float(t["neg_score"]),
-                "url": url,
-                "title": title,
-                "snippet": snip,
-            }
-        )
-    return rows, total
 
 
 def _merge_bucket_outputs(
@@ -321,24 +340,14 @@ def vocab_col_bytes(index_dir: str) -> int:
     import pyarrow.parquet as pq
 
     total = 0
-    for d in generation_dirs(index_dir):
-        seg_root = os.path.join(d, "segments")
-        if not os.path.isdir(seg_root):
-            continue
-        for shard_dir in sorted(os.listdir(seg_root)):
-            p = os.path.join(seg_root, shard_dir)
-            if not os.path.isdir(p):
-                continue
-            for fn in sorted(os.listdir(p)):
-                if not fn.endswith(".parquet"):
-                    continue
-                md = pq.ParquetFile(os.path.join(p, fn)).metadata
-                for rg in range(md.num_row_groups):
-                    row = md.row_group(rg)
-                    for ci in range(row.num_columns):
-                        col = row.column(ci)
-                        if col.path_in_schema in ("term", "df"):
-                            total += col.total_compressed_size
+    for f in _shard_files(index_dir):
+        md = pq.ParquetFile(f).metadata
+        for rg in range(md.num_row_groups):
+            row = md.row_group(rg)
+            for ci in range(row.num_columns):
+                col = row.column(ci)
+                if col.path_in_schema in ("term", "df"):
+                    total += col.total_compressed_size
     return total
 
 
@@ -348,22 +357,7 @@ def vocab_local(index_dir: str) -> pd.DataFrame:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    parts = []
-    for d in generation_dirs(index_dir):
-        seg_root = os.path.join(d, "segments")
-        if not os.path.isdir(seg_root):
-            continue
-        for shard_dir in sorted(os.listdir(seg_root)):
-            p = os.path.join(seg_root, shard_dir)
-            if not os.path.isdir(p):
-                continue
-            for fn in sorted(os.listdir(p)):
-                if fn.endswith(".parquet"):
-                    parts.append(
-                        pq.read_table(
-                            os.path.join(p, fn), columns=["term", "df"]
-                        )
-                    )
+    parts = [pq.read_table(f, columns=["term", "df"]) for f in _shard_files(index_dir)]
     if not parts:
         return pd.DataFrame({"term": [], "df": []})
     pdf = pa.concat_tables(parts).to_pandas()

@@ -7,10 +7,12 @@ segment/doc-store DataFrames ONCE and reuses them for every query —
 saving per-query meta reads, file listings, and schema inference that a
 bare ``score_wand(spark, index_dir, q)`` call repays each time.
 
-Per query the plan is unchanged: partition-pruned segment scan for the
-query terms' shards → per-bucket block-max scoring → global top-k —
-the pruning happens on the CACHED DataFrame's relation, so the same
-filters reach the same parquet scan.
+Per query: partition-pruned segment scan of the query terms' shards →
+block-max scoring of doc-id ranges → global top-k. The search envelope
+scores in-process or in one scatter-gather Spark stage
+(``_search_impl``); the relational surfaces (``top_k``) prune the
+CACHED segment DataFrame's relation, so the same filters reach the
+same parquet scan.
 """
 
 from __future__ import annotations
@@ -39,7 +41,7 @@ class Searcher:
     ``local_bytes_limit`` — per-query plan choice for ``search()``: when
     the query terms' pruned ``shard=`` dirs total at most this many
     on-disk bytes, the envelope executes in-process over a pyarrow scan
-    of the same files with the same per-bucket closure
+    of the same files with the same range closure
     (operators/local_search.py — AQE's localize-a-tiny-exchange decision
     applied to serving); above it, the distributed plan runs. 0 disables
     the local path."""
@@ -593,8 +595,8 @@ class Searcher:
         self, terms: list[str], excl, plan: str, docstore: bool = False
     ) -> bool:
         """Per-query local/distributed choice. A BucketedExcl exclusion
-        set (tombstones past the driver cap) is a Spark relation and
-        forces the distributed plan; otherwise "auto" compares the
+        set (tombstones past the driver cap: no driver array) forces the
+        distributed plan; otherwise "auto" compares the
         pruned shard dirs' on-disk bytes against ``local_bytes_limit``.
         ``docstore``: the local path also works over the doc store
         in-process (doc-store phrase verify, filter frames), a cost that
@@ -720,113 +722,25 @@ class Searcher:
         return expand_regexp(self.spark, self.index_dir, pattern)
 
     def _authority_frame(self):
-        """Resident (doc_id, authority) pandas frame off the doc store's
-        two cheapest columns — the task-local site: filter's input.
-        Authority = everything between ``scheme://`` and the next ``/``
-        (port kept — the crawler's own domain rule)."""
+        """Resident (doc_id, authority) frame of the whole doc store —
+        the task-local site: filter's input (filtered.read_authority)."""
         if getattr(self, "_auth_pdf", None) is None:
-            import os as _os
+            from uci_searchengine_spark.operators.filtered import read_authority
 
-            import pyarrow.parquet as pq
-
-            from uci_searchengine_spark.operators.index_build import (
-                generation_dirs,
-            )
-
-            parts = []
-            for d in generation_dirs(self.index_dir):
-                root = _os.path.join(d, "docs")
-                if not _os.path.isdir(root):
-                    continue
-                for bd in sorted(_os.listdir(root)):
-                    p = _os.path.join(root, bd)
-                    if not _os.path.isdir(p):
-                        continue
-                    for fn in sorted(_os.listdir(p)):
-                        if fn.endswith(".parquet"):
-                            parts.append(
-                                pq.read_table(
-                                    _os.path.join(p, fn),
-                                    columns=["doc_id", "url"],
-                                )
-                            )
-            import pandas as pd
-            import pyarrow as pa
-
-            pdf = (
-                pa.concat_tables(parts).to_pandas()
-                if parts
-                else pd.DataFrame({"doc_id": [], "url": []})
-            )
-            # stop at /, ? or # — 'https://host?q=1' has authority 'host'
-            # (same rule as Spark's parse_url AUTHORITY)
-            pdf["authority"] = (
-                pdf["url"].str.extract(r"^[a-zA-Z][\w+.-]*://([^/?#]+)")[0]
-                .str.lower()
-            )
-            self._auth_pdf = pdf[["doc_id", "authority"]]
+            self._auth_pdf = read_authority(self.index_dir)
         return self._auth_pdf
 
     def _dv_frame(self, field: str):
-        """Resident (doc_id, value) pandas frame of one doc-values
-        plane — the task-local range filter's input. Memoized per
-        field."""
-        import pyarrow.parquet as pq
-
-        from uci_searchengine_spark.operators.docvalues import dv_dir
+        """Resident (doc_id, value) frame of one doc-values plane — the
+        task-local range filter's input. Memoized per field."""
+        from uci_searchengine_spark.operators.filtered import read_doc_values
 
         cache = getattr(self, "_dv_pdfs", None)
         if cache is None:
             cache = self._dv_pdfs = {}
         if field not in cache:
-            cache[field] = pq.read_table(
-                dv_dir(self.index_dir, field), columns=["doc_id", "value"]
-            ).to_pandas()
+            cache[field] = read_doc_values(self.index_dir, field)
         return cache[field]
-
-    def _allowed(self, hosts: list[str], ranges: list[tuple], local: bool):
-        """The docs that pass every ``site:`` / range filter (hosts OR
-        together, ranges AND; a doc missing from a range's plane does
-        not match — ES rule): a sorted driver array from the resident
-        authority / doc-value frames on the local plan, a ``doc_id``
-        relation on the distributed plan. Both sides compare lowercased
-        authorities (parse_site_filters lowercases the hosts)."""
-        from uci_searchengine_spark.operators.docvalues import dv_dir
-        from uci_searchengine_spark.operators.filtered import in_range
-
-        if local:
-            import numpy as np
-
-            sets = []
-            if hosts:
-                auth = self._authority_frame()
-                hit = auth["authority"].isin(hosts).to_numpy()
-                sets.append(auth["doc_id"].to_numpy()[hit])
-            for fld, *bounds in ranges:
-                dv = self._dv_frame(fld)
-                v = dv["value"].to_numpy()
-                m = in_range(v, *bounds, np.ones(len(v), dtype=bool))
-                sets.append(dv["doc_id"].to_numpy()[m])
-            allowed = np.unique(sets[0]).astype(np.int64)
-            for ids in sets[1:]:
-                allowed = np.intersect1d(allowed, ids)
-            return allowed
-        rels = []
-        if hosts:
-            url = F.parse_url(F.col("url"), F.lit("AUTHORITY"))
-            rels.append(
-                self._docs.filter(F.lower(url).isin(hosts)).select("doc_id")
-            )
-        for fld, *bounds in ranges:
-            plane = self.spark.read.parquet(dv_dir(self.index_dir, fld))
-            rels.append(
-                plane.filter(in_range(F.col("value"), *bounds, F.lit(True)))
-                .select("doc_id")
-            )
-        allowed = rels[0]
-        for rel in rels[1:]:
-            allowed = allowed.join(rel, "doc_id", "left_semi")
-        return allowed
 
     def _vocab_raw(self):
         """Resident (term, df) pandas frame — shared input of the
@@ -915,15 +829,15 @@ class Searcher:
 
         Matching terms follow the index's analysis chain (stemmed iff the
         index is); snippets highlight the raw query forms (display rule).
-        The WHOLE envelope — hits, total_results, AND the doc-store
-        url/title/snippet — comes from ONE action: either one Spark
-        collect (wand.topk_count_docs — each scoring task reads its own
-        bucket's co-located docs for its local winners, no doc join, no
-        second action; adaptive execution still runs each of its
-        shuffles as its own job, ~3 jobs a query on one generation) or,
-        when the pruned scan fits one task
-        (``local_bytes_limit``), the identical closure run in-process
-        (local_search.local_topk_count_docs) with no job at all.
+        Hits and total_results come from one range-scoring closure
+        (wand.make_envelope_fn): when the pruned scan fits one task
+        (``local_bytes_limit``) it scores the whole pruned frame
+        in-process with no job at all
+        (local_search.local_topk_count_docs); otherwise one
+        scatter-gather stage runs it once per bucket range, one Spark
+        job with no shuffle (wand.topk_count_docs). Either way the
+        driver merges the ranges and fetches the ≤k winners' doc-store
+        url/title/snippet once (wand.gather_envelope).
         ``plan``: "auto" (bytes-based choice), "local", "spark".
 
         Wildcards: a ``stem*`` token expands against the vocabulary
@@ -942,12 +856,14 @@ class Searcher:
         (an unknown field raises); docs missing from the plane don't
         match (ES rule); multiple ranges and site: filters AND
         together. A filtered query runs the same envelope with the
-        allowed set (``_allowed``) as one more input — a sorted driver
-        array on the local plan, a relation cogrouped per bucket on the
-        distributed one — and takes the local plan only when the doc
-        store also fits ``local_bytes_limit``."""
+        allowed set as one more input (filtered.allowed_ids): a sorted
+        driver array from resident frames on the local plan, evaluated
+        by each range task over its own buckets on the distributed one;
+        it takes the local plan only when the doc store also fits
+        ``local_bytes_limit``."""
         from uci_searchengine_spark.operators.docvalues import dv_dir
         from uci_searchengine_spark.operators.filtered import (
+            allowed_ids,
             parse_range_filters,
             parse_site_filters,
         )
@@ -1043,16 +959,17 @@ class Searcher:
                 self.index_dir, self.meta, disp, terms,
                 k=page * per_page, mode=mode, excl=excl,
                 pf_cache=self._pf_cache, boosts=boosts,
-                incl=self._allowed(hosts, ranges, True) if filtered else None,
+                incl=allowed_ids(
+                    hosts, ranges, self._authority_frame, self._dv_frame
+                ) if filtered else None,
             )
         else:
             self.last_plan = "spark"
-            seg = _wand.prune_relation(self._segments, self.meta, terms)
             rows, total = _wand.topk_count_docs(
-                seg, self.meta, self.index_dir, disp,
-                k=page * per_page, mode=mode, n_terms=len(terms),
-                excl=excl, boosts=boosts,
-                incl=self._allowed(hosts, ranges, False) if filtered else None,
+                self.spark, self.index_dir, self.meta, disp, terms,
+                k=page * per_page, mode=mode, excl=excl, boosts=boosts,
+                filters=(hosts, ranges) if filtered else None,
+                pf_cache=self._pf_cache,
             )
         start = (page - 1) * per_page
         sel = rows[start : start + per_page]

@@ -14,7 +14,9 @@ the common case. Past the cap the scorers switch to the bucket-
 cogrouped exclusion relation (``bucketed_tombstones``): tombstones are
 keyed by the SAME doc-range bucket grid as the segments, so each
 scoring task cogroups its own bucket's exclusion ids — no driver
-materialization at any tombstone count (wand.apply_per_bucket).
+materialization at any tombstone count (wand.apply_per_bucket); the
+search envelope's range tasks read their doc-id range of the files
+(``load_tombstone_ids(index_dir, lo, hi)``).
 
 Reference: no delete path exists (crawled pages are append-only);
 breadth extension.
@@ -50,19 +52,20 @@ def delete_docs(index_dir: str, doc_ids) -> int:
     return tombstone_count_estimate(index_dir)
 
 
+def _files(index_dir: str) -> list[str]:
+    from uci_searchengine_spark.operators.index_build import parquet_files
+
+    return parquet_files(os.path.join(index_dir, "tombstones"))
+
+
 def tombstone_count_estimate(index_dir: str) -> int:
     """Upper bound on the tombstone count from parquet footers only
     (duplicate deletes counted twice; zero I/O beyond metadata)."""
     import pyarrow.parquet as pq
 
-    d = os.path.join(index_dir, "tombstones")
-    if not os.path.isdir(d):
-        return 0
-    n = 0
-    for fn in os.listdir(d):
-        if fn.endswith(".parquet"):
-            n += pq.ParquetFile(os.path.join(d, fn)).metadata.num_rows
-    return n
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows for f in _files(index_dir)
+    )
 
 
 def bucketed_tombstones(spark, index_dir: str, bucket_size: int):
@@ -83,23 +86,26 @@ def bucketed_tombstones(spark, index_dir: str, bucket_size: int):
     )
 
 
-def load_tombstone_ids(index_dir: str) -> np.ndarray:
+def load_tombstone_ids(
+    index_dir: str, lo: "int | None" = None, hi: "int | None" = None
+) -> np.ndarray:
     """Sorted unique tombstoned doc ids (empty array if none). Exact
     driver-side load — callers that must scale past DRIVER_CAP use
-    ``bucketed_tombstones`` instead (the scorers switch automatically)."""
+    ``bucketed_tombstones`` instead (the scorers switch automatically),
+    or read one doc-id range ``[lo, hi)`` (a doc_id-filtered read;
+    the distributed envelope's range tasks)."""
     import pyarrow.parquet as pq
 
-    d = os.path.join(index_dir, "tombstones")
-    if not os.path.isdir(d):
-        return np.empty(0, dtype=np.int64)
-    parts = []
-    for fn in sorted(os.listdir(d)):
-        if fn.endswith(".parquet"):
-            parts.append(
-                pq.read_table(os.path.join(d, fn), columns=["doc_id"])
-                .column("doc_id")
-                .to_numpy()
-            )
+    parts = [
+        pq.read_table(
+            f, columns=["doc_id"],
+            filters=None if lo is None
+            else [("doc_id", ">=", lo), ("doc_id", "<", hi)],
+        )
+        .column("doc_id")
+        .to_numpy()
+        for f in _files(index_dir)
+    ]
     if not parts:
         return np.empty(0, dtype=np.int64)
     return np.unique(np.concatenate(parts)).astype(np.int64)
@@ -112,14 +118,7 @@ def is_deleted(index_dir: str, doc_id: int) -> bool:
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
-    d = os.path.join(index_dir, "tombstones")
-    if not os.path.isdir(d):
-        return False
-    files = [
-        os.path.join(d, fn)
-        for fn in os.listdir(d)
-        if fn.endswith(".parquet")
-    ]
+    files = _files(index_dir)
     if not files:
         return False
     t = ds.dataset(files).to_table(

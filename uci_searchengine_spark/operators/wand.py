@@ -8,19 +8,25 @@ Query lifecycle (rebuild of backend/app/api/search.py:67-126, SURVEY.md §3.1):
    the reference's B-tree probe on terms.term, models.py:41),
 3. per-term idf from the ``df_global`` column denormalized onto segment
    rows at build time (term_stats analog) — no per-query aggregation job,
-4. applyInPandas per doc-range *bucket* over the segment rows alone —
-   document lengths ride inline in the postings codec, so scoring needs NO
-   side table (a per-query doc-length join would shuffle the whole doc
-   table at corpus scale). Every doc's postings for all query terms live
-   in its bucket, so buckets score independently and in parallel. Inside:
-   block-max pruning (MaxScore regime over the block-max metadata) +
-   vectorized exhaustive scoring of surviving blocks + a bounded top-k
-   selection per bucket,
-5. global top-k = orderBy(score desc, doc_id asc).limit(k) over ≤
-   n_buckets*k candidate rows (TakeOrderedAndProject on tiny data).
+4. scoring of a doc-id RANGE over the segment rows alone — document
+   lengths ride inline in the postings codec, so scoring needs NO side
+   table (a per-query doc-length join would shuffle the whole doc table
+   at corpus scale). Every doc's postings for all query terms live in
+   its bucket of the doc-range grid, so any contiguous bucket range
+   scores independently: the search envelope scores the whole pruned
+   frame as one range in-process (``local_search``) or one range per
+   task of a single scatter-gather stage (``topk_count_docs``), a range
+   wider than ``_RANGE_IDS`` ids as runs of whole buckets; the
+   top-k scorers (``_topk_over_segments``) score one bucket per
+   applyInPandas group. Inside: block-max pruning (MaxScore regime over
+   the block-max metadata) + vectorized exhaustive scoring of surviving
+   blocks + a bounded top-k selection,
+5. global top-k over ≤ n_ranges*k candidates: a driver merge for the
+   envelope, orderBy(score desc, doc_id asc).limit(k) for the top-k
+   scorers (TakeOrderedAndProject on tiny data).
 
-Pruning logic (per bucket, ``_score_bucket``): terms are accumulated in
-one bucket-independent order, weight ``w = idf·boost`` descending, into a
+Pruning logic (per range, ``_score_bucket``): terms are accumulated in
+one range-independent order, weight ``w = idf·boost`` descending, into a
 dense score array (np.add.at — no per-row Python); each term's list is
 bounded by ``ub(t) = w*(k1+1)*max(block_max)``. Once the running k-th best
 score θ exceeds the summed upper bounds of all remaining terms, no unseen
@@ -39,6 +45,8 @@ single-node oracle on the full reference query set (tests/test_query.py).
 
 from __future__ import annotations
 
+import dataclasses
+import functools
 import os
 
 import numpy as np
@@ -52,19 +60,30 @@ from uci_searchengine_spark.operators.bm25 import idf as idf_fn
 from uci_searchengine_spark.operators.bm25 import terms_for_index
 from uci_searchengine_spark.operators.codec import unpack_postings
 from uci_searchengine_spark.operators.index_build import (
+    DOCS_PER_BUCKET,
     IndexMeta,
     load_segments,
+    parquet_files,
 )
 
 
 class BucketedExcl:
-    """Exclusion set too large for a driver closure array: a Spark
-    relation ``(bucket, doc_id)`` on the index's doc-range grid, consumed
-    by cogrouping each scoring bucket with its own exclusion ids
-    (``apply_per_bucket``). Never materialized on the driver."""
+    """Exclusion set too large for a driver closure array. ``df`` is a
+    Spark relation ``(bucket, doc_id)`` on the index's doc-range grid,
+    consumed by cogrouping each scoring bucket with its own exclusion
+    ids (``apply_per_bucket``), and built on first use only: the
+    envelope's range tasks read the tombstone files with a doc_id range
+    filter instead (``topk_count_docs``). Never materialized on the
+    driver."""
 
-    def __init__(self, df: DataFrame):
-        self.df = df
+    def __init__(self, spark: SparkSession, index_dir: str, bucket_size: int):
+        self._args = (spark, index_dir, bucket_size)
+
+    @functools.cached_property
+    def df(self) -> DataFrame:
+        from uci_searchengine_spark.operators.tombstones import bucketed_tombstones
+
+        return bucketed_tombstones(*self._args)
 
 
 def load_excl(
@@ -76,14 +95,14 @@ def load_excl(
     tombstones — the common case costs one isdir check). Below
     tombstones.DRIVER_CAP: a sorted driver array (shipped in the task
     closure, zero extra plan nodes). Past the cap, with ``spark`` and
-    ``bucket_size`` given: the bucket-cogrouped relation instead."""
+    ``bucket_size`` given: a BucketedExcl instead."""
     from uci_searchengine_spark.operators import tombstones as _tomb
 
     est = _tomb.tombstone_count_estimate(index_dir)
     if not est:
         return None
     if est > _tomb.DRIVER_CAP and spark is not None and bucket_size:
-        return BucketedExcl(_tomb.bucketed_tombstones(spark, index_dir, bucket_size))
+        return BucketedExcl(spark, index_dir, bucket_size)
     t = _tomb.load_tombstone_ids(index_dir)
     return t if t.size else None
 
@@ -186,11 +205,12 @@ def _empty_topk() -> pd.DataFrame:
 
 
 def _term_rows(seg: pd.DataFrame, idf_map: dict, avgdl: float) -> list:
-    """One bucket's segment rows as ``(ub, w, row)`` in the accumulation
+    """A range's segment rows as ``(ub, w, row)`` in the accumulation
     order, (w desc, term asc) with w = idf·boost. The order is the same
-    in every bucket, so docs with mathematically equal scores in
-    different buckets get bit-equal float sums (a per-bucket order made
-    such ties differ in the last bit and rank against doc-id order).
+    in every range, so docs with mathematically equal scores in
+    different buckets get bit-equal float sums whether they are scored
+    in one range or in several (a per-bucket order made such ties differ
+    in the last bit and rank against doc-id order).
 
     ``ub = w·(k1+1)·max(block_max)`` bounds the row's contribution to
     any doc. Multi-generation indexes carry gen_avgdl: each generation's
@@ -330,7 +350,7 @@ def _score_bucket(
     seg: pd.DataFrame,
     idf_map: dict[str, float],
     avgdl: float,
-    bucket_size: int,
+    size: int,
     k: int,
     excl: "np.ndarray | None" = None,
     incl: "np.ndarray | None" = None,
@@ -338,15 +358,18 @@ def _score_bucket(
     min_match: int = 1,
     mul: "np.ndarray | None" = None,
     add: "np.ndarray | None" = None,
+    lo: "int | None" = None,
 ) -> pd.DataFrame:
-    """θ-pruned top-k of one bucket for the OR family: plain OR,
-    minimum_should_match, doc-value blended and decayed scoring.
+    """θ-pruned top-k of the doc-id range ``[lo, lo + size)`` for the OR
+    family: plain OR, minimum_should_match, doc-value blended and
+    decayed scoring. ``lo`` defaults to the first row's bucket start
+    (``size`` = the bucket size: one bucket).
 
     Rows accumulate term-at-a-time (``_term_rows`` order) into a dense
-    bucket array. A doc matches when it holds ≥ ``min_match`` distinct
+    range array. A doc matches when it holds ≥ ``min_match`` distinct
     query terms (rows of one term cover disjoint doc ranges, so counting
     rows is exact); its score is ``acc·mul + add`` — acc the OR-sum
-    BM25, ``mul``/``add`` optional dense bucket-local per-doc arrays
+    BM25, ``mul``/``add`` optional dense range-local per-doc arrays
     (decay multiplier ≥ 0, weighted doc-value bonus). The transform is
     monotone in acc, so θ (the k-th best final score) and the candidate
     set live on final scores: once no unseen doc can reach θ — in
@@ -354,7 +377,7 @@ def _score_bucket(
     rem summing the remaining rows' bounds over j — remaining rows
     decode only the blocks holding a candidate, and a candidate d stays
     only while (acc[d] + rem[win(d)])·mul[d] + add[d] ≥ θ. The window is
-    the whole bucket without a transform (the scalar suffix-sum bound)
+    the whole range without a transform (the scalar suffix-sum bound)
     and the 128-doc grid with one: high-bonus docs and the remaining
     terms' heavy blocks are rarely in the same window.
 
@@ -363,7 +386,7 @@ def _score_bucket(
     — before θ ever tightens — so pruning stays admissible for the
     post-mask top-k.
 
-    ``count_matches``: also return the bucket's exact match count as
+    ``count_matches``: also return the range's exact match count as
     ``(pdf, n)`` — it folds total_results into the scoring action.
     Counting needs every list decoded in full, and so does
     ``min_match > 1`` (no admissible block-max bound exists on per-doc
@@ -371,10 +394,10 @@ def _score_bucket(
     true k-th eligible score), so both turn candidate restriction off."""
     if not len(seg) or seg["term"].nunique() < min_match:
         return (_empty_topk(), 0) if count_matches else _empty_topk()
-    base = int(seg["bucket"].iloc[0]) * bucket_size
+    base = int(seg["bucket"].iloc[0]) * size if lo is None else lo
     rows = _term_rows(seg, idf_map, avgdl)
-    window = bucket_size if mul is None and add is None else _WINDOW
-    grid = _term_window_ub(rows, base, bucket_size, window)
+    window = size if mul is None and add is None else _WINDOW
+    grid = _term_window_ub(rows, base, size, window)
     # exact suffix sums: rem[i] bounds rows i.. per window, and the empty
     # suffix rem[-1] is exactly 0.0. Sequential `remaining -= ub` left a
     # ~-1e-15 residue at the final row, which bounded a doc whose score
@@ -389,7 +412,7 @@ def _score_bucket(
         unseen = unseen + _window_max(add, grid.shape[1], window)
     unseen_max = unseen.max(axis=1)
 
-    acc = np.zeros(bucket_size, dtype=np.float64)
+    acc = np.zeros(size, dtype=np.float64)
 
     def final(loc: np.ndarray, s: np.ndarray) -> np.ndarray:
         if mul is not None:
@@ -398,7 +421,7 @@ def _score_bucket(
             s = s + add[loc]
         return s
 
-    cnt = np.zeros(bucket_size, dtype=np.int32) if min_match > 1 else None
+    cnt = np.zeros(size, dtype=np.int32) if min_match > 1 else None
     exhaustive = count_matches or cnt is not None
     cand: np.ndarray | None = None  # sorted global candidate ids, None = all
     for i, (_ub, w, r) in enumerate(rows):
@@ -431,15 +454,17 @@ def _score_bucket_and(
     seg: pd.DataFrame,
     idf_map: dict[str, float],
     avgdl: float,
-    bucket_size: int,
+    size: int,
     n_terms: int,
     k: int | None,
     excl: "np.ndarray | None" = None,
     count_matches: bool = False,
     incl: "np.ndarray | None" = None,
+    lo: "int | None" = None,
 ) -> pd.DataFrame:
-    """Conjunctive (ALL-terms) top-k for one bucket: rarest-first
-    posting-list intersection with block skipping. ``count_matches``
+    """Conjunctive (ALL-terms) top-k of the doc-id range ``[lo, lo +
+    size)`` (one bucket by default, as in ``_score_bucket``):
+    rarest-first posting-list intersection with block skipping. ``count_matches``
     returns ``(pdf, n)`` where n is the full intersection size — free
     here, the intersection is exact before the top-k truncation.
 
@@ -452,23 +477,23 @@ def _score_bucket_and(
     (df asc, term asc) is the OR kernel's (w desc, term asc) order, so
     both sum a doc's contributions in the same float order."""
     if not len(seg) or seg["term"].nunique() < n_terms:
-        # a query term with no postings in this bucket ⇒ no doc here
+        # a query term with no postings in this range ⇒ no doc here
         # holds all terms
         return (_empty_topk(), 0) if count_matches else _empty_topk()
-    base = int(seg["bucket"].iloc[0]) * bucket_size
+    base = int(seg["bucket"].iloc[0]) * size if lo is None else lo
 
-    # group rows by TERM: in a multi-generation index a boundary bucket
-    # (doc ranges spanning generations) holds one row per generation for
-    # the same term — a term's doc set is the UNION of its rows, and
-    # intersecting the rows separately (disjoint doc ranges!) would
-    # wrongly empty the result
+    # group rows by TERM: a range of several buckets — and in a
+    # multi-generation index a boundary bucket (doc ranges spanning
+    # generations) — holds several rows of the same term: its doc set is
+    # the UNION of its rows, and intersecting the rows separately
+    # (disjoint doc ranges!) would wrongly empty the result
     by_term: dict[str, list] = {}
     for _ub, _w, r in _term_rows(seg, idf_map, avgdl):
         by_term.setdefault(r.term, []).append(r)
     groups = sorted(
         by_term.items(), key=lambda kv: (int(kv[1][0].df_global), kv[0])
     )
-    acc = np.zeros(bucket_size, dtype=np.float64)
+    acc = np.zeros(size, dtype=np.float64)
     cand: np.ndarray | None = None
     for term, trows in groups:
         # the mask on the rarest list filters the whole intersection
@@ -478,8 +503,8 @@ def _score_bucket_and(
             return (_empty_topk(), 0) if count_matches else _empty_topk()
         d, tf, dl = (np.concatenate(x) for x in zip(*parts))
         if len(parts) > 1:
-            # generations hold disjoint doc ranges; one argsort restores
-            # global doc order
+            # rows hold disjoint doc ranges; one argsort restores global
+            # doc order
             o = np.argsort(d, kind="stable")
             d, tf, dl = d[o], tf[o], dl[o]
         np.add.at(acc, d - base, _bm25(idf_map[term], tf, dl, avgdl))
@@ -606,9 +631,10 @@ def prune_relation(
     with_positions: bool = False,
 ) -> DataFrame:
     """Apply the query-term pruning + df resolution to an already-loaded
-    segment relation (shared by pruned_segments and the resident
-    serving.Searcher, so both surfaces get identical multi-generation df
-    semantics)."""
+    segment relation (shared by pruned_segments, ``Searcher.top_k`` and
+    federation, so every relational surface gets identical
+    multi-generation df semantics; the search envelope prunes with the
+    same rules in pyarrow — ``local_search.read_pruned_segments_local``)."""
     shard_map = _shards_for_terms(terms, meta.num_shards)
     shards = sorted(set(shard_map.values()))
     seg = seg_rel.filter(F.col("shard").isin(shards) & F.col("term").isin(terms))
@@ -620,8 +646,8 @@ def prune_relation(
         # index holds multiple generations (each gen counted only its own
         # docs). The pruned scan already covers each query term's ENTIRE
         # posting list across fragments/generations, so the true df is an
-        # in-plan aggregate + broadcast join — still one action,
-        # only the query terms' rows touched.
+        # in-plan aggregate + broadcast join — only the query terms' rows
+        # touched.
         dfs = seg.groupBy("term").agg(F.sum("df").cast("long").alias("_df"))
         seg = (
             seg.drop("df_global")
@@ -683,32 +709,29 @@ def _topk_over_segments(
     return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
-_TOPK_DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("bucket", T.LongType(), False),
-        T.StructField("n_matched", T.LongType(), False),
-        T.StructField(
-            "top",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        # neg_score first: sort_array(asc) then yields
-                        # (score desc, doc_id asc) — the ranking contract
-                        T.StructField("neg_score", T.DoubleType(), False),
-                        T.StructField("doc_id", T.LongType(), False),
-                        T.StructField("url", T.StringType(), True),
-                        T.StructField("title", T.StringType(), True),
-                        T.StructField("snippet", T.StringType(), True),
-                    ]
-                )
-            ),
-            False,
-        ),
-    ]
-)
-
-
 _DOC_COLS = ["doc_id", "url", "title", "text"]
+
+
+def _row_group_ranges(pf, column: str) -> list:
+    """``[(min, max)]`` of ``column`` per row group of the open
+    ParquetFile ``pf``, from the footer alone; ``(None, None)`` where a
+    row group has no stats (always read)."""
+    md = pf.metadata
+    if not md.num_row_groups:
+        return []
+    ci = next(
+        i
+        for i in range(md.num_columns)
+        if md.row_group(0).column(i).path_in_schema == column
+    )
+    ranges = []
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(ci).statistics
+        if st is None or not st.has_min_max:
+            ranges.append((None, None))  # no stats → always read
+        else:
+            ranges.append((st.min, st.max))
+    return ranges
 
 
 def _doc_file_entry(fp: str):
@@ -718,20 +741,7 @@ def _doc_file_entry(fp: str):
     import pyarrow.parquet as pq
 
     pf = pq.ParquetFile(fp)
-    md = pf.metadata
-    ci = next(
-        i
-        for i in range(md.num_columns)
-        if md.row_group(0).column(i).path_in_schema == "doc_id"
-    )
-    ranges = []
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(ci).statistics
-        if st is None or not st.has_min_max:
-            ranges.append((None, None))  # no stats → always read
-        else:
-            ranges.append((int(st.min), int(st.max)))
-    return pf, ranges
+    return pf, _row_group_ranges(pf, "doc_id")
 
 
 def fetch_bucket_docs(
@@ -744,9 +754,9 @@ def fetch_bucket_docs(
     """Co-located doc-store fetch for one bucket's winners: read ONLY
     the row groups of the bucket's own ``bucket=`` dir(s) whose doc_id
     stats cover a winner (footer-stats pruning over the doc_id-sorted
-    DOCS_ROW_GROUP layout) — never a join. Shared by the distributed
-    closure (inside each scoring task) and the local path (driver,
-    final winners only). ``pf_cache`` (resident serving) memoizes
+    DOCS_ROW_GROUP layout) — never a join. Both plans' envelopes call
+    it for their ≤k final winners (``fetch_winner_docs``, on the
+    driver). ``pf_cache`` (resident serving) memoizes
     footers keyed by (path, size, mtime) so repeat queries skip the
     metadata read. Returns {doc_id: (url, title, snippet)} with
     snippets under the reference display rule (bm25.snippet_text)."""
@@ -756,14 +766,7 @@ def fetch_bucket_docs(
     srt = sorted(idset)
     docs: dict[int, tuple[str, str, str]] = {}
     for d in docs_dirs:
-        p = os.path.join(d, f"bucket={bucket}")
-        if not os.path.isdir(p):
-            continue
-        for fn_ in sorted(os.listdir(p)):
-            if not fn_.endswith(".parquet"):
-                continue
-            fp = os.path.join(p, fn_)
-            ent = None
+        for fp in parquet_files(os.path.join(d, f"bucket={bucket}")):
             if pf_cache is not None:
                 stt = os.stat(fp)
                 key = (fp, stt.st_size, stt.st_mtime_ns)
@@ -821,138 +824,194 @@ def fetch_winner_docs(
     return docs
 
 
+# the most doc ids one envelope kernel call spans: the kernel's dense
+# arrays (accumulator, masks) are sized to its range, so this keeps them
+# at the one-bucket bound (8e6 ids ≈ 64 MB of float64) at any corpus size
+_RANGE_IDS = DOCS_PER_BUCKET
+
+
+def _range_spans(buckets: np.ndarray, bucket_size: int) -> list[list[int]]:
+    """The sorted distinct ``buckets`` of a frame as runs ``[b0, b1]``
+    (inclusive) of whole buckets, each spanning at most
+    max(``_RANGE_IDS``, bucket_size) doc ids: one run on a small index;
+    on a large one, postings in buckets 0 and 249 of a 2e9-doc grid are
+    two runs of one bucket each, not one 16 GB accumulator."""
+    per = max(1, _RANGE_IDS // bucket_size)
+    spans: list[list[int]] = []
+    for b in buckets.tolist():
+        if spans and b - spans[-1][0] < per:
+            spans[-1][1] = b
+        else:
+            spans.append([b, b])
+    return spans
+
+
 def make_envelope_fn(
     meta: IndexMeta,
-    docs_dirs: list[str],
-    lowered: list[str],
     k: int,
     mode: str,
     n_terms: int | None,
-    with_docs: bool = True,
     boosts: "dict[str, float] | None" = None,
 ):
-    """Per-bucket envelope closure builder SHARED by the Spark path
-    (``topk_count_docs``) and the task-local path
-    (``operators.local_search``) — one code path, so the two plans are
-    rank- and byte-identical by construction. Returns
-    ``make_fn(excl_local) -> (key, seg_pdf, *, incl=None) -> pdf`` in the
-    ``apply_per_bucket`` shape; ``incl`` is the bucket's sorted allowed
-    ids under a filter (None: no filter).
+    """Range envelope closure builder SHARED by both plans: the
+    task-local plan runs it once over the whole pruned frame
+    (``local_search.local_topk_count_docs``), the distributed plan once
+    per range task (``topk_count_docs``) — one code path, so the two
+    plans are rank- and byte-identical by construction. Returns
+    ``make_fn(excl) -> fn(key, seg_pdf, *, incl=None)``, where ``fn``
+    returns ``(n_matched, [(doc_id, score)])``: the frame's exact match
+    count and its ≤k best in (score desc, doc_id asc) order. The kernel
+    scores the frame's buckets as doc-id ranges of whole buckets
+    (``_range_spans``: one range unless the frame spans more than
+    ``_RANGE_IDS`` ids); a doc's postings all lie in its bucket, so the
+    sums do not depend on the split. ``key`` is unused (the per-group
+    call shape); ``excl`` / ``incl`` are sorted global doc ids to drop
+    (tombstones) / to keep (filter context; None = no filter)."""
+    n_docs, avgdl, bucket_size = meta.n_docs, meta.avgdl, meta.bucket_size
 
-    ``with_docs=False`` skips the per-bucket doc-store fetch (url/title/
-    snippet come back None): the local path scores all buckets first and
-    fetches docs for the ≤k GLOBAL winners only — the distributed plan
-    fetches per bucket because its tasks run in parallel and a second
-    round-trip would cost another action."""
-    n_docs = meta.n_docs
-    avgdl, bucket_size = meta.avgdl, meta.bucket_size
-
-    def make_fn(excl_local):
+    def make_fn(excl):
         def fn(key, seg_pdf, *, incl=None):
-            empty = pd.DataFrame(
-                {
-                    "bucket": pd.Series([], dtype="int64"),
-                    "n_matched": pd.Series([], dtype="int64"),
-                    "top": pd.Series([], dtype="object"),
-                }
-            )
             if not len(seg_pdf):
-                return empty
+                return 0, []
             idf_map = _idf_map(n_docs, seg_pdf, boosts)
-            if mode == "and":
-                pdf, n = _score_bucket_and(
-                    seg_pdf, idf_map, avgdl, bucket_size, n_terms, k,
-                    excl=excl_local, count_matches=True, incl=incl,
-                )
-            else:
-                pdf, n = _score_bucket(
-                    seg_pdf, idf_map, avgdl, bucket_size, k,
-                    excl=excl_local, incl=incl, count_matches=True,
-                )
-            if not n:
-                return empty
-            bucket = int(seg_pdf["bucket"].iloc[0])
-            docs: dict[int, tuple[str, str, str]] = {}
-            if with_docs:
-                docs = fetch_bucket_docs(
-                    docs_dirs, bucket, [int(d) for d in pdf["doc_id"]], lowered
-                )
-            top = []
-            for did, s in zip(pdf["doc_id"], pdf["score"]):
-                url, title, snip = docs.get(int(did), (None, None, None))
-                top.append(
-                    {
-                        "neg_score": -float(s),
-                        "doc_id": int(did),
-                        "url": url,
-                        "title": title,
-                        "snippet": snip,
-                    }
-                )
-            return pd.DataFrame(
-                {
-                    "bucket": pd.Series([bucket], dtype="int64"),
-                    "n_matched": pd.Series([n], dtype="int64"),
-                    "top": pd.Series([top], dtype="object"),
-                }
-            )
+            b = seg_pdf["bucket"].to_numpy()
+            spans = _range_spans(np.unique(b), bucket_size)
+            n, top = 0, []
+            for b0, b1 in spans:
+                part = seg_pdf if len(spans) == 1 else seg_pdf[(b >= b0) & (b <= b1)]
+                lo, size = b0 * bucket_size, (b1 + 1 - b0) * bucket_size
+                if mode == "and":
+                    pdf, m = _score_bucket_and(
+                        part, idf_map, avgdl, size, n_terms, k,
+                        excl=excl, count_matches=True, incl=incl, lo=lo,
+                    )
+                else:
+                    pdf, m = _score_bucket(
+                        part, idf_map, avgdl, size, k, excl=excl,
+                        incl=incl, count_matches=True, lo=lo,
+                    )
+                n += m
+                top += zip(pdf["doc_id"].tolist(), pdf["score"].tolist())
+            if len(spans) > 1:
+                top = sorted(top, key=lambda t: (-t[1], t[0]))[:k]
+            return n, top
 
         return fn
 
     return make_fn
 
 
-def topk_count_docs(
-    seg: DataFrame,
-    meta: IndexMeta,
+def gather_envelope(
     index_dir: str,
+    bucket_size: int,
+    parts: list,
+    k: int,
     display_terms: list[str],
+    pf_cache: "dict | None" = None,
+) -> tuple[list[dict], int]:
+    """Both plans' last step: the envelope from per-range ``(n_matched,
+    [(doc_id, score)])`` parts — the total summed, the ≤k global winners
+    in (score desc, doc_id asc) order, their url/title/snippet fetched
+    once (``fetch_winner_docs``; snippets under the reference display
+    rule, raw query forms). Returns (rows, total)."""
+    total = sum(n for n, _ in parts)
+    top = sorted((t for _, p in parts for t in p), key=lambda t: (-t[1], t[0]))[:k]
+    docs = fetch_winner_docs(
+        index_dir, bucket_size, [d for d, _ in top],
+        [t.lower() for t in display_terms], pf_cache,
+    )
+    rows = []
+    for d, score in top:
+        url, title, snip = docs.get(d, (None, None, None))
+        rows.append(
+            {"doc_id": d, "score": score, "url": url, "title": title,
+             "snippet": snip}
+        )
+    return rows, total
+
+
+def topk_count_docs(
+    spark: SparkSession,
+    index_dir: str,
+    meta: IndexMeta,
+    display_terms: list[str],
+    terms: list[str],
     k: int,
     mode: str = "or",
-    n_terms: int | None = None,
     excl: "np.ndarray | BucketedExcl | None" = None,
     boosts: "dict[str, float] | None" = None,
-    incl: "DataFrame | None" = None,
+    filters: "tuple[list, list] | None" = None,
+    stats: "tuple[int, float, dict] | None" = None,
+    pf_cache: "dict | None" = None,
 ) -> tuple[list[dict], int]:
-    """The WHOLE search envelope from ONE Spark action (one collect;
-    adaptive execution runs each of its two shuffles as its own job, so
-    the status store shows ~3 jobs per query on one generation).
-
-    The match count folds into the scoring pass (``count_matches``) and
-    so does the doc-store fetch: the doc store is bucketed on the SAME
-    doc-range grid as the segments, so each scoring task reads its own
-    bucket's docs for its ≤k local winners — a task-local pyarrow read
-    with a doc_id row-group filter (the co-location pattern phrase
-    verification already uses), never a join, never a second action.
-    Returns (rows, total): rows ordered (score desc, doc_id asc) with
-    url/title/snippet attached, snippets under the reference display
-    rule (raw query forms — bm25.snippet_text). ``incl``: filter
-    context, a ``doc_id`` relation of the allowed docs — hits and total
-    count only those (``apply_per_bucket``)."""
+    """The search envelope on the distributed plan: ONE scatter-gather
+    stage, ``sc.parallelize(ranges, n).mapPartitions(task).collect()``
+    — one job, no shuffle. The bucket grid splits into n = min(#buckets,
+    defaultParallelism) contiguous ranges; each task
+    - scans its range of the query terms' rows (the task-local plan's
+      pyarrow scan, ``read_pruned_segments_local``, with a bucket-range
+      predicate) under df resolved on the driver (``term_dfs``, shipped
+      in the closure, for several generations or split shards);
+    - drops tombstones: its slice of the driver array or, past the
+      driver cap (``excl`` a BucketedExcl), the tombstone files read
+      with a doc_id range filter;
+    - restricts eligibility under ``filters`` = (hosts, ranges) to the
+      docs of its own buckets of the doc store and doc-value planes
+      that pass them (``filtered.allowed_ids``, the local plan's
+      predicate);
+    - scores the range with the local plan's closure
+      (``make_envelope_fn``) and returns (n_matched, top≤k).
+    The driver merges the parts and fetches the winners' docs
+    (``gather_envelope``) exactly as the local plan does, so the plans
+    agree by construction. ``stats`` = (n_docs, avgdl, dfs) scores with
+    other corpus statistics than the index's own (federation's union
+    corpus). Returns (rows, total) like ``local_topk_count_docs``."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    make_fn = make_envelope_fn(
-        meta, _docs_dirs(index_dir), [t.lower() for t in display_terms], k,
-        mode, n_terms, boosts=boosts,
-    )
-    per_bucket = apply_per_bucket(
-        seg, excl, make_fn, _TOPK_DOCS_SCHEMA, incl=incl,
-        bucket_size=meta.bucket_size,
-    )
-    row = per_bucket.agg(
-        F.coalesce(F.sum("n_matched"), F.lit(0)).alias("total"),
-        F.slice(
-            F.sort_array(F.flatten(F.collect_list("top"))), 1, k
-        ).alias("top"),
-    ).collect()[0]
-    rows = [
-        {
-            "doc_id": int(r["doc_id"]),
-            "score": -float(r["neg_score"]),
-            "url": r["url"],
-            "title": r["title"],
-            "snippet": r["snippet"],
-        }
-        for r in row["top"]
+    from uci_searchengine_spark.operators.local_search import term_dfs
+
+    if stats is None:
+        multi = meta.seg_split > 1 or meta.gens > 1
+        smeta, dfs = meta, term_dfs(index_dir, meta, terms) if multi else None
+    else:
+        smeta = dataclasses.replace(meta, n_docs=stats[0], avgdl=stats[1])
+        dfs = stats[2]
+    bs, own_avgdl, n_terms = meta.bucket_size, meta.avgdl, len(terms)
+    n_b = max(1, -(-max(meta.n_docs, meta.next_doc_id) // bs))
+    sc = spark.sparkContext
+    n = min(n_b, sc.defaultParallelism)
+    cuts = [n_b * i // n for i in range(n + 1)]
+    tomb_files = isinstance(excl, BucketedExcl)
+    ranges = [
+        (b0, b1, None if excl is None or tomb_files
+         else excl[(excl >= b0 * bs) & (excl < b1 * bs)])
+        for b0, b1 in zip(cuts, cuts[1:])
     ]
-    return rows, int(row["total"])
+
+    def task(it):
+        from uci_searchengine_spark.operators import filtered, local_search
+        from uci_searchengine_spark.operators.tombstones import load_tombstone_ids
+
+        for b0, b1, ex in it:
+            seg = local_search.read_pruned_segments_local(
+                index_dir, meta, terms, buckets=(b0, b1), dfs=dfs
+            )
+            if not len(seg):
+                yield 0, []
+                continue
+            if "gen_avgdl" not in seg and smeta.avgdl != own_avgdl:
+                seg["gen_avgdl"] = own_avgdl  # the avgdl of the stored bounds
+            if tomb_files:
+                ex = load_tombstone_ids(index_dir, b0 * bs, b1 * bs)
+            incl = None
+            if filters:
+                incl = filtered.allowed_ids(
+                    *filters,
+                    lambda: filtered.read_authority(index_dir, (b0, b1)),
+                    lambda f: filtered.read_doc_values(index_dir, f, (b0, b1)),
+                )
+            fn = make_envelope_fn(smeta, k, mode, n_terms, boosts)(ex)
+            yield fn(None, seg, incl=incl)
+
+    parts = sc.parallelize(ranges, len(ranges)).mapPartitions(task).collect()
+    return gather_envelope(index_dir, bs, parts, k, display_terms, pf_cache)

@@ -49,6 +49,22 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Dio.netty.tryReflectionSetAccessible=true")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        # Python workers fork from the engine's daemon (pyworker.py: a
+        # task no longer re-parses pyspark's zips). The package's parent
+        # (a dir, or a --py-files zip) on the workers' path lets the
+        # daemon import from any cwd. Only local masters: that path
+        # exists on the driver's machine alone, and cluster executors
+        # keep pyspark's daemon, which needs no engine install.
+        pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        prev = extra_conf.get("spark.executorEnv.PYTHONPATH")
+        extra_conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            p for p in (pkg_parent, prev) if p
+        )
+        builder = builder.config(
+            "spark.python.daemon.module", "uci_searchengine_spark.pyworker"
+        )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
