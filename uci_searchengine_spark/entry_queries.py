@@ -7230,7 +7230,7 @@ best AS (
 
 def _sql_kmeans_cells() -> str:
     sums = ", ".join(
-        f"sum(q.qv[{i + 1}]) AS s{i}" for i in range(KM_STAT_DIMS)
+        f"CAST(sum(q.qv[{i + 1}]) AS BIGINT) AS s{i}" for i in range(KM_STAT_DIMS)
     )
     return f"""
 WITH {_sql_km_base()}
@@ -8336,7 +8336,7 @@ def q_unimax_alloc(spark, sf_dir):
 
 SQL_UNIMAX_ALLOC = """
 WITH totals AS (
-  SELECT lang AS domain, sum(n_chars) AS tokens
+  SELECT lang AS domain, CAST(sum(n_chars) AS BIGINT) AS tokens
   FROM documents GROUP BY lang
 ),
 d AS (

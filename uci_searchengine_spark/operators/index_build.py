@@ -67,7 +67,9 @@ from __future__ import annotations
 import json
 import math
 import os
+import threading
 import time
+from collections import OrderedDict
 from dataclasses import dataclass
 
 import numpy as np
@@ -1787,6 +1789,96 @@ def parquet_files(root: str, buckets: "tuple[int, int] | None" = None) -> list[s
         ):
             out += parquet_files(p)
     return out
+
+
+# ---------------------------------------------------------------- footers
+# Parquet footers of the files the per-query reads prune on, memoized
+# per process: on the driver (envelope scan, term dfs, tombstones,
+# winner docs) and in reused Python workers (range tasks). An entry
+# holds while its file's (st_ino, st_size, st_mtime_ns) is unchanged,
+# so a file rewritten at the same path is read again; past
+# FOOTER_MEMO_ENTRIES files the least recently used one is dropped.
+FOOTER_MEMO_ENTRIES = 1024
+_footers: "OrderedDict[str, Footer]" = OrderedDict()
+_footers_lock = threading.Lock()
+
+
+def _row_group_ranges(md, column: str) -> list:
+    """``[(min, max)]`` of ``column`` per row group of the parquet
+    footer ``md``; ``(None, None)`` where a row group has no stats
+    (always read)."""
+    if not md.num_row_groups:
+        return []
+    ci = next(
+        i
+        for i in range(md.num_columns)
+        if md.row_group(0).column(i).path_in_schema == column
+    )
+    ranges = []
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(ci).statistics
+        if st is None or not st.has_min_max:
+            ranges.append((None, None))
+        else:
+            ranges.append((st.min, st.max))
+    return ranges
+
+
+class Footer:
+    """One parquet file's footer (``metadata``), its arrow ``schema``
+    and per-row-group min/max, read once per file state (``footer``)."""
+
+    def __init__(self, path: str, state: tuple):
+        import pyarrow.parquet as pq
+
+        self.path, self.state = path, state
+        self.metadata = pq.read_metadata(path)
+        self.schema = self.metadata.schema.to_arrow_schema()
+        self._ranges: dict[str, list] = {}
+
+    def ranges(self, column: str) -> list:
+        """``[(min, max)]`` of ``column`` per row group, ``(None, None)``
+        where a row group has no stats."""
+        out = self._ranges.get(column)
+        if out is None:
+            out = self._ranges[column] = _row_group_ranges(self.metadata, column)
+        return out
+
+    def row_groups(self, column: str, keep) -> list[int]:
+        """Row groups whose ``column`` range may hold a wanted value:
+        ``keep(lo, hi)`` true, or no stats."""
+        return [
+            i for i, (lo, hi) in enumerate(self.ranges(column))
+            if lo is None or keep(lo, hi)
+        ]
+
+    def read(self, row_groups: list[int], columns: list[str]):
+        """Those row groups' ``columns`` as a pyarrow Table — the file
+        is opened over the memoized footer, not re-parsed."""
+        import pyarrow.parquet as pq
+
+        with pq.ParquetFile(self.path, metadata=self.metadata) as pf:
+            return pf.read_row_groups(row_groups, columns=columns, use_threads=False)
+
+
+def footer(path: str) -> Footer:
+    """The memoized ``Footer`` of the parquet file at ``path``: one
+    ``stat`` per call, a footer read only when the file is new to this
+    process or changed since."""
+    st = os.stat(path)
+    state = (st.st_ino, st.st_size, st.st_mtime_ns)
+    with _footers_lock:
+        ent = _footers.get(path)
+        if ent is not None and ent.state == state:
+            _footers.move_to_end(path)
+            return ent
+    ent = Footer(path, state)
+    with _footers_lock:
+        _footers[path] = ent
+        _footers.move_to_end(path)
+        while len(_footers) > FOOTER_MEMO_ENTRIES:
+            _footers.popitem(last=False)
+    return ent
 
 
 def generation_avgdl(gen_dir: str) -> float:

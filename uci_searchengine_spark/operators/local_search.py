@@ -40,6 +40,7 @@ import pandas as pd
 from uci_searchengine_spark.operators import wand as _wand
 from uci_searchengine_spark.operators.index_build import (
     IndexMeta,
+    footer,
     generation_avgdl,
     generation_dirs,
     parquet_files,
@@ -94,37 +95,52 @@ def read_pruned_segments_local(
     multi-generation df_global resolution (sum of fragment-local df per
     term). ``buckets`` = ``(b0, b1)`` keeps one bucket range's rows (a
     distributed envelope task), whose df then comes from the driver as
-    ``dfs`` (``term_dfs``)."""
+    ``dfs`` (``term_dfs``). Each file's row groups are pruned on the
+    term (and bucket) min/max of its memoized footer
+    (``index_build.footer``) and only those are read, so a repeated
+    query in the same process reads no footer."""
     import pyarrow as pa
-    import pyarrow.dataset as pads
+    import pyarrow.compute as pc
 
     shard_map = _wand._shards_for_terms(terms, meta.num_shards)
     shards = sorted(set(shard_map.values()))
-    filt = pads.field("term").isin(terms)
-    if buckets is not None:
-        bucket = pads.field("bucket")
-        filt = filt & (bucket >= buckets[0]) & (bucket < buckets[1])
+    want = pa.array(terms, pa.string())
     dirs = generation_dirs(index_dir)
     multi = len(dirs) > 1
     parts = []
     for d in dirs:
         ga = generation_avgdl(d) if multi else None
         for s in shards:
-            p = os.path.join(d, "segments", f"shard={s}")
-            if not os.path.isdir(p):
-                continue
-            ds = pads.dataset(p, format="parquet")
-            cols = [
-                c
-                for c in ds.schema.names
-                if with_positions or c not in ("positions", "pos_block_off")
-            ]
-            tbl = ds.to_table(columns=cols, filter=filt)
-            if multi:
-                tbl = tbl.append_column(
-                    "gen_avgdl", pa.array([ga] * len(tbl), pa.float64())
+            for f in parquet_files(os.path.join(d, "segments", f"shard={s}")):
+                ft = footer(f)
+                rgs = ft.row_groups(
+                    "term", lambda lo, hi: any(lo <= t <= hi for t in terms)
                 )
-            parts.append(tbl)
+                if buckets is not None:
+                    rgs = sorted(set(rgs) & set(ft.row_groups(
+                        "bucket",
+                        lambda lo, hi: lo < buckets[1] and hi >= buckets[0],
+                    )))
+                cols = [
+                    c for c in ft.schema.names
+                    if with_positions or c not in ("positions", "pos_block_off")
+                ]
+                if rgs:
+                    tbl = ft.read(rgs, cols)
+                    keep = pc.is_in(tbl["term"], value_set=want)
+                    if buckets is not None:
+                        b = tbl["bucket"]
+                        keep = pc.and_(keep, pc.and_(
+                            pc.greater_equal(b, buckets[0]), pc.less(b, buckets[1])
+                        ))
+                    tbl = tbl.filter(keep)
+                else:
+                    tbl = ft.schema.empty_table().select(cols)
+                if multi:
+                    tbl = tbl.append_column(
+                        "gen_avgdl", pa.array([ga] * len(tbl), pa.float64())
+                    )
+                parts.append(tbl)
     if not parts:
         return pd.DataFrame()
     pdf = pa.concat_tables(parts, promote_options="default").to_pandas()
@@ -142,23 +158,21 @@ def term_dfs(index_dir: str, meta: IndexMeta, terms: list[str]) -> dict[str, int
     summed over the pruned files of every generation and fragment — the
     df the distributed envelope resolves on the driver and ships to its
     range tasks. A footer-pruned read of the term/df columns (row groups
-    whose term range holds a query term): the driver runs it every
-    query, and a pyarrow dataset scan there held ~10 MB more peak RSS."""
+    whose term range holds a query term, from the memoized footers):
+    the driver runs it every query."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     shards = sorted(set(_wand._shards_for_terms(terms, meta.num_shards).values()))
-    want = pa.array(terms)
+    want = pa.array(terms, pa.string())
     rows_t: list[str] = []
     rows_df: list[int] = []
     for f in _shard_files(index_dir, shards):
-        pf = pq.ParquetFile(f)
-        rgs = [
-            i for i, (lo, hi) in enumerate(_wand._row_group_ranges(pf, "term"))
-            if lo is None or any(lo <= t <= hi for t in terms)
-        ]
-        t = pf.read_row_groups(rgs, columns=["term", "df"], use_threads=False)
+        ft = footer(f)
+        rgs = ft.row_groups("term", lambda lo, hi: any(lo <= t <= hi for t in terms))
+        if not rgs:
+            continue
+        t = ft.read(rgs, ["term", "df"])
         t = t.filter(pc.is_in(t["term"], value_set=want))
         rows_t += t["term"].to_pylist()
         rows_df += t["df"].to_pylist()
@@ -173,14 +187,13 @@ def local_topk_count_docs(
     k: int,
     mode: str = "or",
     excl: "np.ndarray | None" = None,
-    pf_cache: "dict | None" = None,
     boosts: "dict[str, float] | None" = None,
     incl: "np.ndarray | None" = None,
 ) -> tuple[list[dict], int]:
     """In-process twin of ``wand.topk_count_docs``: the SAME range
     closure, called once over the whole pruned frame, then the same
     ``gather_envelope`` (≤k winners' docs fetched once, through the
-    resident footer memo ``pf_cache``). Returns (rows, total) in the
+    process's footer memo). Returns (rows, total) in the
     identical shape. ``incl``: filter context as the sorted driver array
     of allowed doc ids."""
     if mode not in ("or", "and"):
@@ -191,7 +204,7 @@ def local_topk_count_docs(
     fn = _wand.make_envelope_fn(meta, k, mode, len(terms), boosts)(excl)
     return _wand.gather_envelope(
         index_dir, meta.bucket_size, [fn(None, seg, incl=incl)], k,
-        display_terms, pf_cache,
+        display_terms,
     )
 
 
@@ -337,11 +350,9 @@ def vocab_col_bytes(index_dir: str) -> int:
     for serving local suggestions: the vocab is orders of magnitude
     smaller than the postings plane, so this usually fits locally even
     when the postings do not."""
-    import pyarrow.parquet as pq
-
     total = 0
     for f in _shard_files(index_dir):
-        md = pq.ParquetFile(f).metadata
+        md = footer(f).metadata
         for rg in range(md.num_row_groups):
             row = md.row_group(rg)
             for ci in range(row.num_columns):

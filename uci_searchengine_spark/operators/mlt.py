@@ -49,8 +49,11 @@ MAX_TERMS = 25
 
 
 def _source_text(index_dir: str, meta: IndexMeta, doc_id: int) -> "str | None":
-    from uci_searchengine_spark.operators import wand as _wand
-    from uci_searchengine_spark.operators.index_build import generation_dirs
+    from uci_searchengine_spark.operators.index_build import (
+        footer,
+        generation_dirs,
+        parquet_files,
+    )
     import os
 
     docs_dirs = [os.path.join(d, "docs") for d in generation_dirs(index_dir)]
@@ -59,21 +62,12 @@ def _source_text(index_dir: str, meta: IndexMeta, doc_id: int) -> "str | None":
     # fetch uses (fetch_bucket_docs returns snippets, not full text)
 
     for d in docs_dirs:
-        p = os.path.join(d, f"bucket={bucket}")
-        if not os.path.isdir(p):
-            continue
-        for fn_ in sorted(os.listdir(p)):
-            if not fn_.endswith(".parquet"):
-                continue
-            pf, ranges = _wand._doc_file_entry(os.path.join(p, fn_))
-            need = [
-                i
-                for i, (lo, hi) in enumerate(ranges)
-                if lo is None or lo <= doc_id <= hi
-            ]
+        for fp in parquet_files(os.path.join(d, f"bucket={bucket}")):
+            ft = footer(fp)
+            need = ft.row_groups("doc_id", lambda lo, hi: lo <= doc_id <= hi)
             if not need:
                 continue
-            tbl = pf.read_row_groups(need, columns=["doc_id", "text"], use_threads=False)
+            tbl = ft.read(need, ["doc_id", "text"])
             for did, text in zip(tbl["doc_id"], tbl["text"]):
                 if did.as_py() == doc_id:
                     return text.as_py()

@@ -2,10 +2,10 @@
 
 The reference serves queries from a resident FastAPI process with the
 SQLite handles open (backend/app/api/search.py, main.py); the Spark
-analog is a resident ``Searcher`` that loads the index metadata and the
-segment/doc-store DataFrames ONCE and reuses them for every query —
-saving per-query meta reads, file listings, and schema inference that a
-bare ``score_wand(spark, index_dir, q)`` call repays each time.
+analog is a resident ``Searcher`` that loads the index metadata once and
+the segment/doc-store DataFrames on first use, and reuses them for every
+query — saving per-query meta reads, file listings, and schema inference
+that a bare ``score_wand(spark, index_dir, q)`` call repays each time.
 
 Per query: partition-pruned segment scan of the query terms' shards →
 block-max scoring of doc-id ranges → global top-k. The search envelope
@@ -17,6 +17,7 @@ same parquet scan.
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 
@@ -69,14 +70,20 @@ class Searcher:
         self._qcache: "OrderedDict[tuple, tuple[dict, str]]" = OrderedDict()
         self._qcache_token = None
         self.cache_hits = 0
-        # local path's doc-store footer memo (path,size,mtime)-keyed
-        self._pf_cache: dict = {}
         self._docs_bytes: int | None = None  # doc-store size, lazy
         self._vocab_pdf = None  # resident (term, df) frame, lazy
         self._vocab_bytes: int | None = None
-        # analyzed once; every query applies filters to these relations
-        self._segments: DataFrame = load_segments(spark, index_dir)
-        self._docs: DataFrame = load_docs(spark, index_dir)
+
+    # analyzed on first use, then reused: every relational query applies
+    # its filters to these (the envelope reads the files directly, so a
+    # reload that only serves it starts no Spark read)
+    @functools.cached_property
+    def _segments(self) -> DataFrame:
+        return load_segments(self.spark, self.index_dir)
+
+    @functools.cached_property
+    def _docs(self) -> DataFrame:
+        return load_docs(self.spark, self.index_dir)
 
     # -------------------------------------------------------------- scoring
     def top_k(self, query: str, k: int = 10, mode: str = "or") -> DataFrame:
@@ -198,13 +205,13 @@ class Searcher:
         return [r.asDict() for r in df.collect()]
 
     def _attach(self, rows: list[dict], display_terms: list[str]) -> list[dict]:
-        """Doc-attach ≤k winner rows through the resident footer memo
+        """Doc-attach ≤k winner rows through the process's footer memo
         (wand.fetch_winner_docs — bounded, never a join); snippets under
         the shared display rule (bm25.snippet_text)."""
         docs = _wand.fetch_winner_docs(
             self.index_dir, self.meta.bucket_size,
             [r["doc_id"] for r in rows],
-            [t.lower() for t in display_terms], self._pf_cache,
+            [t.lower() for t in display_terms],
         )
         out = []
         for r in rows:
@@ -766,17 +773,11 @@ class Searcher:
         """Cheap token capturing everything that can change a cached
         envelope while THIS Searcher is alive: the tombstone files (a
         delete is the only in-place mutation; appends/merges reload the
-        Searcher via the registry swap)."""
-        d = os.path.join(self.index_dir, "tombstones")
-        if not os.path.isdir(d):
-            return ()
-        return tuple(
-            sorted(
-                (fn, os.path.getsize(os.path.join(d, fn)))
-                for fn in os.listdir(d)
-                if fn.endswith(".parquet")
-            )
-        )
+        Searcher via the registry swap). The same tuple keys the
+        driver's tombstone array (tombstones.load_tombstone_ids)."""
+        from uci_searchengine_spark.operators.tombstones import state_token
+
+        return state_token(self.index_dir)
 
     def search(
         self,
@@ -957,8 +958,7 @@ class Searcher:
             self.last_plan = "local"
             rows, total = local_topk_count_docs(
                 self.index_dir, self.meta, disp, terms,
-                k=page * per_page, mode=mode, excl=excl,
-                pf_cache=self._pf_cache, boosts=boosts,
+                k=page * per_page, mode=mode, excl=excl, boosts=boosts,
                 incl=allowed_ids(
                     hosts, ranges, self._authority_frame, self._dv_frame
                 ) if filtered else None,
@@ -969,7 +969,6 @@ class Searcher:
                 self.spark, self.index_dir, self.meta, disp, terms,
                 k=page * per_page, mode=mode, excl=excl, boosts=boosts,
                 filters=(hosts, ranges) if filtered else None,
-                pf_cache=self._pf_cache,
             )
         start = (page - 1) * per_page
         sel = rows[start : start + per_page]

@@ -94,26 +94,19 @@ def suggest_query(
     correction; known terms pass through. Returns the corrected query
     string, or None when every term is known or nothing is correctable.
 
-    One pruned-shard membership probe for the whole query + one vocab
-    scan per unknown term — the rare path by construction (most queries
-    have no typos)."""
-    from pyspark.sql import functions as F
-
+    One job-free membership probe for the whole query (the footer-pruned
+    term read of ``local_search.term_dfs``, on the driver) + one vocab
+    scan job per unknown term — the rare path by construction (most
+    queries have no typos)."""
     from uci_searchengine_spark.operators.bm25 import terms_for_index
     from uci_searchengine_spark.operators.index_build import IndexMeta
-    from uci_searchengine_spark.operators.wand import pruned_segments
+    from uci_searchengine_spark.operators.local_search import term_dfs
 
     meta = IndexMeta.load(index_dir)
     terms = terms_for_index(meta, query)
     if not terms:
         return None
-    seen = {
-        r["term"]
-        for r in pruned_segments(spark, index_dir, meta, terms)
-        .select("term")
-        .distinct()
-        .collect()
-    }
+    seen = set(term_dfs(index_dir, meta, terms))
     unknown = [t for t in terms if t not in seen]
     if not unknown:
         return None

@@ -25,6 +25,7 @@ breadth extension.
 from __future__ import annotations
 
 import os
+import threading
 import uuid
 
 import numpy as np
@@ -58,14 +59,32 @@ def _files(index_dir: str) -> list[str]:
     return parquet_files(os.path.join(index_dir, "tombstones"))
 
 
+def state_token(index_dir: str) -> tuple:
+    """``(name, st_ino, st_size, st_mtime_ns)`` of every tombstone file,
+    sorted — changes with every ``delete_docs`` / ``clear_tombstones``,
+    the only in-place mutations of an index."""
+    d = os.path.join(index_dir, "tombstones")
+    try:
+        names = sorted(n for n in os.listdir(d) if n.endswith(".parquet"))
+    except OSError:
+        return ()
+    out = []
+    for n in names:
+        try:
+            st = os.stat(os.path.join(d, n))
+        except OSError:
+            continue
+        out.append((n, st.st_ino, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
 def tombstone_count_estimate(index_dir: str) -> int:
     """Upper bound on the tombstone count from parquet footers only
-    (duplicate deletes counted twice; zero I/O beyond metadata)."""
-    import pyarrow.parquet as pq
+    (duplicate deletes counted twice; the footers come from the
+    process's memo, ``index_build.footer``)."""
+    from uci_searchengine_spark.operators.index_build import footer
 
-    return sum(
-        pq.ParquetFile(f).metadata.num_rows for f in _files(index_dir)
-    )
+    return sum(footer(f).metadata.num_rows for f in _files(index_dir))
 
 
 def bucketed_tombstones(spark, index_dir: str, bucket_size: int):
@@ -86,6 +105,14 @@ def bucketed_tombstones(spark, index_dir: str, bucket_size: int):
     )
 
 
+# index dir -> (state_token, its whole tombstone array): the driver
+# array every query's scorer excludes, re-read only when a tombstone
+# file changes; a few index dirs at most per process
+_ids_memo: "dict[str, tuple[tuple, np.ndarray]]" = {}
+_ids_lock = threading.Lock()
+_IDS_MEMO_DIRS = 8
+
+
 def load_tombstone_ids(
     index_dir: str, lo: "int | None" = None, hi: "int | None" = None
 ) -> np.ndarray:
@@ -93,7 +120,26 @@ def load_tombstone_ids(
     driver-side load — callers that must scale past DRIVER_CAP use
     ``bucketed_tombstones`` instead (the scorers switch automatically),
     or read one doc-id range ``[lo, hi)`` (a doc_id-filtered read;
-    the distributed envelope's range tasks)."""
+    the distributed envelope's range tasks). The whole array is
+    memoized per index dir on ``state_token`` and returned read-only."""
+    if lo is None:
+        tok = state_token(index_dir)
+        with _ids_lock:
+            hit = _ids_memo.get(index_dir)
+        if hit is not None and hit[0] == tok:
+            return hit[1]
+        ids = _read_ids(index_dir, None, None)
+        ids.flags.writeable = False
+        with _ids_lock:
+            _ids_memo.pop(index_dir, None)
+            if len(_ids_memo) >= _IDS_MEMO_DIRS:
+                _ids_memo.pop(next(iter(_ids_memo)))
+            _ids_memo[index_dir] = (tok, ids)
+        return ids
+    return _read_ids(index_dir, lo, hi)
+
+
+def _read_ids(index_dir: str, lo: "int | None", hi: "int | None") -> np.ndarray:
     import pyarrow.parquet as pq
 
     parts = [

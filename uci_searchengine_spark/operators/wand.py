@@ -62,6 +62,7 @@ from uci_searchengine_spark.operators.codec import unpack_postings
 from uci_searchengine_spark.operators.index_build import (
     DOCS_PER_BUCKET,
     IndexMeta,
+    footer,
     load_segments,
     parquet_files,
 )
@@ -712,53 +713,20 @@ def _topk_over_segments(
 _DOC_COLS = ["doc_id", "url", "title", "text"]
 
 
-def _row_group_ranges(pf, column: str) -> list:
-    """``[(min, max)]`` of ``column`` per row group of the open
-    ParquetFile ``pf``, from the footer alone; ``(None, None)`` where a
-    row group has no stats (always read)."""
-    md = pf.metadata
-    if not md.num_row_groups:
-        return []
-    ci = next(
-        i
-        for i in range(md.num_columns)
-        if md.row_group(0).column(i).path_in_schema == column
-    )
-    ranges = []
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(ci).statistics
-        if st is None or not st.has_min_max:
-            ranges.append((None, None))  # no stats → always read
-        else:
-            ranges.append((st.min, st.max))
-    return ranges
-
-
-def _doc_file_entry(fp: str):
-    """(ParquetFile, [(min_doc_id, max_doc_id) per row group]) for one
-    doc-store file — the footer-only metadata a winner fetch prunes on.
-    Row groups are doc_id-sorted (DOCS_ROW_GROUP), so stats are tight."""
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(fp)
-    return pf, _row_group_ranges(pf, "doc_id")
-
-
 def fetch_bucket_docs(
     docs_dirs: list[str],
     bucket: int,
     ids: list[int],
     lowered: list[str],
-    pf_cache: "dict | None" = None,
 ) -> dict[int, tuple[str, str, str]]:
     """Co-located doc-store fetch for one bucket's winners: read ONLY
     the row groups of the bucket's own ``bucket=`` dir(s) whose doc_id
     stats cover a winner (footer-stats pruning over the doc_id-sorted
     DOCS_ROW_GROUP layout) — never a join. Both plans' envelopes call
     it for their ≤k final winners (``fetch_winner_docs``, on the
-    driver). ``pf_cache`` (resident serving) memoizes
-    footers keyed by (path, size, mtime) so repeat queries skip the
-    metadata read. Returns {doc_id: (url, title, snippet)} with
+    driver). The footers and their doc_id ranges come from the
+    process's footer memo (``index_build.footer``), so a repeat query
+    reads no metadata. Returns {doc_id: (url, title, snippet)} with
     snippets under the reference display rule (bm25.snippet_text)."""
     from uci_searchengine_spark.operators.bm25 import snippet_text
 
@@ -767,24 +735,13 @@ def fetch_bucket_docs(
     docs: dict[int, tuple[str, str, str]] = {}
     for d in docs_dirs:
         for fp in parquet_files(os.path.join(d, f"bucket={bucket}")):
-            if pf_cache is not None:
-                stt = os.stat(fp)
-                key = (fp, stt.st_size, stt.st_mtime_ns)
-                ent = pf_cache.get(key)
-                if ent is None:
-                    ent = pf_cache[key] = _doc_file_entry(fp)
-            else:
-                ent = _doc_file_entry(fp)
-            pf, ranges = ent
-            need = [
-                i
-                for i, (lo, hi) in enumerate(ranges)
-                if lo is None
-                or any(lo <= x <= hi for x in srt)
-            ]
+            ft = footer(fp)
+            need = ft.row_groups(
+                "doc_id", lambda lo, hi: any(lo <= x <= hi for x in srt)
+            )
             if not need:
                 continue
-            tbl = pf.read_row_groups(need, columns=_DOC_COLS, use_threads=False)
+            tbl = ft.read(need, _DOC_COLS)
             for did, url, title, text in zip(
                 tbl["doc_id"], tbl["url"], tbl["title"], tbl["text"]
             ):
@@ -810,7 +767,6 @@ def fetch_winner_docs(
     bucket_size: int,
     ids: list[int],
     lowered: list[str],
-    pf_cache: "dict | None" = None,
 ) -> dict[int, tuple[str, str, str]]:
     """Driver-side doc-store fetch for ≤k winners from any buckets: one
     ``fetch_bucket_docs`` per bucket they fall in (never a join)."""
@@ -820,7 +776,7 @@ def fetch_winner_docs(
         by_bucket.setdefault(int(d) // bucket_size, []).append(int(d))
     docs: dict[int, tuple[str, str, str]] = {}
     for bucket, bids in by_bucket.items():
-        docs.update(fetch_bucket_docs(dirs, bucket, bids, lowered, pf_cache))
+        docs.update(fetch_bucket_docs(dirs, bucket, bids, lowered))
     return docs
 
 
@@ -907,7 +863,6 @@ def gather_envelope(
     parts: list,
     k: int,
     display_terms: list[str],
-    pf_cache: "dict | None" = None,
 ) -> tuple[list[dict], int]:
     """Both plans' last step: the envelope from per-range ``(n_matched,
     [(doc_id, score)])`` parts — the total summed, the ≤k global winners
@@ -918,7 +873,7 @@ def gather_envelope(
     top = sorted((t for _, p in parts for t in p), key=lambda t: (-t[1], t[0]))[:k]
     docs = fetch_winner_docs(
         index_dir, bucket_size, [d for d, _ in top],
-        [t.lower() for t in display_terms], pf_cache,
+        [t.lower() for t in display_terms],
     )
     rows = []
     for d, score in top:
@@ -942,7 +897,6 @@ def topk_count_docs(
     boosts: "dict[str, float] | None" = None,
     filters: "tuple[list, list] | None" = None,
     stats: "tuple[int, float, dict] | None" = None,
-    pf_cache: "dict | None" = None,
 ) -> tuple[list[dict], int]:
     """The search envelope on the distributed plan: ONE scatter-gather
     stage, ``sc.parallelize(ranges, n).mapPartitions(task).collect()``
@@ -1014,4 +968,4 @@ def topk_count_docs(
             yield fn(None, seg, incl=incl)
 
     parts = sc.parallelize(ranges, len(ranges)).mapPartitions(task).collect()
-    return gather_envelope(index_dir, bs, parts, k, display_terms, pf_cache)
+    return gather_envelope(index_dir, bs, parts, k, display_terms)

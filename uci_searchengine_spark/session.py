@@ -8,8 +8,26 @@ Spark configs.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
+
+# longest AF_UNIX socket path the OS takes (sun_path is 108 bytes, NUL
+# included), and the name Spark gives each socket under its dir:
+# ".<uuid4>.sock", 42 characters
+_SUN_PATH_MAX = 107
+_UDS_NAME_LEN = 42
+
+
+def unix_socket_dir() -> "str | None":
+    """The dir the Python-worker Unix sockets of a local session go in:
+    the session's temp dir (``tempfile.gettempdir()``, which follows
+    ``TMPDIR``), or None when a socket path there would exceed the
+    OS limit (the session then keeps Spark's loopback TCP channel)."""
+    d = tempfile.gettempdir()
+    if len(os.fsencode(d)) + 1 + _UDS_NAME_LEN > _SUN_PATH_MAX:
+        return None
+    return d
 
 
 def get_spark(
@@ -18,6 +36,16 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The engine's SparkSession (``getOrCreate``; ``extra_conf`` last,
+    so a caller's setting wins).
+
+    On a local master (``local[N]``, ``local-cluster``), Python tasks
+    run under the engine's worker daemon (``pyworker``: modules the
+    tasks import are loaded and frozen before it forks) and talk to the
+    JVM over Unix-domain sockets (``spark.python.unix.domain.socket.*``)
+    in the session's temp dir: the loopback TCP channel stalls a task
+    ~40 ms reading its input. A temp dir too long for a socket path
+    (``unix_socket_dir``) keeps TCP."""
     # Keep Python-worker malloc arenas resident: this environment (a
     # microVM) faults fresh pages in at ~15-50 MB/s, so numpy's default
     # mmap-per-large-buffer means every task re-pays multi-second
@@ -65,6 +93,11 @@ def get_spark(
         builder = builder.config(
             "spark.python.daemon.module", "uci_searchengine_spark.pyworker"
         )
+        sock_dir = unix_socket_dir()
+        if sock_dir is not None:
+            builder = builder.config(
+                "spark.python.unix.domain.socket.enabled", "true"
+            ).config("spark.python.unix.domain.socket.dir", sock_dir)
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
