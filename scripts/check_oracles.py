@@ -46,7 +46,7 @@ def table_hash(rows, cols):
 
 
 def main():
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")

@@ -25,7 +25,7 @@ def main() -> None:
     from uci_searchengine_spark.sources.synth import synth_pages
     from uci_searchengine_spark.entry_queries import q_revenue_topk, q_pricing_summary
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()
     if not os.path.exists(os.path.join(IDX, "meta.json")):
         shutil.rmtree(IDX, ignore_errors=True)
         build_index(

@@ -23,7 +23,7 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 
 def main():
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     books = pq_codebooks(emb, m=8, k=16)
     m, k, dsub = books.shape

@@ -5,6 +5,7 @@ oracle-pinned single-query scorer."""
 import math
 
 import pytest
+from pyspark.sql import functions as F
 
 from uci_searchengine_spark.operators.batch_eval import batch_topk
 from uci_searchengine_spark.operators.filtered import filtered_topk
@@ -118,6 +119,29 @@ def test_filtered_topk_vs_oracle(spark, index_small, oracle_small):
     )
     for gd, gs in got:
         assert math.isclose(gs, unfiltered[gd], rel_tol=1e-12)
+
+
+def test_filtered_topk_uncoalesced_shuffle(spark, index_small, oracle_small):
+    """The allowed relation's bucket key meets the segments' int bucket
+    column in one cogroup: with the shuffle left at all its partitions
+    (an allowed set past the coalescing target), both sides must hash
+    the same key type, or a bucket's allowed ids reach another task."""
+    query = "stop0 arbak"
+    allowed = spark.range(0, oracle_small.n_docs, 3).select(
+        F.col("id").alias("doc_id")
+    )
+    want = sorted(
+        ((d, s) for d, s in oracle_small.score(query).items() if d % 3 == 0),
+        key=lambda kv: (-kv[1], kv[0]),
+    )[:10]
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = filtered_topk(spark, index_small, query, allowed, k=10).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert [r["doc_id"] for r in got] == [d for d, _ in want]
 
 
 def test_filtered_topk_and_mode(spark, index_small, oracle_small):

@@ -210,7 +210,7 @@ def test_ranges_local_and_oracle_agree(spark, lifecycle, monkeypatch):
     assert meta.gens == 2
     n_buckets = -(-max(meta.n_docs, meta.next_doc_id) // meta.bucket_size)
     assert n_buckets > 4
-    arr = load_excl(d, spark, meta.bucket_size)
+    arr = load_excl(d, meta.bucket_size)
     excl = set(arr.tolist())
     k = 10**4  # every match: all their scores are compared
     for raw, mode, q, terms, boosts, filters, allowed in _parsed(d, meta):
@@ -232,7 +232,7 @@ def test_ranges_local_and_oracle_agree(spark, lifecycle, monkeypatch):
         assert local == want, (raw, "local")
         for cap in (10_000_000, 1):  # driver array; files read per range
             monkeypatch.setattr(tombstones, "DRIVER_CAP", cap)
-            ex = load_excl(d, spark, meta.bucket_size)
+            ex = load_excl(d, meta.bucket_size)
             assert isinstance(ex, BucketedExcl) == (cap == 1)
             for n in (1, 2, 3, n_buckets):
                 monkeypatch.setattr(

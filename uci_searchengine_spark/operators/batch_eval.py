@@ -216,7 +216,7 @@ def batch_topk(
 
         return fn
 
-    excl = load_excl(index_dir, spark, meta.bucket_size)
+    excl = load_excl(index_dir, meta.bucket_size)
     per_bucket = apply_per_bucket(seg, excl, make_fn, _BATCH_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (

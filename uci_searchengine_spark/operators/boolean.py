@@ -221,7 +221,7 @@ def boolean_search(
         spark, index_dir, meta, all_terms,
         with_positions=bool(bq.phrases) and use_pos,
     )
-    tomb_in = load_excl(index_dir, spark, meta.bucket_size)  # joins the NOT set
+    tomb_in = load_excl(index_dir, meta.bucket_size)  # joins the NOT set
     make_fn = make_boolean_fn(meta, index_dir, bq, k, use_pos)
     per_bucket = apply_per_bucket(seg, tomb_in, make_fn, _OUT)
     return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

@@ -133,7 +133,7 @@ def blended_topk(
 
     return _topk_over_segments(
         pruned_segments(spark, index_dir, meta, terms), meta, k,
-        excl=load_excl(index_dir, spark, bucket_size), transform=transform,
+        excl=load_excl(index_dir, bucket_size), transform=transform,
     )
 
 
@@ -206,7 +206,7 @@ def decay_topk(
 
     return _topk_over_segments(
         pruned_segments(spark, index_dir, meta, terms), meta, k,
-        excl=load_excl(index_dir, spark, bucket_size), transform=transform,
+        excl=load_excl(index_dir, bucket_size), transform=transform,
     )
 
 
@@ -289,7 +289,7 @@ def sort_by_field_topk(
 
         return fn
 
-    excl = load_excl(index_dir, spark, meta.bucket_size)
+    excl = load_excl(index_dir, meta.bucket_size)
     per_bucket = apply_per_bucket(seg, excl, make_fn, _SORT_SCHEMA)
     val_order = F.asc("value") if asc else F.desc("value")
     return per_bucket.orderBy(val_order, F.asc("doc_id")).limit(k)

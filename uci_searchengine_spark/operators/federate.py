@@ -133,7 +133,7 @@ def federated_topk(
             seg,
             meta_g,
             k,
-            excl=load_excl(d, spark, meta_g.bucket_size),
+            excl=load_excl(d, meta_g.bucket_size),
         )
         branches.append(
             topk_i.select(
@@ -194,7 +194,7 @@ def federated_envelope(
     for lbl, d, m in zip(labels, index_dirs, metas):
         rows_i, total_i = topk_count_docs(
             spark, d, m, disp, terms, k=page * per_page, mode=mode,
-            excl=load_excl(d, spark, m.bucket_size),
+            excl=load_excl(d, m.bucket_size),
             stats=(n_docs, avgdl, dfs),
         )
         total += total_i

@@ -17,11 +17,12 @@ sorted driver array, each range task of the distributed envelope over
 its own buckets of the doc store and doc-value planes
 (``wand.topk_count_docs``). ``filtered_topk`` keys its relation on the
 bucket grid and cogroups it per scoring bucket
-(``wand.apply_per_bucket``; tombstones past the driver cap fold in by
-anti-join). Either way the kernel masks at accumulation time — before
-θ ever tightens — so block-max pruning stays admissible for the
-post-filter top-k (a post-scoring filter would drop filtered-in docs
-that unfiltered docs had pruned away).
+(``wand.apply_per_bucket``; past the driver cap the same task reads
+its bucket's tombstone ids from the files). Either way the kernel
+masks at accumulation time — before θ ever tightens — so block-max
+pruning stays admissible for the post-filter top-k (a post-scoring
+filter would drop filtered-in docs that unfiltered docs had pruned
+away).
 
 Reference: no filtered search exists in UCI-SearchEngine; breadth
 extension with Lucene semantics.
@@ -199,6 +200,6 @@ def filtered_topk(
         return spark.createDataFrame([], "doc_id long, score double")
     return _topk_over_segments(
         pruned_segments(spark, index_dir, meta, terms), meta, k, mode=mode,
-        n_terms=len(terms), excl=load_excl(index_dir, spark, meta.bucket_size),
+        n_terms=len(terms), excl=load_excl(index_dir, meta.bucket_size),
         incl=allowed,
     )

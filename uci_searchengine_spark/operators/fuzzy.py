@@ -201,5 +201,5 @@ def fuzzy_search(
         meta,
         k,
         mode="or",
-        excl=load_excl(index_dir, spark, meta.bucket_size),
+        excl=load_excl(index_dir, meta.bucket_size),
     )

@@ -15,8 +15,8 @@ Dataflow:
    rank by ``tf · idf`` desc (ties: term asc), keep ``max_terms``
    (Lucene's maxQueryTerms=25 default);
 3. scoring: the selected disjunction through the block-max pruned
-   scorer, the source doc excluded AT ACCUMULATION time (riding the
-   tombstone-exclusion lane, so pruning stays admissible).
+   scorer at k+1, the source doc filtered out of those (the source
+   always matches its own terms, so it costs one extra row).
 
 Scale: steps 1-2 are driver-bounded (one doc); step 3 is the standard
 pruned query path. MLT for EVERY doc at once (related-links
@@ -30,7 +30,6 @@ Lucene semantics (maxQueryTerms=25, min_tf/min_df floors).
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,7 +38,6 @@ from uci_searchengine_spark.operators.bm25 import idf as idf_fn
 from uci_searchengine_spark.operators.index_build import IndexMeta
 from uci_searchengine_spark.operators.suggest import vocab
 from uci_searchengine_spark.operators.wand import (
-    BucketedExcl,
     _topk_over_segments,
     load_excl,
     pruned_segments,
@@ -122,20 +120,19 @@ def mlt_topk_for_terms(
     k: int,
 ) -> DataFrame:
     """Scoring tail shared by ``more_like_this`` and the serving
-    surface: the selected disjunction with the source doc excluded."""
+    surface: the selected disjunction with the source doc excluded —
+    a k+1 fetch with the source filtered out ((score desc, doc_id asc)
+    is a total order, so dropping one row of the k+1 leaves the top k
+    of the rest)."""
     seg = pruned_segments(spark, index_dir, meta, terms)
-    excl = load_excl(index_dir, spark, meta.bucket_size)
-    if isinstance(excl, BucketedExcl):
-        # keep the relation; drop the source post-hoc from a k+1 fetch
-        out = _topk_over_segments(seg, meta, k + 1, mode="or", excl=excl)
-        return (
-            out.filter(F.col("doc_id") != int(exclude_id))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-    src = np.array([int(exclude_id)], dtype=np.int64)
-    excl_arr = src if excl is None else np.union1d(excl, src)
-    return _topk_over_segments(seg, meta, k, mode="or", excl=excl_arr)
+    out = _topk_over_segments(
+        seg, meta, k + 1, mode="or", excl=load_excl(index_dir, meta.bucket_size)
+    )
+    return (
+        out.filter(F.col("doc_id") != int(exclude_id))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+    )
 
 
 def more_like_this(

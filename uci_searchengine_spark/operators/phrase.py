@@ -241,7 +241,7 @@ def phrase_search(
     if not seq:
         return empty
     seg = pruned_segments(spark, index_dir, meta, terms, with_positions=use_pos)
-    excl = load_excl(index_dir, spark, meta.bucket_size)
+    excl = load_excl(index_dir, meta.bucket_size)
     make_fn = make_phrase_fn(meta, index_dir, seq, terms, k, use_pos, slop)
     per_bucket = apply_per_bucket(seg, excl, make_fn, _OUT_SCHEMA)
     return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

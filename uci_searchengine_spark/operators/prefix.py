@@ -206,5 +206,5 @@ def prefix_search(
         meta,
         k,
         mode="or",
-        excl=load_excl(index_dir, spark, meta.bucket_size),
+        excl=load_excl(index_dir, meta.bucket_size),
     )

@@ -98,7 +98,7 @@ class Searcher:
         seg = _wand.prune_relation(self._segments, meta, terms)
         return _wand._topk_over_segments(
             seg, meta, k, mode=mode, n_terms=len(terms),
-            excl=_wand.load_excl(self.index_dir, self.spark, meta.bucket_size),
+            excl=_wand.load_excl(self.index_dir, meta.bucket_size),
         )
 
     def phrase(self, phrase: str, k: int = 10, method: str = "auto"):
@@ -134,9 +134,7 @@ class Searcher:
         seq, terms, use_pos = phrase_plan(self.meta, phrase, method, slop)
         if not seq:
             return []
-        excl = _wand.load_excl(
-            self.index_dir, self.spark, self.meta.bucket_size
-        )
+        excl = _wand.load_excl(self.index_dir, self.meta.bucket_size)
         # positional verify is index-only; doc-store verify tokenizes
         # candidate docs in-process
         if self._use_local(terms, excl, plan, docstore=not use_pos):
@@ -186,9 +184,7 @@ class Searcher:
         )
         if not bq.positive_terms:
             return []
-        excl = _wand.load_excl(
-            self.index_dir, self.spark, self.meta.bucket_size
-        )
+        excl = _wand.load_excl(self.index_dir, self.meta.bucket_size)
         # phrases verify from the doc store unless positional
         docstore = bool(bq.phrases) and not use_pos
         if self._use_local(all_terms, excl, plan, docstore=docstore):
@@ -948,7 +944,7 @@ class Searcher:
                 "did_you_mean": None,
                 "results": [],
             }
-        excl = _wand.load_excl(self.index_dir, self.spark, self.meta.bucket_size)
+        excl = _wand.load_excl(self.index_dir, self.meta.bucket_size)
         filtered = bool(hosts or ranges)
         if self._use_local(terms, excl, plan, docstore=filtered):
             from uci_searchengine_spark.operators.local_search import (

@@ -10,13 +10,13 @@ without the deleted pages is the compaction step.
 Scale note: below ``DRIVER_CAP`` (~10^7 ids, 80 MB) the exclusion set
 is loaded driver-side as a sorted int64 array and shipped in the scorer
 closures (the same mechanism boolean NOT uses) — exact and cheap for
-the common case. Past the cap the scorers switch to the bucket-
-cogrouped exclusion relation (``bucketed_tombstones``): tombstones are
-keyed by the SAME doc-range bucket grid as the segments, so each
-scoring task cogroups its own bucket's exclusion ids — no driver
-materialization at any tombstone count (wand.apply_per_bucket); the
-search envelope's range tasks read their doc-id range of the files
-(``load_tombstone_ids(index_dir, lo, hi)``).
+the common case. Past the cap every scoring task reads its own doc-id
+range of the files (``load_tombstone_ids(index_dir, lo, hi)``, through
+``wand.BucketedExcl``): one bucket per ``apply_per_bucket`` group, one
+range per envelope task — no driver materialization at any tombstone
+count, and no extra plan node. ``delete_docs`` writes one row group
+per bucket, so such a read decodes only its own buckets' row groups
+(files written before that hold one row group and are decoded whole).
 
 Reference: no delete path exists (crawled pages are append-only);
 breadth extension.
@@ -24,21 +24,27 @@ breadth extension.
 
 from __future__ import annotations
 
+import json
 import os
 import threading
 import uuid
 
 import numpy as np
 
-# max tombstones shipped as a driver-side closure array; beyond this the
-# scorers cogroup the bucketed relation instead. Module-level so tests
-# can lower it to exercise the cogrouped path on small fixtures.
+# max tombstones shipped as a driver-side closure array; beyond this
+# each scoring task reads its own range of the files instead.
+# Module-level so tests can lower it to exercise the per-task reads on
+# small fixtures.
 DRIVER_CAP = 10_000_000
 
 
 def delete_docs(index_dir: str, doc_ids) -> int:
     """Append tombstones; returns the total tombstone count (exact when
-    the set fits the driver cap, else the parquet-metadata upper bound)."""
+    the set fits the driver cap, else the parquet-metadata upper bound).
+
+    The file holds one row group per doc-range bucket of the index's
+    grid (``meta.json``'s ``bucket_size``), so a task reading one
+    bucket's ids decodes only that bucket's row group of each file."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -46,7 +52,14 @@ def delete_docs(index_dir: str, doc_ids) -> int:
     d = os.path.join(index_dir, "tombstones")
     os.makedirs(d, exist_ok=True)
     path = os.path.join(d, f"tomb-{uuid.uuid4().hex[:12]}.parquet")
-    pq.write_table(pa.table({"doc_id": ids}), path + ".tmp")
+    # meta.json read directly: IndexMeta.load may itself call delete_docs
+    with open(os.path.join(index_dir, "meta.json")) as f:
+        bs = int(json.load(f)["bucket_size"])
+    cuts = np.flatnonzero(np.diff(ids // bs)) + 1
+    schema = pa.schema([("doc_id", pa.int64())])
+    with pq.ParquetWriter(path + ".tmp", schema) as w:
+        for part in np.split(ids, cuts):
+            w.write_table(pa.table({"doc_id": part}, schema=schema))
     os.replace(path + ".tmp", path)
     if tombstone_count_estimate(index_dir) <= DRIVER_CAP:
         return int(load_tombstone_ids(index_dir).size)
@@ -87,24 +100,6 @@ def tombstone_count_estimate(index_dir: str) -> int:
     return sum(footer(f).metadata.num_rows for f in _files(index_dir))
 
 
-def bucketed_tombstones(spark, index_dir: str, bucket_size: int):
-    """The scale path: tombstones as a Spark relation keyed by the
-    index's doc-range bucket — cogroup-ready against the segment grid.
-    Duplicate ids are fine (per-bucket consumers np.unique locally)."""
-    from pyspark.sql import functions as F
-
-    d = os.path.join(index_dir, "tombstones")
-    return (
-        spark.read.parquet(d)
-        .select(
-            (F.col("doc_id") / F.lit(int(bucket_size)))
-            .cast("long")
-            .alias("bucket"),
-            "doc_id",
-        )
-    )
-
-
 # index dir -> (state_token, its whole tombstone array): the driver
 # array every query's scorer excludes, re-read only when a tombstone
 # file changes; a few index dirs at most per process
@@ -117,11 +112,10 @@ def load_tombstone_ids(
     index_dir: str, lo: "int | None" = None, hi: "int | None" = None
 ) -> np.ndarray:
     """Sorted unique tombstoned doc ids (empty array if none). Exact
-    driver-side load — callers that must scale past DRIVER_CAP use
-    ``bucketed_tombstones`` instead (the scorers switch automatically),
-    or read one doc-id range ``[lo, hi)`` (a doc_id-filtered read;
-    the distributed envelope's range tasks). The whole array is
-    memoized per index dir on ``state_token`` and returned read-only."""
+    driver-side load — past DRIVER_CAP a scoring task reads only its
+    doc-id range ``[lo, hi)`` (``wand.BucketedExcl``; the scorers switch
+    automatically). The whole array is memoized per index dir on
+    ``state_token`` and returned read-only."""
     if lo is None:
         tok = state_token(index_dir)
         with _ids_lock:
@@ -140,37 +134,30 @@ def load_tombstone_ids(
 
 
 def _read_ids(index_dir: str, lo: "int | None", hi: "int | None") -> np.ndarray:
-    import pyarrow.parquet as pq
+    """The files' ids in ``[lo, hi)`` (all when ``lo`` is None): only
+    the row groups whose doc_id stats meet the range are read, over the
+    process's footer memo (``index_build.footer``)."""
+    from uci_searchengine_spark.operators.index_build import footer
 
-    parts = [
-        pq.read_table(
-            f, columns=["doc_id"],
-            filters=None if lo is None
-            else [("doc_id", ">=", lo), ("doc_id", "<", hi)],
-        )
-        .column("doc_id")
-        .to_numpy()
-        for f in _files(index_dir)
-    ]
+    def keep(a, b):
+        return lo is None or (a < hi and b >= lo)
+
+    parts = []
+    for f in _files(index_dir):
+        ft = footer(f)
+        rgs = ft.row_groups("doc_id", keep)
+        if rgs:
+            a = ft.read(rgs, ["doc_id"]).column("doc_id").to_numpy()
+            parts.append(a if lo is None else a[(a >= lo) & (a < hi)])
     if not parts:
         return np.empty(0, dtype=np.int64)
     return np.unique(np.concatenate(parts)).astype(np.int64)
 
 
 def is_deleted(index_dir: str, doc_id: int) -> bool:
-    """Membership test for ONE doc id — a filtered single-column read of
-    the tombstone files (row-group stats prune), constant memory at any
-    tombstone count (never materializes the full set)."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as ds
-
-    files = _files(index_dir)
-    if not files:
-        return False
-    t = ds.dataset(files).to_table(
-        columns=["doc_id"], filter=pc.field("doc_id") == int(doc_id)
-    )
-    return t.num_rows > 0
+    """Membership test for ONE doc id — a one-id range read (row-group
+    stats prune), constant memory at any tombstone count."""
+    return load_tombstone_ids(index_dir, int(doc_id), int(doc_id) + 1).size > 0
 
 
 def clear_tombstones(index_dir: str) -> None:

@@ -46,7 +46,6 @@ single-node oracle on the full reference query set (tests/test_query.py).
 from __future__ import annotations
 
 import dataclasses
-import functools
 import os
 
 import numpy as np
@@ -68,42 +67,40 @@ from uci_searchengine_spark.operators.index_build import (
 )
 
 
+@dataclasses.dataclass(frozen=True)
 class BucketedExcl:
-    """Exclusion set too large for a driver closure array. ``df`` is a
-    Spark relation ``(bucket, doc_id)`` on the index's doc-range grid,
-    consumed by cogrouping each scoring bucket with its own exclusion
-    ids (``apply_per_bucket``), and built on first use only: the
-    envelope's range tasks read the tombstone files with a doc_id range
-    filter instead (``topk_count_docs``). Never materialized on the
-    driver."""
+    """Exclusion set too large for a driver closure array (tombstones
+    past ``tombstones.DRIVER_CAP``): plain values a task closure
+    captures. Every scoring task reads its own doc-id range of the
+    tombstone files (``ids``) — one bucket per ``apply_per_bucket``
+    group, one range per envelope task (``topk_count_docs``) — so the
+    set is never materialized on the driver."""
 
-    def __init__(self, spark: SparkSession, index_dir: str, bucket_size: int):
-        self._args = (spark, index_dir, bucket_size)
+    index_dir: str
+    bucket_size: int
 
-    @functools.cached_property
-    def df(self) -> DataFrame:
-        from uci_searchengine_spark.operators.tombstones import bucketed_tombstones
+    def ids(self, lo: int, hi: int) -> np.ndarray:
+        """Sorted unique tombstoned doc ids in ``[lo, hi)``."""
+        from uci_searchengine_spark.operators.tombstones import load_tombstone_ids
 
-        return bucketed_tombstones(*self._args)
+        return load_tombstone_ids(self.index_dir, lo, hi)
 
 
 def load_excl(
-    index_dir: str,
-    spark: "SparkSession | None" = None,
-    bucket_size: "int | None" = None,
+    index_dir: str, bucket_size: "int | None" = None
 ) -> "np.ndarray | BucketedExcl | None":
     """Tombstoned doc ids as the scorers' exclusion input (None if no
     tombstones — the common case costs one isdir check). Below
     tombstones.DRIVER_CAP: a sorted driver array (shipped in the task
-    closure, zero extra plan nodes). Past the cap, with ``spark`` and
-    ``bucket_size`` given: a BucketedExcl instead."""
+    closure, zero extra plan nodes). Past the cap, with ``bucket_size``
+    given: a BucketedExcl whose tasks read their own ids."""
     from uci_searchengine_spark.operators import tombstones as _tomb
 
     est = _tomb.tombstone_count_estimate(index_dir)
     if not est:
         return None
-    if est > _tomb.DRIVER_CAP and spark is not None and bucket_size:
-        return BucketedExcl(spark, index_dir, bucket_size)
+    if est > _tomb.DRIVER_CAP and bucket_size:
+        return BucketedExcl(index_dir, bucket_size)
     t = _tomb.load_tombstone_ids(index_dir)
     return t if t.size else None
 
@@ -117,40 +114,41 @@ def apply_per_bucket(
     bucket_size: int = 0,
 ) -> DataFrame:
     """groupBy(bucket).applyInPandas with tombstone and filter delivery:
-    the common path closes the driver exclusion array (or None) into the
-    scoring fn; a Spark relation of ids is keyed on the SAME bucket grid
-    and cogrouped, so each task receives only its bucket's ids — constant
-    driver memory at any tombstone count or filter size.
+    a driver exclusion array (or None) is closed into the scoring fn; a
+    BucketedExcl is read per group, each task its own bucket's ids from
+    the tombstone files — constant driver memory at any tombstone count.
 
     ``make_fn(local_excl) -> (key, seg_pdf) -> pdf`` builds the scoring
     fn for one bucket's (possibly None) sorted exclusion ids.
 
     ``incl`` (filter context): a ``doc_id`` relation of ALLOWED docs,
-    keyed on ``bucket_size``; the fn gets the bucket's sorted allowed
-    ids as keyword ``incl`` — empty when the bucket has none, which
-    allows nothing (applyInPandas takes two positional parameters, so
-    the optional third one is keyword-only). A BucketedExcl folds into
-    it by anti-join, so at most one relation is cogrouped."""
-    bucketed = isinstance(excl, BucketedExcl)
-    if incl is None and not bucketed:
-        return seg.groupBy("bucket").applyInPandas(make_fn(excl), schema=schema)
-    side = excl.df if bucketed else None
-    if incl is not None:
-        if bucketed:
-            incl = incl.join(side.select("doc_id"), "doc_id", "left_anti")
-        doc = F.col("doc_id").cast("long")
-        side = incl.select(
-            (doc / F.lit(bucket_size)).cast("long").alias("bucket"),
-            doc.alias("doc_id"),
-        )
-    # the task closure must capture no relation — only plain values
-    filtered, arr = incl is not None, None if bucketed else excl
+    keyed on ``bucket_size`` and cogrouped, so each task receives only
+    its bucket's allowed ids as keyword ``incl`` — empty when the
+    bucket has none, which allows nothing (applyInPandas takes two
+    positional parameters, so the optional third one is keyword-only)."""
+    if isinstance(excl, BucketedExcl):
+
+        def fn(key, seg_pdf, **kw):
+            b = int(key[0])
+            ids = excl.ids(b * excl.bucket_size, (b + 1) * excl.bucket_size)
+            return make_fn(ids if ids.size else None)(key, seg_pdf, **kw)
+
+    else:
+        fn = make_fn(excl)
+    if incl is None:
+        return seg.groupBy("bucket").applyInPandas(fn, schema=schema)
+    # the key takes the segments' bucket type: cogroup hash-partitions
+    # each side on its own key, and an int and a long of one value hash
+    # apart, so mixed types split a bucket across tasks
+    doc = F.col("doc_id").cast("long")
+    side = incl.select(
+        (doc / F.lit(bucket_size)).cast(seg.schema["bucket"].dataType).alias("bucket"),
+        doc.alias("doc_id"),
+    )
 
     def fn2(key, seg_pdf, side_pdf):
         ids = np.unique(side_pdf["doc_id"].to_numpy().astype(np.int64))
-        if filtered:
-            return make_fn(arr)(key, seg_pdf, incl=ids)
-        return make_fn(ids if ids.size else None)(key, seg_pdf)
+        return fn(key, seg_pdf, incl=ids)
 
     return (
         seg.groupBy("bucket")
@@ -565,7 +563,7 @@ def score_msm(
         return score_wand(spark, index_dir, query, k, mode="and")
     seg = pruned_segments(spark, index_dir, meta, terms)
     return _topk_over_segments(
-        seg, meta, k, excl=load_excl(index_dir, spark, meta.bucket_size),
+        seg, meta, k, excl=load_excl(index_dir, meta.bucket_size),
         min_match=m,
     )
 
@@ -604,7 +602,7 @@ def score_wand(
     seg = pruned_segments(spark, index_dir, meta, terms)
     return _topk_over_segments(
         seg, meta, k, mode=mode, n_terms=len(terms),
-        excl=load_excl(index_dir, spark, meta.bucket_size), boosts=boosts,
+        excl=load_excl(index_dir, meta.bucket_size), boosts=boosts,
     )
 
 
@@ -907,8 +905,8 @@ def topk_count_docs(
       predicate) under df resolved on the driver (``term_dfs``, shipped
       in the closure, for several generations or split shards);
     - drops tombstones: its slice of the driver array or, past the
-      driver cap (``excl`` a BucketedExcl), the tombstone files read
-      with a doc_id range filter;
+      driver cap (``excl`` a BucketedExcl), its range's ids read from
+      the tombstone files (``BucketedExcl.ids``);
     - restricts eligibility under ``filters`` = (hosts, ranges) to the
       docs of its own buckets of the doc store and doc-value planes
       that pass them (``filtered.allowed_ids``, the local plan's
@@ -935,16 +933,15 @@ def topk_count_docs(
     sc = spark.sparkContext
     n = min(n_b, sc.defaultParallelism)
     cuts = [n_b * i // n for i in range(n + 1)]
-    tomb_files = isinstance(excl, BucketedExcl)
+    tomb = excl if isinstance(excl, BucketedExcl) else None
     ranges = [
-        (b0, b1, None if excl is None or tomb_files
+        (b0, b1, None if excl is None or tomb is not None
          else excl[(excl >= b0 * bs) & (excl < b1 * bs)])
         for b0, b1 in zip(cuts, cuts[1:])
     ]
 
     def task(it):
         from uci_searchengine_spark.operators import filtered, local_search
-        from uci_searchengine_spark.operators.tombstones import load_tombstone_ids
 
         for b0, b1, ex in it:
             seg = local_search.read_pruned_segments_local(
@@ -955,8 +952,8 @@ def topk_count_docs(
                 continue
             if "gen_avgdl" not in seg and smeta.avgdl != own_avgdl:
                 seg["gen_avgdl"] = own_avgdl  # the avgdl of the stored bounds
-            if tomb_files:
-                ex = load_tombstone_ids(index_dir, b0 * bs, b1 * bs)
+            if tomb is not None:
+                ex = tomb.ids(b0 * bs, b1 * bs)
             incl = None
             if filters:
                 incl = filtered.allowed_ids(
