@@ -102,3 +102,28 @@ def test_compact_headline_no_scaling_section():
     c = compact_headline(out)
     assert "scaling" not in c
     assert c["queries"] == out["queries"]
+
+
+def test_scaling_levels_follow_the_host(monkeypatch):
+    """N = max(1, CPUS // 4) and 4N = CPUS, with CPUS read the way
+    get_spark reads it (SPARK_GRAFT_CPUS, else the host's count)."""
+    import importlib
+
+    import bench
+
+    assert bench.scaling_levels(32) == (8, 32)
+    assert bench.scaling_levels(8) == (2, 8)
+    assert bench.scaling_levels(4) == (1, 4)
+    assert bench.scaling_levels(2) == (1, 2)
+    assert bench.scaling_levels(1) == (1, 1)
+    try:
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+        importlib.reload(bench)
+        assert bench.CPUS == (os.cpu_count() or 1)
+        assert (bench.LO, bench.HI) == bench.scaling_levels(bench.CPUS)
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "12")
+        importlib.reload(bench)
+        assert (bench.CPUS, bench.LO, bench.HI, bench.RATIO) == (12, 3, 12, 4.0)
+    finally:
+        monkeypatch.undo()
+        importlib.reload(bench)

@@ -1792,15 +1792,102 @@ def parquet_files(root: str, buckets: "tuple[int, int] | None" = None) -> list[s
 
 
 # ---------------------------------------------------------------- footers
-# Parquet footers of the files the per-query reads prune on, memoized
-# per process: on the driver (envelope scan, term dfs, tombstones,
-# winner docs) and in reused Python workers (range tasks). An entry
-# holds while its file's (st_ino, st_size, st_mtime_ns) is unchanged,
-# so a file rewritten at the same path is read again; past
-# FOOTER_MEMO_ENTRIES files the least recently used one is dropped.
+# One memo per process for the per-query parquet reads, on the driver
+# (envelope scan, term dfs, tombstones, winner docs) and in reused
+# Python workers (range tasks): each file's footer (``footer``) and the
+# column chunks decoded from it (``Footer.read``), one entry per (row
+# group, column). Both kinds of entry share one LRU order under one
+# lock. An entry holds while its file's (st_ino, st_size, st_mtime_ns)
+# is unchanged, so a file rewritten at the same path is read and
+# decoded again. Past FOOTER_MEMO_ENTRIES files, or past
+# CHUNK_MEMO_BYTES of decoded chunks, the least recently used entries
+# are dropped (a file's chunks with it). Build never reads through it;
+# append (its upserts), merge and compaction read only the tombstone
+# ids through it, never a segment or doc-store chunk.
 FOOTER_MEMO_ENTRIES = 1024
-_footers: "OrderedDict[str, Footer]" = OrderedDict()
-_footers_lock = threading.Lock()
+CHUNK_MEMO_BYTES = 32 << 20
+# what one chunk entry costs beside its arrow buffers (key, LRU node,
+# array wrappers), charged against CHUNK_MEMO_BYTES
+_CHUNK_ENTRY_BYTES = 512
+
+
+class _Memo:
+    """``entries``: path -> its ``Footer``, and (path, file state, row
+    group, column) -> (decoded ``pa.ChunkedArray``, bytes charged), in
+    one LRU order. Every chunk belongs to the footer held for its path
+    at the same state (listed in that footer's ``chunk_keys``), so
+    dropping a footer drops its chunks. ``files`` and ``nbytes`` count
+    the footers and the chunks' charged bytes."""
+
+    def __init__(self):
+        self.lock = threading.Lock()
+        self.entries: OrderedDict = OrderedDict()
+        self.files = 0
+        self.nbytes = 0
+
+    def _drop(self, key, val) -> None:
+        # lock held; ``key`` already popped from entries
+        if isinstance(val, Footer):
+            self.files -= 1
+            for ck in val.chunk_keys:
+                self.nbytes -= self.entries.pop(ck)[1]
+            val.chunk_keys.clear()
+        else:
+            self.nbytes -= val[1]
+            self.entries[key[0]].chunk_keys.discard(key)
+
+    def _evict(self) -> None:
+        while self.files > FOOTER_MEMO_ENTRIES or self.nbytes > CHUNK_MEMO_BYTES:
+            self._drop(*self.entries.popitem(last=False))
+
+    def footer(self, path: str, state: tuple) -> "Footer | None":
+        with self.lock:
+            ent = self.entries.get(path)
+            if ent is None or ent.state != state:
+                return None
+            self.entries.move_to_end(path)
+            return ent
+
+    def put_footer(self, ent: "Footer") -> None:
+        with self.lock:
+            old = self.entries.pop(ent.path, None)
+            if old is not None:
+                self._drop(ent.path, old)
+            self.entries[ent.path] = ent
+            self.files += 1
+            self._evict()
+
+    def chunks(self, keys: list) -> dict:
+        """The memoized chunks among ``keys``, now most recently used."""
+        out = {}
+        with self.lock:
+            for k in keys:
+                hit = self.entries.get(k)
+                if hit is not None:
+                    self.entries.move_to_end(k)
+                    out[k] = hit[0]
+        return out
+
+    def put_chunks(self, path: str, state: tuple, new: dict) -> None:
+        """Memoize ``new`` (key -> chunk) while the footer held for
+        ``path`` is still at ``state``; then the footer is moved behind
+        them, so a file's chunks go before it does."""
+        with self.lock:
+            ft = self.entries.get(path)
+            if ft is None or ft.state != state:
+                return
+            for k, ca in new.items():
+                nb = ca.get_total_buffer_size() + _CHUNK_ENTRY_BYTES
+                if k in self.entries or nb > CHUNK_MEMO_BYTES:
+                    continue
+                self.entries[k] = (ca, nb)
+                ft.chunk_keys.add(k)
+                self.nbytes += nb
+            self.entries.move_to_end(path)
+            self._evict()
+
+
+_memo = _Memo()
 
 
 def _row_group_ranges(md, column: str) -> list:
@@ -1826,7 +1913,9 @@ def _row_group_ranges(md, column: str) -> list:
 
 class Footer:
     """One parquet file's footer (``metadata``), its arrow ``schema``
-    and per-row-group min/max, read once per file state (``footer``)."""
+    and per-row-group min/max, read once per file state (``footer``);
+    ``read`` decodes each (row group, column) chunk once per file state
+    and decodes no chunk on repeat while the memo holds it."""
 
     def __init__(self, path: str, state: tuple):
         import pyarrow.parquet as pq
@@ -1835,6 +1924,7 @@ class Footer:
         self.metadata = pq.read_metadata(path)
         self.schema = self.metadata.schema.to_arrow_schema()
         self._ranges: dict[str, list] = {}
+        self.chunk_keys: set = set()  # its memoized chunks (``_Memo``)
 
     def ranges(self, column: str) -> list:
         """``[(min, max)]`` of ``column`` per row group, ``(None, None)``
@@ -1853,31 +1943,53 @@ class Footer:
         ]
 
     def read(self, row_groups: list[int], columns: list[str]):
-        """Those row groups' ``columns`` as a pyarrow Table — the file
-        is opened over the memoized footer, not re-parsed."""
+        """Those row groups' ``columns`` as a pyarrow Table, built from
+        the memo's decoded chunks (read-only, shared by every caller).
+        The file is opened, over the memoized footer, only to decode
+        the (row group, column) chunks the memo lacks."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        with pq.ParquetFile(self.path, metadata=self.metadata) as pf:
-            return pf.read_row_groups(row_groups, columns=columns, use_threads=False)
+        key = {
+            (rg, c): (self.path, self.state, rg, c)
+            for rg in row_groups for c in columns
+        }
+        hits = _memo.chunks(list(key.values()))
+        got = {rc: hits[k] for rc, k in key.items() if k in hits}
+        todo: dict[int, list[str]] = {}
+        for rg, c in key:
+            if (rg, c) not in got:
+                todo.setdefault(rg, []).append(c)
+        if todo:
+            with pq.ParquetFile(self.path, metadata=self.metadata) as pf:
+                for rg, cols in todo.items():
+                    t = pf.read_row_group(rg, columns=cols, use_threads=False)
+                    for c in cols:
+                        got[rg, c] = t.column(c)
+            _memo.put_chunks(self.path, self.state, {
+                key[rg, c]: got[rg, c] for rg, cols in todo.items() for c in cols
+            })
+        schema = pa.schema(
+            [self.schema.field(c) for c in columns], metadata=self.schema.metadata
+        )
+        return pa.Table.from_arrays([
+            pa.chunked_array(
+                [a for rg in row_groups for a in got[rg, f.name].chunks], f.type
+            )
+            for f in schema
+        ], schema=schema)
 
 
 def footer(path: str) -> Footer:
     """The memoized ``Footer`` of the parquet file at ``path``: one
     ``stat`` per call, a footer read only when the file is new to this
-    process or changed since."""
+    process or changed since (its old chunks are dropped then)."""
     st = os.stat(path)
     state = (st.st_ino, st.st_size, st.st_mtime_ns)
-    with _footers_lock:
-        ent = _footers.get(path)
-        if ent is not None and ent.state == state:
-            _footers.move_to_end(path)
-            return ent
-    ent = Footer(path, state)
-    with _footers_lock:
-        _footers[path] = ent
-        _footers.move_to_end(path)
-        while len(_footers) > FOOTER_MEMO_ENTRIES:
-            _footers.popitem(last=False)
+    ent = _memo.footer(path, state)
+    if ent is None:
+        ent = Footer(path, state)
+        _memo.put_footer(ent)
     return ent
 
 

@@ -97,8 +97,9 @@ def read_pruned_segments_local(
     distributed envelope task), whose df then comes from the driver as
     ``dfs`` (``term_dfs``). Each file's row groups are pruned on the
     term (and bucket) min/max of its memoized footer
-    (``index_build.footer``) and only those are read, so a repeated
-    query in the same process reads no footer."""
+    (``index_build.footer``) and only those are read, from the
+    process's chunk memo (``Footer.read``): a repeated query in the
+    same process reads no footer and decodes no chunk on repeat."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -158,8 +159,9 @@ def term_dfs(index_dir: str, meta: IndexMeta, terms: list[str]) -> dict[str, int
     summed over the pruned files of every generation and fragment — the
     df the distributed envelope resolves on the driver and ships to its
     range tasks. A footer-pruned read of the term/df columns (row groups
-    whose term range holds a query term, from the memoized footers):
-    the driver runs it every query."""
+    whose term range holds a query term, from the memoized footers and
+    the chunks they share with the scan): the driver runs it every
+    query."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

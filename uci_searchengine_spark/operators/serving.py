@@ -56,6 +56,7 @@ class Searcher:
     ):
         self.spark = spark
         self.index_dir = index_dir
+        self._meta_state = self._read_meta_state()
         self.meta = IndexMeta.load(index_dir)
         self.local_bytes_limit = local_bytes_limit
         self.last_plan: str | None = None  # "local" | "spark" (search())
@@ -775,6 +776,26 @@ class Searcher:
 
         return state_token(self.index_dir)
 
+    def _read_meta_state(self) -> tuple:
+        st = os.stat(os.path.join(self.index_dir, "meta.json"))
+        return (st.st_ino, st.st_size, st.st_mtime_ns)
+
+    def _refresh(self) -> None:
+        """Reload the root meta, and drop everything derived from it,
+        when an append or merge committed a new ``meta.json`` since this
+        Searcher read it (one ``stat`` per search)."""
+        state = self._read_meta_state()
+        if state == self._meta_state:
+            return
+        self._meta_state = state
+        self.meta = IndexMeta.load(self.index_dir)
+        self._qcache.clear()
+        self._docs_bytes = self._vocab_pdf = self._vocab_bytes = None
+        for name in (
+            "_segments", "_docs", "_vocab_raw_pdf", "_auth_pdf", "_dv_pdfs"
+        ):
+            self.__dict__.pop(name, None)
+
     def search(
         self,
         query: str,
@@ -788,7 +809,9 @@ class Searcher:
         return the stored envelope with zero work while the index state
         token is unchanged; a tombstone write flushes the cache, and an
         append/merge swaps in a fresh Searcher via the registry. LRU,
-        ``query_cache`` entries (0 disables)."""
+        ``query_cache`` entries (0 disables). A new generation committed
+        under this Searcher reloads its meta first (``_refresh``)."""
+        self._refresh()
         if not self._qcache_max:
             return self._search_impl(query, page, per_page, mode, plan)
         tok = self._index_state_token()

@@ -722,9 +722,10 @@ def fetch_bucket_docs(
     stats cover a winner (footer-stats pruning over the doc_id-sorted
     DOCS_ROW_GROUP layout) — never a join. Both plans' envelopes call
     it for their ≤k final winners (``fetch_winner_docs``, on the
-    driver). The footers and their doc_id ranges come from the
-    process's footer memo (``index_build.footer``), so a repeat query
-    reads no metadata. Returns {doc_id: (url, title, snippet)} with
+    driver). The footers, their doc_id ranges and the decoded row
+    groups come from the process's memo (``index_build.footer``,
+    ``Footer.read``), so a repeat query reads no metadata and decodes
+    no chunk on repeat. Returns {doc_id: (url, title, snippet)} with
     snippets under the reference display rule (bm25.snippet_text)."""
     from uci_searchengine_spark.operators.bm25 import snippet_text
 
