@@ -717,8 +717,8 @@ def main() -> None:
                 # it one run so the budget is spent on phase DIVERSITY
                 # (more rounds) rather than depth. The 8-core DENOMINATOR
                 # gets TWO runs EVERY round: it costs ~1/3 of a 2-core
-                # run, and a paired A/B (scripts/ab_wp_experiment.py log,
-                # round-5) showed the in-round t8 spread — one build
+                # run, and a paired A/B (round 5, BENCH/BASELINE.md)
+                # showed the in-round t8 spread — one build
                 # straddling a ~30 s phase flip — is the largest single
                 # source of pairing error (same-phase t8 7.6-13.2 s);
                 # the in-round min over two samples discards a flipped

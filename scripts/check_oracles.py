@@ -17,7 +17,12 @@ import __spark_entry__ as entry_mod  # noqa: E402
 from uci_searchengine_spark.schema import TESTDATA_TABLES  # noqa: E402
 from uci_searchengine_spark.session import get_spark  # noqa: E402
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+SF_DIR = sys.argv[1] if len(sys.argv) > 1 else os.environ.get("SPARK_GRAFT_SF_DIR")
+if not SF_DIR:
+    sys.exit(
+        "usage: python scripts/check_oracles.py SF_DIR [name,name,...] "
+        "(or set SPARK_GRAFT_SF_DIR)"
+    )
 ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 
 

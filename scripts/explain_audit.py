@@ -16,9 +16,13 @@ from pyspark.sql import functions as F  # noqa: E402
 from uci_searchengine_spark.session import get_spark  # noqa: E402
 
 IDX = os.path.join(REPO, "_data", "audit_index")
+USAGE = "usage: python scripts/explain_audit.py SF_DIR (or set SPARK_GRAFT_SF_DIR)"
+SF = sys.argv[1] if len(sys.argv) > 1 else os.environ.get("SPARK_GRAFT_SF_DIR")
 
 
 def main() -> None:
+    if not SF:
+        sys.exit(USAGE)
     from uci_searchengine_spark.operators.index_build import build_index, load_segments
     from uci_searchengine_spark.operators.bm25 import score_naive
     from uci_searchengine_spark.operators.wand import score_wand
@@ -65,7 +69,7 @@ def main() -> None:
     # broadcast via a cross join, bounded top-k
     from uci_searchengine_spark.entry_queries import QUERIES as _GATES
 
-    rel = _GATES["bm25_topk"][0](spark, "/root/testdata/sf0.001")
+    rel = _GATES["bm25_topk"][0](spark, SF)
     plan = rel._sc._jvm.PythonSQLUtils.explainString(
         rel._jdf.queryExecution(), "formatted"
     )
@@ -97,7 +101,7 @@ def main() -> None:
     # single-stream bottleneck the operator exists to avoid)
     from uci_searchengine_spark.operators.packing import pack_sequences
 
-    docs01 = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs01 = spark.read.parquet(os.path.join(SF, "documents.parquet"))
     packed = pack_sequences(
         docs01.select("doc_id", F.size(F.split(F.col("text"), r"\s+")).alias("tok")),
         "doc_id",
@@ -170,18 +174,47 @@ def main() -> None:
         ("naive: whole-stage codegen present", "*(" in executed, executed)
     )
 
-    # 3) WAND path: pruned segment scan feeding cogroup
+    # 3) WAND path: one Python map stage over the bucket grid's ranges
+    # (no segment scan, no Exchange) under the global top-k; each range
+    # task reads only the query terms' shard dirs
+    from uci_searchengine_spark.operators import local_search
+    from uci_searchengine_spark.operators.index_build import IndexMeta
+    from uci_searchengine_spark.operators.wand import _shards_for_terms
+
     wq = score_wand(spark, IDX, "stop0 arbak", 10)
     plan = wq._sc._jvm.PythonSQLUtils.explainString(
         wq._jdf.queryExecution(), "formatted"
     )
     checks.append(
-        ("wand: partition pruning on shard set", "PartitionFilters: [shard" in plan or "PartitionFilters: [isnotnull(shard" in plan or "shard#" in plan and "IN" in plan, plan)
+        (
+            "wand: one MapInPandas over the range ids, no scan, no Exchange",
+            plan.count("MapInPandas") == 2  # the tree line and its detail
+            and "FlatMap" not in plan and "Scan parquet" not in plan
+            and "Exchange" not in plan and "TakeOrderedAndProject" in plan,
+            plan,
+        )
     )
-    checks.append(("wand: per-bucket FlatMapGroupsInPandas", "FlatMapGroupsInPandas" in plan, plan))
+    meta = IndexMeta.load(IDX)
+    terms = ["stop0", "arbak"]
+    shards = _shards_for_terms(terms, meta.num_shards).values()
+    want = {f"shard={s}" for s in shards}
+    read: list[str] = []
+    real_footer = local_search.footer
+    local_search.footer = lambda f: read.append(f) or real_footer(f)
+    try:
+        local_search.read_pruned_segments_local(IDX, meta, terms, buckets=(0, 1))
+    finally:
+        local_search.footer = real_footer
+    checks.append(
+        (
+            "wand: a range task reads only the query terms' shard dirs",
+            bool(read) and {os.path.basename(os.path.dirname(f)) for f in read} == want,
+            "\n".join(read),
+        )
+    )
 
     # 4) TPC-H-ish joins: broadcast for the small build side, pushdown
-    rev = q_revenue_topk(spark, "/root/testdata/sf0.001")
+    rev = q_revenue_topk(spark, SF)
     plan = rev._sc._jvm.PythonSQLUtils.explainString(
         rev._jdf.queryExecution(), "formatted"
     )
@@ -194,7 +227,7 @@ def main() -> None:
         )
     )
 
-    ps = q_pricing_summary(spark, "/root/testdata/sf0.001")
+    ps = q_pricing_summary(spark, SF)
     plan = ps._sc._jvm.PythonSQLUtils.explainString(
         ps._jdf.queryExecution(), "formatted"
     )
@@ -238,15 +271,23 @@ def main() -> None:
             input_snapshot="audit-pos",
             positions=True,
         )
-    sw = score_wand(spark, PIDX, "stop0 arbak")
-    plan = sw._sc._jvm.PythonSQLUtils.explainString(
-        sw._jdf.queryExecution(), "formatted"
-    )
+    # the scorer's range tasks read the files (no scan in the plan):
+    # their read must drop the positional plane, and keep it only for
+    # the phrase path
+    from uci_searchengine_spark.operators.wand import _scatter
+
+    pmeta = IndexMeta.load(PIDX)
+    cols = {}
+    for with_pos in (False, True):
+        _cuts, ranges, read = _scatter(
+            spark, PIDX, pmeta, ["stop0", "arbak"], None, with_pos
+        )
+        cols[with_pos] = list(read(*ranges[0])[0].columns)
     checks.append(
         (
-            "wand on positional index: positions plane pruned from scan",
-            "positions" not in plan,
-            plan,
+            "wand on positional index: positions plane pruned from the range read",
+            "positions" not in cols[False] and "positions" in cols[True],
+            str(cols),
         )
     )
 
@@ -356,7 +397,9 @@ def main() -> None:
         )
     )
 
-    # batch eval: ONE pruned scan for the whole query batch (scan count)
+    # batch eval: ONE range map stage for the whole query batch, whose
+    # tasks each read the union of the batch's terms once; no scan and
+    # no Exchange below it
     from uci_searchengine_spark.operators.batch_eval import batch_topk
 
     bt = batch_topk(
@@ -365,13 +408,13 @@ def main() -> None:
     plan = bt._sc._jvm.PythonSQLUtils.explainString(
         bt._jdf.queryExecution(), "formatted"
     )
-    # count scan NODES (the formatted plan repeats each node in the
-    # detail section — match the "(N) Scan parquet" detail headers)
-    n_seg_scans = len(_re.findall(r"\(\d+\) Scan parquet", plan))
+    tree = plan.split("\n\n")[0]  # the tree, before the node details
+    below = tree[tree.index("MapInPandas"):] if "MapInPandas" in tree else ""
     checks.append(
         (
-            "batch eval: one segment scan for the whole batch",
-            n_seg_scans == 1 and "PartitionFilters: [" in plan,
+            "batch eval: one MapInPandas stage for the whole batch, no scan",
+            tree.count("MapInPandas") == 1 and "Scan parquet" not in plan
+            and "Range" in below and "Exchange" not in below,
             plan,
         )
     )
@@ -542,7 +585,7 @@ def main() -> None:
         ("training_prep_v2", q_training_prep_v2),
         ("canonical_docs", q_canonical_docs),
     ):
-        qd = qf(spark, "/root/testdata/sf0.001")
+        qd = qf(spark, SF)
         plan = qd._sc._jvm.PythonSQLUtils.explainString(
             qd._jdf.queryExecution(), "formatted"
         )
@@ -551,10 +594,9 @@ def main() -> None:
              "Window" not in plan, plan)
         )
 
-    # federation: the member scans must keep shard partition-pruning
-    # and term pushdown THROUGH the global-df override projection, and
-    # the per-bucket scorer must be the same FlatMapGroupsInPandas the
-    # single-index path uses
+    # federation: each member scores on the single-index path's range
+    # map stage under the union statistics — no segment scan, no
+    # df-override projection, no Exchange
     from uci_searchengine_spark.operators.federate import federated_topk
 
     fed = federated_topk(spark, [IDX], "stop0 arbak", k=5)
@@ -563,16 +605,16 @@ def main() -> None:
     )
     checks.append(
         (
-            "federate: shard partition pruning survives the df override",
-            "PartitionFilters: [shard" in plan and " IN (" in plan,
+            "federate: one MapInPandas per member, no scan, no Exchange",
+            plan.count("MapInPandas") == 2 and "FlatMap" not in plan
+            and "Scan parquet" not in plan and "Exchange" not in plan,
             plan,
         )
     )
     checks.append(
         (
-            "federate: term IN pushdown + per-bucket scorer",
-            "PushedFilters: [In(term" in plan
-            and "FlatMapGroupsInPandas" in plan,
+            "federate: bounded global top-k over the members",
+            "TakeOrderedAndProject" in plan,
             plan,
         )
     )
@@ -585,7 +627,7 @@ def main() -> None:
         q_sampled_quantiles,
     )
 
-    qd = q_sampled_quantiles(spark, "/root/testdata/sf0.001")
+    qd = q_sampled_quantiles(spark, SF)
     plan = qd._sc._jvm.PythonSQLUtils.explainString(
         qd._jdf.queryExecution(), "formatted"
     )
@@ -610,7 +652,7 @@ def main() -> None:
     # composite agg: the after-cursor is a ROW-level predicate pushed
     # to the parquet scan (pre-aggregate pruning), the page a bounded
     # TakeOrderedAndProject, aggregation map-side partial
-    qd = q_composite_agg(spark, "/root/testdata/sf0.001")
+    qd = q_composite_agg(spark, SF)
     plan = qd._sc._jvm.PythonSQLUtils.explainString(
         qd._jdf.queryExecution(), "formatted"
     )
@@ -636,7 +678,7 @@ def main() -> None:
     # slice — never a per-inlink Window sort (mega-target skew class)
     from uci_searchengine_spark.entry_queries import q_anchor_plane
 
-    qd = q_anchor_plane(spark, "/root/testdata/sf0.001")
+    qd = q_anchor_plane(spark, SF)
     plan = qd._sc._jvm.PythonSQLUtils.explainString(
         qd._jdf.queryExecution(), "formatted"
     )
@@ -660,7 +702,7 @@ def main() -> None:
         reciprocal_knn,
     )
 
-    emb01 = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb01 = spark.read.parquet(os.path.join(SF, "embeddings.parquet"))
     cand = knn_candidate_pairs(emb01)
     rk = reciprocal_knn(emb01, k=5, candidates=cand)
     plan = rk._sc._jvm.PythonSQLUtils.explainString(
@@ -786,7 +828,7 @@ def main() -> None:
     # Python.
     from uci_searchengine_spark.operators.sketches import kmv_sketch
 
-    orders01 = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    orders01 = spark.read.parquet(os.path.join(SF, "orders.parquet"))
     kmv = kmv_sketch(
         orders01,
         F.col("o_custkey"),
@@ -821,7 +863,7 @@ def main() -> None:
         zorder_layout as _zo_layout,
     )
 
-    orders_zo = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    orders_zo = spark.read.parquet(os.path.join(SF, "orders.parquet"))
     orders_zo = orders_zo.withColumn(
         "okday", F.datediff(F.col("o_orderdate"), F.lit("1995-01-01"))
     )
@@ -871,7 +913,7 @@ def main() -> None:
     )
 
     emb_km = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
+        os.path.join(SF, "embeddings.parquet")
     ).select("vec_id", _km_quant(F.col("embedding")).alias("qv"))
     cents_km = emb_km.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
@@ -970,7 +1012,7 @@ def main() -> None:
     # combined map-side.
     from uci_searchengine_spark.entry_queries import q_range_join
 
-    rj = q_range_join(spark, "/root/testdata/sf0.001")
+    rj = q_range_join(spark, SF)
     plan = rj._sc._jvm.PythonSQLUtils.explainString(
         rj._jdf.queryExecution(), "formatted"
     )
@@ -999,7 +1041,7 @@ def main() -> None:
     )
 
     emb_ms = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
+        os.path.join(SF, "embeddings.parquet")
     )
     toks_ms = _ms_toks(emb_ms, "embedding", "vec_id", 8, 8)
     q_ms = [
@@ -1165,7 +1207,7 @@ def main() -> None:
     # join at all, and random_score must bound its result with
     # TakeOrderedAndProject rather than a global sort.
     for g in ("terms_set", "boosting_search"):
-        d = _GATES[g][0](spark, "/root/testdata/sf0.001")
+        d = _GATES[g][0](spark, SF)
         plan = d._sc._jvm.PythonSQLUtils.explainString(
             d._jdf.queryExecution(), "formatted"
         )
@@ -1180,7 +1222,7 @@ def main() -> None:
             )
         )
     for g in ("match_phrase_prefix", "random_score"):
-        d = _GATES[g][0](spark, "/root/testdata/sf0.001")
+        d = _GATES[g][0](spark, SF)
         plan = d._sc._jvm.PythonSQLUtils.explainString(
             d._jdf.queryExecution(), "formatted"
         )
@@ -1201,7 +1243,7 @@ def main() -> None:
     # in-row (no Window, no Python, no cartesian product — the only
     # shuffles are the fp-keyed pair join + aggregates) and the hot-fp
     # guard must be a broadcast anti join, not a shuffled one.
-    d = _GATES["combined_fields"][0](spark, "/root/testdata/sf0.001")
+    d = _GATES["combined_fields"][0](spark, SF)
     plan = d._sc._jvm.PythonSQLUtils.explainString(
         d._jdf.queryExecution(), "formatted"
     )
@@ -1215,7 +1257,7 @@ def main() -> None:
             plan,
         )
     )
-    d = _GATES["winnowing_pairs"][0](spark, "/root/testdata/sf0.001")
+    d = _GATES["winnowing_pairs"][0](spark, SF)
     plan = d._sc._jvm.PythonSQLUtils.explainString(
         d._jdf.queryExecution(), "formatted"
     )
@@ -1240,7 +1282,7 @@ def main() -> None:
     # back via broadcast; the diversified sampler's per-key cap must be
     # the windowless sort-slice aggregate with a bounded global top-k.
     for g in ("extended_stats", "weighted_avg"):
-        d = _GATES[g][0](spark, "/root/testdata/sf0.001")
+        d = _GATES[g][0](spark, SF)
         plan = d._sc._jvm.PythonSQLUtils.explainString(
             d._jdf.queryExecution(), "formatted"
         )
@@ -1255,7 +1297,7 @@ def main() -> None:
                 plan,
             )
         )
-    d = _GATES["mad_dispersion"][0](spark, "/root/testdata/sf0.001")
+    d = _GATES["mad_dispersion"][0](spark, SF)
     plan = d._sc._jvm.PythonSQLUtils.explainString(
         d._jdf.queryExecution(), "formatted"
     )
@@ -1269,7 +1311,7 @@ def main() -> None:
             plan,
         )
     )
-    d = _GATES["diversified_sample"][0](spark, "/root/testdata/sf0.001")
+    d = _GATES["diversified_sample"][0](spark, SF)
     plan = d._sc._jvm.PythonSQLUtils.explainString(
         d._jdf.queryExecution(), "formatted"
     )
@@ -1287,7 +1329,7 @@ def main() -> None:
     # span queries: pure scan-side positional predicates; diversity:
     # a partial-agg rollup with no Window/Python.
     for g in ("span_first", "span_not"):
-        d = _GATES[g][0](spark, "/root/testdata/sf0.001")
+        d = _GATES[g][0](spark, SF)
         plan = d._sc._jvm.PythonSQLUtils.explainString(
             d._jdf.queryExecution(), "formatted"
         )
@@ -1301,7 +1343,7 @@ def main() -> None:
                 plan,
             )
         )
-    d = _GATES["ngram_diversity"][0](spark, "/root/testdata/sf0.001")
+    d = _GATES["ngram_diversity"][0](spark, SF)
     plan = d._sc._jvm.PythonSQLUtils.explainString(
         d._jdf.queryExecution(), "formatted"
     )

@@ -124,3 +124,35 @@ def test_checkindex_multigen_ok(spark, tmp_path):
     rep = check_index(spark, d)
     assert rep["ok"], rep["issues"][:5]
     assert rep["stats"]["generations"] == 2
+
+
+def test_detects_doc_store_bucket_faults(spark, index_small, tmp_path):
+    """A bucket dir holding a duplicate doc id, a doc id of another
+    bucket and a null url is flagged once per fault, naming the bucket;
+    the other buckets stay clean."""
+    import pyarrow as pa
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(index_small, idx)
+    fp = sorted(glob.glob(os.path.join(idx, "docs", "bucket=1", "*.parquet")))[0]
+    t = pq.read_table(fp)
+    ids = t["doc_id"].to_pylist()
+    ids[1] = ids[0]  # duplicate
+    ids[-1] = 0  # bucket 0's range
+    urls = t["url"].to_pylist()
+    urls[2] = None
+    t = t.set_column(t.schema.get_field_index("doc_id"), "doc_id",
+                     pa.array(ids, t.schema.field("doc_id").type))
+    t = t.set_column(t.schema.get_field_index("url"), "url",
+                     pa.array(urls, t.schema.field("url").type))
+    pq.write_table(t, fp)
+    rep = check_index(spark, idx)
+    got = sorted(
+        (i["where"], i["problem"]) for i in rep["issues"]
+        if i["where"].startswith("docs bucket=")
+    )
+    assert got == [
+        ("docs bucket=1", "doc id outside bucket dir range"),
+        ("docs bucket=1", "duplicate doc ids"),
+        ("docs bucket=1", "null url"),
+    ]

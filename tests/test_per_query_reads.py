@@ -326,8 +326,13 @@ def test_searcher_construction_starts_no_spark_read(
     finally:
         sc.setJobGroup(None, None)
     assert loads == []
+    # the relational top-k reads its ranges in its map stage: no
+    # segment relation either
     s.top_k("stop0").collect()
     s.top_k("arbak").collect()
+    assert loads == []
+    # the resident relation the crawler statistics read is analyzed once
+    assert s._segments is s._segments
     assert loads == ["load_segments"]
 
 

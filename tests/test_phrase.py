@@ -117,6 +117,19 @@ class TestPositionalPhrase:
             assert math.isclose(gs, es, rel_tol=1e-9)
         plan = score_wand(spark, index_positional, q, 10)._jdf.queryExecution().executedPlan().toString()
         assert "positions" not in plan, "positional plane not pruned from BM25 scan"
+        # the plan holds no scan: the range tasks read the files, and
+        # their read drops the plane unless the phrase path asks for it
+        from uci_searchengine_spark.operators.index_build import IndexMeta
+        from uci_searchengine_spark.operators.wand import _scatter
+
+        meta = IndexMeta.load(index_positional)
+        for with_pos in (False, True):
+            _cuts, ranges, read = _scatter(
+                spark, index_positional, meta, ["stop0", "arbak"], None, with_pos
+            )
+            seg, _ex = read(*ranges[0])
+            assert len(seg)
+            assert ("positions" in seg) == ("pos_block_off" in seg) == with_pos
 
 
 @pytest.mark.spark

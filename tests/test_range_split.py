@@ -310,3 +310,89 @@ def test_split_ranges_bound_the_accumulator(lifecycle, monkeypatch):
         assert run() == whole, cap
         assert len(sizes) > 2 * len(QUERIES), cap
         assert max(sizes) <= cap, cap
+
+
+@pytest.mark.spark
+def test_gate_scorers_split_invariant(spark, lifecycle, monkeypatch):
+    """Every gate top-k scorer on the range map stage (``wand.run_ranges``)
+    returns identical rows whether the bucket grid is one range or one
+    range per bucket (``wand._range_cuts`` patched to each), with the
+    tombstones as the driver array and past ``DRIVER_CAP`` (read per
+    range from the files) — on the two-generation index, whose df comes
+    from the driver (``term_dfs``) and whose boundary bucket holds rows
+    of both generations."""
+    from uci_searchengine_spark.operators import tombstones, wand
+    from uci_searchengine_spark.operators.batch_eval import batch_topk
+    from uci_searchengine_spark.operators.boolean import boolean_search
+    from uci_searchengine_spark.operators.docvalues import (
+        blended_topk,
+        decay_topk,
+        sort_by_field_topk,
+    )
+    from uci_searchengine_spark.operators.federate import federated_topk
+    from uci_searchengine_spark.operators.filtered import filtered_topk
+    from uci_searchengine_spark.operators.index_build import IndexMeta
+    from uci_searchengine_spark.operators.mlt import more_like_this
+    from uci_searchengine_spark.operators.phrase import phrase_search
+    from uci_searchengine_spark.operators.prefix import prefix_search
+    from uci_searchengine_spark.operators.serving import Searcher
+    from uci_searchengine_spark.operators.wand import score_msm, score_wand
+
+    d, _o, _to_eid = lifecycle
+    meta = IndexMeta.load(d)
+    n_buckets = -(-max(meta.n_docs, meta.next_doc_id) // meta.bucket_size)
+    q, k = "stop0 arbak", 50
+    allowed = spark.range(meta.next_doc_id).filter("id % 3 != 1").selectExpr(
+        "id AS doc_id"
+    )
+    src = score_wand(spark, d, "arbar page arbas", 1).collect()[0]["doc_id"]
+    scorers = {
+        "or": lambda: score_wand(spark, d, q, k),
+        "and": lambda: score_wand(spark, d, "arbar page stop2", k, mode="and"),
+        "boost": lambda: score_wand(spark, d, q, k, boosts={"arbak": 3.0}),
+        "msm": lambda: score_msm(spark, d, "stop0 arbak stop1", k, 2),
+        "phrase": lambda: phrase_search(spark, d, "arbak stop1", k),
+        "bool": lambda: boolean_search(spark, d, "+arbak stop1 -stop9", k),
+        "sort": lambda: sort_by_field_topk(spark, d, q, "rank", k=k),
+        "blended": lambda: blended_topk(spark, d, q, "rank", k=k, weight=2.0),
+        "decay": lambda: decay_topk(
+            spark, d, q, "rank", origin=0.5, scale=0.2, k=k
+        ),
+        "fed": lambda: federated_topk(spark, [d, d], q, k=k),
+        "filtered": lambda: filtered_topk(spark, d, q, allowed, k),
+        "batch": lambda: batch_topk(
+            spark, d, {"a": q, "b": "arbak stop1"}, k
+        ).orderBy("query_id", "doc_id"),
+        "mlt": lambda: more_like_this(spark, d, src, k=k),
+        "prefix": lambda: prefix_search(spark, d, "arba*", k),
+        "top_k": lambda: Searcher(spark, d).top_k(q, k),
+    }
+    cuts_seen = []
+
+    def run(cuts):
+        def patched(sc, n):
+            cuts_seen.append(cuts(n))
+            return cuts(n)
+
+        monkeypatch.setattr(wand, "_range_cuts", patched)
+        return {
+            name: [tuple(r) for r in mk().collect()] for name, mk in scorers.items()
+        }
+
+    per_cap = []
+    for cap in (10_000_000, 1):
+        monkeypatch.setattr(tombstones, "DRIVER_CAP", cap)
+        assert isinstance(wand.load_excl(d, meta.bucket_size), wand.BucketedExcl) == (
+            cap == 1
+        )
+        cuts_seen.clear()
+        one = run(lambda n: [0, n])
+        assert cuts_seen and all(c == [0, n_buckets] for c in cuts_seen)
+        cuts_seen.clear()
+        split = run(lambda n: list(range(n + 1)))
+        assert cuts_seen and all(len(c) == n_buckets + 1 for c in cuts_seen)
+        for name in scorers:
+            assert one[name], (cap, name)
+            assert split[name] == one[name], (cap, name)
+        per_cap.append(one)
+    assert per_cap[0] == per_cap[1]

@@ -110,9 +110,9 @@ def _group_work(spark, gid, action):
 
 @pytest.mark.spark
 class TestBucketedTombstones:
-    """Past DRIVER_CAP no driver array is shipped: every scoring task
-    reads its own doc-id range of the tombstone files — one bucket per
-    ``apply_per_bucket`` group, one range per envelope task — and
+    """Past DRIVER_CAP no driver array is shipped: every range task of
+    the distributed plans (the envelope and the top-k scorers' map
+    stage) reads its own doc-id range of the tombstone files — and
     results must be identical on every query path. Exercised by
     lowering the cap to 1 (any delete set of ≥2 ids takes those
     paths)."""
@@ -204,8 +204,9 @@ class TestBucketedTombstones:
     def test_score_wand_plan_has_no_cogroup(
         self, spark, index_tomb, oracle_small, low_cap
     ):
-        """Past the cap score_wand keeps the driver-array plan's shape:
-        no FlatMapCoGroupsInPandas, and its collect runs as many jobs and
+        """Past the cap score_wand keeps the driver-array plan's shape —
+        one Python map stage over the range ids, no grouped or cogrouped
+        Python node, no Exchange — and its collect runs as many jobs and
         stages as the driver-array run."""
         from uci_searchengine_spark.operators import tombstones
         from uci_searchengine_spark.operators.tombstones import delete_docs
@@ -226,8 +227,13 @@ class TestBucketedTombstones:
         plan_cap, rows_cap, jobs_cap, stages_cap = run("cap")
         tombstones.DRIVER_CAP = 10_000_000
         plan_arr, rows_arr, jobs_arr, stages_arr = run("arr")
+        from tests.test_plans import _exchanges, _python_nodes
+
         assert "FlatMapCoGroupsInPandas" not in plan_cap
-        assert "FlatMapGroupsInPandas" in plan_cap
+        for plan in (plan_cap, plan_arr):
+            (node,) = _python_nodes(plan)
+            assert "MapInPandas" in node and "FlatMap" not in node
+            assert _exchanges(plan) == 0
         assert rows_cap == rows_arr
         assert (jobs_cap, stages_cap) == (jobs_arr, stages_arr)
 
@@ -236,10 +242,10 @@ class TestBucketedTombstones:
     ):
         """Every consumer of the exclusion set — or / and / msm /
         phrase / boolean / filtered / blended / decay / sort-by-field /
-        batch / more-like-this / federated top-k (each task reads its
-        bucket's tombstones), envelope and site: envelope (each range
-        task reads its range) — answers at DRIVER_CAP=1 exactly as with
-        the driver array, which is oracle-minus-deleted."""
+        batch / more-like-this / federated top-k, envelope and site:
+        envelope (each range task reads its range's tombstones) —
+        answers at DRIVER_CAP=1 exactly as with the driver array, which
+        is oracle-minus-deleted."""
         from uci_searchengine_spark.operators import tombstones
         from uci_searchengine_spark.operators.batch_eval import batch_topk
         from uci_searchengine_spark.operators.boolean import boolean_search

@@ -9,15 +9,16 @@ scoring. Here the whole batch becomes one plan:
 
 1. analyze every query once on the driver (bounded: the query table is
    tiny by definition — it's human-written queries);
-2. ONE partition-pruned segment scan covering the UNION of all query
-   terms (each shard dir is touched once no matter how many queries hit
+2. ONE map stage over the bucket grid's ranges (``wand.run_ranges``)
+   whose tasks read the rows of the UNION of all query terms (each
+   shard dir is touched once per range no matter how many queries hit
    it);
 3. per scoring bucket, the pandas fn scores EVERY query against the
-   bucket's rows — per-query block-max pruning over the shared in-memory
-   Arrow batch (the scan and the groupBy(bucket) shuffle are paid once
-   for the whole batch). ``decode="shared"`` additionally dedupes the
-   per-term varint decodes: one decode per row per bucket, exhaustive
-   scoring in the same float order (bit-equal results) — measured 2×
+   bucket's rows — per-query block-max pruning over the shared
+   in-memory frame (the read is paid once for the whole batch).
+   ``decode="shared"`` additionally dedupes the per-term varint
+   decodes: one decode per row per bucket, exhaustive scoring in the
+   same float order (bit-equal results) — measured 2×
    warm / 5.8× cold faster on a term-overlapping 32-query sweep
    (BENCH/BASELINE.md); the per-query default keeps block skipping,
    which wins on disjoint single-rare-term batches;
@@ -52,9 +53,7 @@ from uci_searchengine_spark.operators.wand import (
     _score_bucket_and,
     _select,
     _term_rows,
-    apply_per_bucket,
-    load_excl,
-    pruned_segments,
+    run_ranges,
 )
 
 # decode="auto" switches to shared when the batch's df-weighted term
@@ -156,7 +155,6 @@ def batch_topk(
     if not q_terms:
         return empty
     union_terms = list(dict.fromkeys(t for ts in q_terms.values() for t in ts))
-    seg = pruned_segments(spark, index_dir, meta, union_terms)
     n_docs, avgdl, bucket_size = meta.n_docs, meta.avgdl, meta.bucket_size
 
     def make_fn(excl_local):
@@ -216,8 +214,9 @@ def batch_topk(
 
         return fn
 
-    excl = load_excl(index_dir, meta.bucket_size)
-    per_bucket = apply_per_bucket(seg, excl, make_fn, _BATCH_SCHEMA)
+    per_bucket = run_ranges(
+        spark, index_dir, meta, union_terms, make_fn, _BATCH_SCHEMA
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         per_bucket.withColumn("rn", F.row_number().over(w))

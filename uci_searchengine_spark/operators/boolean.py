@@ -11,8 +11,9 @@ unsigned wildcard as SHOULD), ``+stem*`` is a required any-of group,
 over all positive terms, rank (score desc, doc_id asc) — identical
 contract to score_wand.
 
-Per-bucket physical plan (one applyInPandas over the pruned segment
-relation — the same single-job shape as every other scorer):
+Per-bucket physical plan (the per-bucket closure ``make_boolean_fn``,
+called once per bucket in the range tasks of ``wand.run_ranges`` — the
+same one-stage shape as every other scorer):
 
 * **required constraints present** (must / phrase tokens / any-of
   groups): rarest-first intersection over the constraint list — a
@@ -52,9 +53,7 @@ from uci_searchengine_spark.operators.wand import (
     _idf_map,
     _score_bucket,
     _select,
-    apply_per_bucket,
-    load_excl,
-    pruned_segments,
+    run_ranges,
 )
 
 _OUT = "doc_id long, score double"
@@ -217,13 +216,12 @@ def boolean_search(
     empty = spark.createDataFrame([], _OUT)
     if not bq.positive_terms:
         return empty
-    seg = pruned_segments(
+    # tombstones join the NOT set (make_boolean_fn)
+    per_bucket = run_ranges(
         spark, index_dir, meta, all_terms,
+        make_boolean_fn(meta, index_dir, bq, k, use_pos), _OUT,
         with_positions=bool(bq.phrases) and use_pos,
     )
-    tomb_in = load_excl(index_dir, meta.bucket_size)  # joins the NOT set
-    make_fn = make_boolean_fn(meta, index_dir, bq, k, use_pos)
-    per_bucket = apply_per_bucket(seg, tomb_in, make_fn, _OUT)
     return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
@@ -291,8 +289,8 @@ def boolean_plan(
 def make_boolean_fn(
     meta: IndexMeta, index_dir: str, bq: "BoolQuery", k: int, use_pos: bool
 ):
-    """Per-bucket boolean closure builder SHARED by the Spark path
-    (``boolean_search``) and the task-local path
+    """Per-bucket boolean closure builder SHARED by the distributed path
+    (``boolean_search``, via ``wand.run_ranges``) and the task-local path
     (``local_search.boolean_topk_local``) — one code path, identical
     results by construction."""
     from uci_searchengine_spark.operators.index_build import generation_dirs
@@ -444,8 +442,8 @@ def make_boolean_fn(
             # Iterate in sorted-term order: rows of the SAME term cover
             # disjoint doc ranges (generations), so only the across-term
             # float-add order matters — pinning it makes the score bit-equal
-            # between the Spark plan and the task-local plan regardless of
-            # row delivery order (shuffle vs file scan).
+            # between the distributed and the task-local plan regardless
+            # of the rows' order in the frame.
             acc = np.zeros(bucket_size, dtype=np.float64)
             for r in sorted(
                 pos_rows.itertuples(index=False), key=lambda r: r.term

@@ -2,12 +2,12 @@
 (Lucene's ``CheckIndex`` analog — the ops tool you run before trusting
 a segment set after a migration, a crash, or a storage incident).
 
-Distributed shape: one Spark job — the segment relation groups by
-``shard`` and each task exhaustively decodes ITS shard's rows
-(applyInPandas, the same numpy decode the scorers use), emitting issue
-rows; the doc store groups by ``bucket`` the same way. On a cluster the
-check parallelizes over shards/buckets exactly like a query does; at
-10^12 docs it is one full-scan job, the price of certainty.
+Distributed shape: one map stage over the segment relation — each
+task exhaustively decodes the rows of its scan batches (mapInPandas, the
+same numpy decode the scorers use), emitting issue rows, with no
+shuffle; the doc store checks are one per-bucket aggregate. On a
+cluster the check parallelizes over the scan's splits; at 10^12 docs it
+is one full-scan job, the price of certainty.
 
 Checks per segment row (term × bucket × fragment):
 
@@ -29,7 +29,7 @@ tombstone count on tombstoned indexes, whose ids must sit inside the id
 ceiling); per-generation ``df_global`` == Σ fragment ``df`` per term.
 
 Returns {"ok": bool, "issues": [...], "stats": {...}} — issues capped
-at 100 rows per task to keep a broken index's report bounded.
+at 100 rows per scan batch to keep a broken index's report bounded.
 """
 
 from __future__ import annotations
@@ -67,7 +67,7 @@ def _check_seg_rows(meta: IndexMeta):
     bucket_size = meta.bucket_size
     root_avgdl = meta.avgdl
 
-    def fn(key, pdf):
+    def fn(pdf):
         issues: list[tuple[str, str]] = []
         has_gen = "gen_avgdl" in pdf.columns
         has_pos = "positions" in pdf.columns
@@ -155,40 +155,39 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
     """Full structural check; one pass over segments + doc store."""
     meta = IndexMeta.load(index_dir)
     seg = load_segments(spark, index_dir)
+    check = _check_seg_rows(meta)
     seg_issues = [
         (r["where"], r["problem"])
-        for r in seg.groupBy("shard")
-        .applyInPandas(_check_seg_rows(meta), schema=_ISSUE)
-        .collect()
+        for r in seg.mapInPandas(
+            lambda batches: map(check, batches), schema=_ISSUE
+        ).collect()
     ]
 
-    # doc store: per-bucket order/uniqueness/range + url presence
-    bucket_size = meta.bucket_size
-
-    def docs_fn(key, pdf):
-        issues = []
-        b = int(pdf["bucket"].iloc[0]) if len(pdf) else -1
-        where = f"docs bucket={b}"
-        ids = pdf["doc_id"].to_numpy()
-        if len(ids) != len(np.unique(ids)):
-            issues.append((where, "duplicate doc ids"))
-        base = b * bucket_size
-        if len(ids) and (ids.min() < base or ids.max() >= base + bucket_size):
-            issues.append((where, "doc id outside bucket dir range"))
-        if pdf["url"].isna().any():
-            issues.append((where, "null url"))
-        return pd.DataFrame(issues, columns=["where", "problem"])
-
+    # doc store: per-bucket uniqueness/range + url presence
     from uci_searchengine_spark.operators.index_build import load_docs
 
     docs = load_docs(spark, index_dir)
-    doc_issues = [
-        (r["where"], r["problem"])
-        for r in docs.select("doc_id", "url", "bucket")
-        .groupBy("bucket")
-        .applyInPandas(docs_fn, schema=_ISSUE)
+    b, bs = F.col("bucket"), meta.bucket_size
+    doc_issues = []
+    for r in (
+        docs.groupBy("bucket")
+        .agg(
+            (F.count("doc_id") != F.countDistinct("doc_id")).alias("dup"),
+            ((F.min("doc_id") < b * bs) | (F.max("doc_id") >= (b + 1) * bs))
+            .alias("outside"),
+            F.max(F.col("url").isNull()).alias("null_url"),
+        )
+        .filter("dup OR outside OR null_url")
         .collect()
-    ]
+    ):
+        where = f"docs bucket={r['bucket']}"
+        for flag, problem in (
+            ("dup", "duplicate doc ids"),
+            ("outside", "doc id outside bucket dir range"),
+            ("null_url", "null url"),
+        ):
+            if r[flag]:
+                doc_issues.append((where, problem))
 
     # per-FILE doc_id order (the DOCS_ROW_GROUP fetch prunes on footer
     # stats assuming sorted files — a groupBy shuffle can't observe file

@@ -49,9 +49,7 @@ from uci_searchengine_spark.operators.wand import (
     _score_bucket,
     _score_bucket_and,
     _topk_over_segments,
-    apply_per_bucket,
-    load_excl,
-    pruned_segments,
+    run_ranges,
 )
 
 
@@ -132,8 +130,7 @@ def blended_topk(
         return None, (None if vec is None or wgt == 0.0 else wgt * vec)
 
     return _topk_over_segments(
-        pruned_segments(spark, index_dir, meta, terms), meta, k,
-        excl=load_excl(index_dir, bucket_size), transform=transform,
+        spark, index_dir, meta, terms, k, transform=transform
     )
 
 
@@ -205,8 +202,7 @@ def decay_topk(
         return _decay_multiplier(vec, *params), None
 
     return _topk_over_segments(
-        pruned_segments(spark, index_dir, meta, terms), meta, k,
-        excl=load_excl(index_dir, bucket_size), transform=transform,
+        spark, index_dir, meta, terms, k, transform=transform
     )
 
 
@@ -241,7 +237,6 @@ def sort_by_field_topk(
     terms = terms_for_index(meta, query)
     if not terms:
         return spark.createDataFrame([], _SORT_SCHEMA)
-    seg = pruned_segments(spark, index_dir, meta, terms)
     n_docs, avgdl, bucket_size = meta.n_docs, meta.avgdl, meta.bucket_size
     idx_dir, name, asc = index_dir, dv_name, bool(ascending)
     n_terms = len(terms)
@@ -289,8 +284,7 @@ def sort_by_field_topk(
 
         return fn
 
-    excl = load_excl(index_dir, meta.bucket_size)
-    per_bucket = apply_per_bucket(seg, excl, make_fn, _SORT_SCHEMA)
+    per_bucket = run_ranges(spark, index_dir, meta, terms, make_fn, _SORT_SCHEMA)
     val_order = F.asc("value") if asc else F.desc("value")
     return per_bucket.orderBy(val_order, F.asc("doc_id")).limit(k)
 

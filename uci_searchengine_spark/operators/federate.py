@@ -20,7 +20,7 @@ by n_query_terms × n_indexes rows (the same sanctioned tiny-collect
 class as manifest lists); each index then scores its own buckets with
 its own block-max metadata — bounds stay admissible against the global
 avgdl through the existing per-generation inflation (gen_avgdl =
-that index's build avgdl). Union of per-index bounded top-k, global
+that index's build avgdl). Union of per-bucket bounded top-k, global
 TakeOrderedAndProject (``federated_topk``) or a driver merge of the
 members' envelopes (``federated_envelope``). No cross-index shuffle of
 postings, ever.
@@ -28,19 +28,13 @@ postings, ever.
 
 from __future__ import annotations
 
-import dataclasses
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from uci_searchengine_spark.operators.bm25 import terms_for_index
 from uci_searchengine_spark.operators.index_build import IndexMeta
-from uci_searchengine_spark.operators.wand import (
-    _topk_over_segments,
-    load_excl,
-    load_segments,
-    prune_relation,
-)
+from uci_searchengine_spark.operators.wand import _bucket_topk, load_excl
 
 
 def _global_stats(metas: "list[IndexMeta]") -> tuple[int, float]:
@@ -75,41 +69,6 @@ def _union_stats(index_dirs: "list[str]", query: str):
     return terms, metas, *_global_stats(metas), df_global
 
 
-def _member_segments(
-    spark: SparkSession, index_dirs: "list[str]", query: str
-) -> "tuple[list[str], list[tuple[str, IndexMeta, DataFrame]]]":
-    """Each member's pruned segment relation with the UNION-corpus
-    statistics substituted in (global df on rows, per-index avgdl
-    preserved as gen_avgdl so block-max bounds inflate admissibly, meta
-    rewritten to global n_docs/avgdl)."""
-    terms, metas, n_docs, avgdl, df_global = _union_stats(index_dirs, query)
-    if not terms:
-        return [], []
-    members = []
-    for d, m in zip(index_dirs, metas):
-        # pruned relation (shard + term pruning)
-        seg = prune_relation(load_segments(spark, d), m, terms)
-        # global df onto rows as a when-chain keyed on term (terms are
-        # few; the pruned relation only contains these terms)
-        df_expr = None
-        for t in terms:
-            lit_df = F.lit(df_global[t]).cast("long")
-            df_expr = (
-                F.when(F.col("term") == t, lit_df)
-                if df_expr is None
-                else df_expr.when(F.col("term") == t, lit_df)
-            )
-        seg = seg.withColumn("df_global", df_expr)
-        if "gen_avgdl" not in seg.columns:
-            # this index's block_max bounds were computed with ITS
-            # avgdl; scoring runs with the global avgdl — the existing
-            # per-generation inflation keeps pruning admissible
-            seg = seg.withColumn("gen_avgdl", F.lit(float(m.avgdl)))
-        meta_g = dataclasses.replace(m, n_docs=n_docs, avgdl=avgdl)
-        members.append((d, meta_g, seg))
-    return terms, members
-
-
 def federated_topk(
     spark: SparkSession,
     index_dirs: "list[str]",
@@ -119,27 +78,22 @@ def federated_topk(
     """Top-k (index_id, doc_id, score) across ``index_dirs`` under
     exact union-corpus BM25 statistics. ``doc_id`` is index-local (each
     index owns its dense id space); callers resolve global identity
-    through each index's doc store. Per-index top-k is a superset of
-    that index's contribution to the global top-k, so the final
-    ``orderBy … limit k`` over ≤ k·n_indexes rows is exact."""
-    terms, members = _member_segments(spark, index_dirs, query)
-    if not members:
+    through each index's doc store. Each member scores its buckets in
+    its own range map stage (``wand._bucket_topk`` under the union
+    statistics); every bucket's top-k is a superset of its contribution
+    to the global top-k, so the final ``orderBy … limit k`` over the
+    union of the stages is exact."""
+    terms, metas, n_docs, avgdl, dfs = _union_stats(index_dirs, query)
+    if not terms:
         return spark.createDataFrame(
             [], "index_id int, doc_id long, score double"
         )
-    branches = []
-    for i, (d, meta_g, seg) in enumerate(members):
-        topk_i = _topk_over_segments(
-            seg,
-            meta_g,
-            k,
-            excl=load_excl(d, meta_g.bucket_size),
+    branches = [
+        _bucket_topk(spark, d, m, terms, k, stats=(n_docs, avgdl, dfs)).select(
+            F.lit(i).cast("int").alias("index_id"), "doc_id", "score"
         )
-        branches.append(
-            topk_i.select(
-                F.lit(i).cast("int").alias("index_id"), "doc_id", "score"
-            )
-        )
+        for i, (d, m) in enumerate(zip(index_dirs, metas))
+    ]
     out = reduce(DataFrame.unionByName, branches)
     return out.orderBy(
         F.desc("score"), F.asc("index_id"), F.asc("doc_id")

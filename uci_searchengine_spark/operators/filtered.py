@@ -15,11 +15,11 @@ one numpy predicate over (doc_id, authority) and doc-value frames: the
 task-local plan evaluates it over resident whole-index frames into a
 sorted driver array, each range task of the distributed envelope over
 its own buckets of the doc store and doc-value planes
-(``wand.topk_count_docs``). ``filtered_topk`` keys its relation on the
-bucket grid and cogroups it per scoring bucket
-(``wand.apply_per_bucket``; past the driver cap the same task reads
-its bucket's tombstone ids from the files). Either way the kernel
-masks at accumulation time — before θ ever tightens — so block-max
+(``wand.topk_count_docs``). ``filtered_topk`` keys its relation by the
+range id of the same scatter and groups it with the range ids in one
+shuffle of the allowed ids alone (``wand.run_ranges``; each range task
+still reads its own tombstone ids past the driver cap). Either way the
+kernel masks at accumulation time — before θ ever tightens — so block-max
 pruning stays admissible for the post-filter top-k (a post-scoring
 filter would drop filtered-in docs that unfiltered docs had pruned
 away).
@@ -43,11 +43,7 @@ from uci_searchengine_spark.operators.index_build import (
     generation_dirs,
     parquet_files,
 )
-from uci_searchengine_spark.operators.wand import (
-    _topk_over_segments,
-    load_excl,
-    pruned_segments,
-)
+from uci_searchengine_spark.operators.wand import _topk_over_segments
 
 _SITE = re.compile(r"^site:([\w.\-:]+)$", re.IGNORECASE)
 
@@ -199,7 +195,5 @@ def filtered_topk(
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
     return _topk_over_segments(
-        pruned_segments(spark, index_dir, meta, terms), meta, k, mode=mode,
-        n_terms=len(terms), excl=load_excl(index_dir, meta.bucket_size),
-        incl=allowed,
+        spark, index_dir, meta, terms, k, mode=mode, incl=allowed
     )

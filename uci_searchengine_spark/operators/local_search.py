@@ -10,7 +10,10 @@ pruned frame of a pyarrow scan of those files in-process, as ONE doc-id
 range, with the range closure the distributed plan runs per task
 (``wand.make_envelope_fn`` — shared, not copied): the distributed plan
 is this plan, sharded into bucket ranges (``wand.topk_count_docs``),
-and both finish with ``wand.gather_envelope``.
+and both finish with ``wand.gather_envelope``. Likewise the phrase and
+boolean twins (``phrase_topk_local``, ``boolean_topk_local``) run their
+per-bucket closures through the loop (``wand.run_buckets``) each range
+task of the gate scorers' map stage runs (``wand.run_ranges``).
 
 Rank/byte identity with the distributed plan is by construction (one
 closure, one range-independent accumulation order) and asserted by
@@ -70,9 +73,8 @@ def pruned_shard_bytes(index_dir: str, shards: list[int]) -> int:
 
 
 def _sum_dfs(terms, dfs) -> dict[str, int]:
-    """The multi-fragment / multi-generation df rule outside the Spark
-    plan (``wand.prune_relation`` holds it there): a term's global df is
-    the sum of its rows' fragment-local ``df`` — exact, because the
+    """The multi-fragment / multi-generation df rule: a term's global df
+    is the sum of its rows' fragment-local ``df`` — exact, because the
     pruned files hold each query term's ENTIRE posting list."""
     out: dict[str, int] = {}
     for t, d in zip(terms, dfs):
@@ -88,16 +90,16 @@ def read_pruned_segments_local(
     buckets: "tuple[int, int] | None" = None,
     dfs: "dict[str, int] | None" = None,
 ) -> pd.DataFrame:
-    """pyarrow replica of ``wand.prune_relation`` over the same files:
-    shard-dir (partition) pruning, term row filter, positional-plane
+    """The query's segment rows, the one segment read of every query
+    plan: shard-dir (partition) pruning, term row filter, positional-plane
     column pruning (kept when ``with_positions`` — the phrase path),
-    per-generation ``gen_avgdl``, and the identical multi-fragment/
-    multi-generation df_global resolution (sum of fragment-local df per
-    term). ``buckets`` = ``(b0, b1)`` keeps one bucket range's rows (a
-    distributed envelope task), whose df then comes from the driver as
-    ``dfs`` (``term_dfs``). Each file's row groups are pruned on the
-    term (and bucket) min/max of its memoized footer
-    (``index_build.footer``) and only those are read, from the
+    per-generation ``gen_avgdl``, and the multi-fragment/multi-generation
+    df_global resolution (sum of fragment-local df per term).
+    ``buckets`` = ``(b0, b1)`` keeps one bucket range's rows (a range
+    task of the distributed plans, ``wand._scatter``), whose df then
+    comes from the driver as ``dfs`` (``term_dfs``). Each file's row
+    groups are pruned on the term (and bucket) min/max of its memoized
+    footer (``index_build.footer``) and only those are read, from the
     process's chunk memo (``Footer.read``): a repeated query in the
     same process reads no footer and decodes no chunk on repeat."""
     import pyarrow as pa
@@ -157,11 +159,11 @@ def read_pruned_segments_local(
 def term_dfs(index_dir: str, meta: IndexMeta, terms: list[str]) -> dict[str, int]:
     """Global df of each query term present in the index: row ``df``
     summed over the pruned files of every generation and fragment — the
-    df the distributed envelope resolves on the driver and ships to its
-    range tasks. A footer-pruned read of the term/df columns (row groups
-    whose term range holds a query term, from the memoized footers and
-    the chunks they share with the scan): the driver runs it every
-    query."""
+    df the distributed plans resolve on the driver and ship to their
+    range tasks (``wand._scatter``), and federation's per-member df. A
+    footer-pruned read of the term/df columns (row groups whose term
+    range holds a query term, from the memoized footers and the chunks
+    they share with the scan): the driver runs it per query."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -214,7 +216,7 @@ def _merge_bucket_outputs(
     parts: list[pd.DataFrame], k: int
 ) -> list[dict]:
     """Global merge of per-bucket scorer outputs — the in-process twin
-    of the Spark plans' ``orderBy(score desc, doc_id asc).limit(k)``."""
+    of the distributed plans' ``orderBy(score desc, doc_id asc).limit(k)``."""
     if not parts:
         return []
     allr = pd.concat(parts, ignore_index=True)
@@ -233,15 +235,6 @@ def _merge_bucket_outputs(
     return rows
 
 
-def _run_buckets_local(seg: pd.DataFrame, fn) -> list[pd.DataFrame]:
-    parts = []
-    for _, gpdf in seg.groupby("bucket", sort=False):
-        out = fn(None, gpdf.reset_index(drop=True))
-        if len(out):
-            parts.append(out)
-    return parts
-
-
 def phrase_topk_local(
     index_dir: str,
     meta: IndexMeta,
@@ -252,10 +245,11 @@ def phrase_topk_local(
     slop: int = 0,
 ) -> list[dict]:
     """In-process twin of ``phrase.phrase_search``: the SAME per-bucket
-    closure (``phrase.make_phrase_fn`` — shared, not copied) over the
-    same pruned files, positional plane included when the strategy uses
-    it. Returns [(doc_id, score, n_occ)] rows in the identical
-    (score desc, doc_id asc) top-k order. ``slop`` relaxes adjacency to
+    closure (``phrase.make_phrase_fn`` — shared, not copied) called by
+    the same loop (``wand.run_buckets``) over the same pruned files,
+    positional plane included when the strategy uses it. Returns
+    [(doc_id, score, n_occ)] rows in the identical (score desc, doc_id
+    asc) top-k order. ``slop`` relaxes adjacency to
     ordered proximity (functions/phrase.py semantics)."""
     from uci_searchengine_spark.operators.phrase import (
         make_phrase_fn,
@@ -271,7 +265,7 @@ def phrase_topk_local(
     if not len(seg):
         return []
     fn = make_phrase_fn(meta, index_dir, seq, terms, k, use_pos, slop)(excl)
-    return _merge_bucket_outputs(_run_buckets_local(seg, fn), k)
+    return _merge_bucket_outputs(_wand.run_buckets(seg, fn), k)
 
 
 def boolean_topk_local(
@@ -285,7 +279,8 @@ def boolean_topk_local(
     synonyms: "dict[str, list[str]] | None" = None,
 ) -> list[dict]:
     """In-process twin of ``boolean.boolean_search``: the SAME per-bucket
-    closure (``boolean.make_boolean_fn``) over the same pruned files —
+    closure (``boolean.make_boolean_fn``) and loop (``wand.run_buckets``)
+    over the same pruned files —
     +must/-not/"phrase" semantics, tombstones joining the NOT set, the
     identical (score desc, doc_id asc) top-k. ``inject`` = verbatim
     wildcard expansions from ``boolean.expand_wildcards``; ``synonyms``
@@ -307,7 +302,7 @@ def boolean_topk_local(
     if not len(seg):
         return []
     fn = make_boolean_fn(meta, index_dir, bq, k, use_pos)(excl)
-    return _merge_bucket_outputs(_run_buckets_local(seg, fn), k)
+    return _merge_bucket_outputs(_wand.run_buckets(seg, fn), k)
 
 
 # ---------------------------------------------------------------- suggest

@@ -37,11 +37,7 @@ from uci_searchengine_spark.operators.bm25 import analyze_seq
 from uci_searchengine_spark.operators.bm25 import idf as idf_fn
 from uci_searchengine_spark.operators.index_build import IndexMeta
 from uci_searchengine_spark.operators.suggest import vocab
-from uci_searchengine_spark.operators.wand import (
-    _topk_over_segments,
-    load_excl,
-    pruned_segments,
-)
+from uci_searchengine_spark.operators.wand import _bucket_topk
 
 MAX_TERMS = 25
 
@@ -121,13 +117,10 @@ def mlt_topk_for_terms(
 ) -> DataFrame:
     """Scoring tail shared by ``more_like_this`` and the serving
     surface: the selected disjunction with the source doc excluded —
-    a k+1 fetch with the source filtered out ((score desc, doc_id asc)
-    is a total order, so dropping one row of the k+1 leaves the top k
-    of the rest)."""
-    seg = pruned_segments(spark, index_dir, meta, terms)
-    out = _topk_over_segments(
-        seg, meta, k + 1, mode="or", excl=load_excl(index_dir, meta.bucket_size)
-    )
+    every bucket's k+1 best with the source filtered out ((score desc,
+    doc_id asc) is a total order, so dropping one row of a bucket's k+1
+    leaves the top k of its rest), then the global top k."""
+    out = _bucket_topk(spark, index_dir, meta, terms, k + 1)
     return (
         out.filter(F.col("doc_id") != int(exclude_id))
         .orderBy(F.desc("score"), F.asc("doc_id"))

@@ -11,8 +11,8 @@ Two physical strategies, chosen per-index:
   trade when phrase queries are frequent.
 * **Match-then-verify** (no positional plane): the same intersection,
   then adjacency checked against the doc store INSIDE the same
-  per-bucket task. The doc store is hive-partitioned by the SAME
-  doc-range buckets the scorer is grouped by, so each pandas task reads
+  per-bucket call. The doc store is hive-partitioned by the SAME
+  doc-range buckets the scorer runs by, so each bucket call reads
   exactly its own `docs/bucket=N/` files with a pyarrow doc_id filter —
   candidate fetch is co-located by construction: no join, no second
   shuffle. The right trade when phrase queries are rare (keeps the index
@@ -49,9 +49,7 @@ from uci_searchengine_spark.operators.index_build import IndexMeta
 from uci_searchengine_spark.operators.wand import (
     _idf_map,
     _score_bucket_and,
-    apply_per_bucket,
-    load_excl,
-    pruned_segments,
+    run_ranges,
 )
 
 _OUT_SCHEMA = "doc_id long, score double, n_occ int"
@@ -240,10 +238,10 @@ def phrase_search(
     empty = spark.createDataFrame([], _OUT_SCHEMA)
     if not seq:
         return empty
-    seg = pruned_segments(spark, index_dir, meta, terms, with_positions=use_pos)
-    excl = load_excl(index_dir, meta.bucket_size)
     make_fn = make_phrase_fn(meta, index_dir, seq, terms, k, use_pos, slop)
-    per_bucket = apply_per_bucket(seg, excl, make_fn, _OUT_SCHEMA)
+    per_bucket = run_ranges(
+        spark, index_dir, meta, terms, make_fn, _OUT_SCHEMA, with_positions=use_pos
+    )
     return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
@@ -272,8 +270,9 @@ def make_phrase_fn(
     use_pos: bool,
     slop: int = 0,
 ):
-    """Per-bucket phrase closure builder SHARED by the Spark path
-    (``phrase_search``) and the task-local path
+    """Per-bucket phrase closure builder SHARED by the distributed path
+    (``phrase_search``, one call per bucket in ``wand.run_ranges``' range
+    tasks) and the task-local path
     (``local_search.phrase_topk_local``) — one code path, identical
     results by construction."""
     from uci_searchengine_spark.operators.index_build import generation_dirs

@@ -39,11 +39,7 @@ from pyspark.sql import functions as F
 from uci_searchengine_spark.operators.bm25 import terms_for_index
 from uci_searchengine_spark.operators.index_build import IndexMeta
 from uci_searchengine_spark.operators.suggest import vocab
-from uci_searchengine_spark.operators.wand import (
-    _topk_over_segments,
-    load_excl,
-    pruned_segments,
-)
+from uci_searchengine_spark.operators.wand import _topk_over_segments
 
 MAX_EXPANSIONS = 50
 _WILDCARD = re.compile(r"^(\w+)\*$", re.UNICODE)
@@ -200,11 +196,4 @@ def prefix_search(
     terms = prefix_terms(spark, index_dir, meta, query, max_expansions)
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
-    seg = pruned_segments(spark, index_dir, meta, terms)
-    return _topk_over_segments(
-        seg,
-        meta,
-        k,
-        mode="or",
-        excl=load_excl(index_dir, meta.bucket_size),
-    )
+    return _topk_over_segments(spark, index_dir, meta, terms, k)

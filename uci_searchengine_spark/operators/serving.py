@@ -75,9 +75,9 @@ class Searcher:
         self._vocab_pdf = None  # resident (term, df) frame, lazy
         self._vocab_bytes: int | None = None
 
-    # analyzed on first use, then reused: every relational query applies
-    # its filters to these (the envelope reads the files directly, so a
-    # reload that only serves it starts no Spark read)
+    # analyzed on first use, then reused by the relational statistics
+    # (http_api's crawler statistics); every query path reads the files
+    # directly, so a reload that only serves queries starts no Spark read
     @functools.cached_property
     def _segments(self) -> DataFrame:
         return load_segments(self.spark, self.index_dir)
@@ -88,18 +88,14 @@ class Searcher:
 
     # -------------------------------------------------------------- scoring
     def top_k(self, query: str, k: int = 10, mode: str = "or") -> DataFrame:
-        """Block-max WAND top-k reusing the resident segment relation
-        (mode="and": rarest-first conjunctive intersection)."""
+        """Block-max WAND top-k on the range map stage of the top-k
+        scorers (mode="and": rarest-first conjunctive intersection)."""
         meta = self.meta
         terms = terms_for_index(meta, query)
         if not terms:
             return self.spark.createDataFrame([], "doc_id long, score double")
-        # identical pruning + multi-generation df resolution as the cold path
-        # (wand.pruned_segments), applied to the resident cached relation
-        seg = _wand.prune_relation(self._segments, meta, terms)
         return _wand._topk_over_segments(
-            seg, meta, k, mode=mode, n_terms=len(terms),
-            excl=_wand.load_excl(self.index_dir, meta.bucket_size),
+            self.spark, self.index_dir, meta, terms, k, mode=mode
         )
 
     def phrase(self, phrase: str, k: int = 10, method: str = "auto"):

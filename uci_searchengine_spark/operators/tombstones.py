@@ -10,10 +10,11 @@ without the deleted pages is the compaction step.
 Scale note: below ``DRIVER_CAP`` (~10^7 ids, 80 MB) the exclusion set
 is loaded driver-side as a sorted int64 array and shipped in the scorer
 closures (the same mechanism boolean NOT uses) — exact and cheap for
-the common case. Past the cap every scoring task reads its own doc-id
-range of the files (``load_tombstone_ids(index_dir, lo, hi)``, through
-``wand.BucketedExcl``): one bucket per ``apply_per_bucket`` group, one
-range per envelope task — no driver materialization at any tombstone
+the common case. Past the cap every range task of the distributed
+plans (the search envelope and the top-k scorers' map stage, which
+share one scatter, ``wand._scatter``) reads its own doc-id range of the
+files (``load_tombstone_ids(index_dir, lo, hi)``, through
+``wand.BucketedExcl``) — no driver materialization at any tombstone
 count, and no extra plan node. ``delete_docs`` writes one row group
 per bucket, so such a read decodes only its own buckets' row groups
 (files written before that hold one row group and are decoded whole).

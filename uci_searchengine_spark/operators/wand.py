@@ -3,11 +3,14 @@
 Query lifecycle (rebuild of backend/app/api/search.py:67-126, SURVEY.md §3.1):
 
 1. tokenize + dedup query terms (driver),
-2. partition-pruned scan of the query terms' shards only
-   (`shard isin(...)` hits the hive partition dirs — the Spark analog of
-   the reference's B-tree probe on terms.term, models.py:41),
+2. a read of the query terms' ``shard=`` dirs only, row groups pruned
+   on their footers' term stats (``local_search.read_pruned_segments_local``
+   — the analog of the reference's B-tree probe on terms.term,
+   models.py:41),
 3. per-term idf from the ``df_global`` column denormalized onto segment
-   rows at build time (term_stats analog) — no per-query aggregation job,
+   rows at build time (term_stats analog) — no per-query aggregation job;
+   an index of several generations or split shards sums its rows' df on
+   the driver (``local_search.term_dfs``),
 4. scoring of a doc-id RANGE over the segment rows alone — document
    lengths ride inline in the postings codec, so scoring needs NO side
    table (a per-query doc-length join would shuffle the whole doc table
@@ -16,14 +19,15 @@ Query lifecycle (rebuild of backend/app/api/search.py:67-126, SURVEY.md §3.1):
    scores independently: the search envelope scores the whole pruned
    frame as one range in-process (``local_search``) or one range per
    task of a single scatter-gather stage (``topk_count_docs``), a range
-   wider than ``_RANGE_IDS`` ids as runs of whole buckets; the
-   top-k scorers (``_topk_over_segments``) score one bucket per
-   applyInPandas group. Inside: block-max pruning (MaxScore regime over
-   the block-max metadata) + vectorized exhaustive scoring of surviving
-   blocks + a bounded top-k selection,
+   wider than ``_RANGE_IDS`` ids as runs of whole buckets; the top-k
+   scorers run on the same scatter (``run_ranges``: one Python map
+   stage, each task reading its range and calling the scorer's
+   per-bucket closure once per bucket). Inside: block-max pruning
+   (MaxScore regime over the block-max metadata) + vectorized
+   exhaustive scoring of surviving blocks + a bounded top-k selection,
 5. global top-k over ≤ n_ranges*k candidates: a driver merge for the
-   envelope, orderBy(score desc, doc_id asc).limit(k) for the top-k
-   scorers (TakeOrderedAndProject on tiny data).
+   envelope, orderBy(score desc, doc_id asc).limit(k) after the map
+   stage for the top-k scorers (TakeOrderedAndProject, no Exchange).
 
 Pruning logic (per range, ``_score_bucket``): terms are accumulated in
 one range-independent order, weight ``w = idf·boost`` descending, into a
@@ -46,6 +50,7 @@ single-node oracle on the full reference query set (tests/test_query.py).
 from __future__ import annotations
 
 import dataclasses
+import functools
 import os
 
 import numpy as np
@@ -62,7 +67,6 @@ from uci_searchengine_spark.operators.index_build import (
     DOCS_PER_BUCKET,
     IndexMeta,
     footer,
-    load_segments,
     parquet_files,
 )
 
@@ -71,9 +75,8 @@ from uci_searchengine_spark.operators.index_build import (
 class BucketedExcl:
     """Exclusion set too large for a driver closure array (tombstones
     past ``tombstones.DRIVER_CAP``): plain values a task closure
-    captures. Every scoring task reads its own doc-id range of the
-    tombstone files (``ids``) — one bucket per ``apply_per_bucket``
-    group, one range per envelope task (``topk_count_docs``) — so the
+    captures. Every range task of the distributed plans (``_scatter``)
+    reads its own doc-id range of the tombstone files (``ids``), so the
     set is never materialized on the driver."""
 
     index_dir: str
@@ -103,58 +106,6 @@ def load_excl(
         return BucketedExcl(index_dir, bucket_size)
     t = _tomb.load_tombstone_ids(index_dir)
     return t if t.size else None
-
-
-def apply_per_bucket(
-    seg: DataFrame,
-    excl,
-    make_fn,
-    schema,
-    incl: "DataFrame | None" = None,
-    bucket_size: int = 0,
-) -> DataFrame:
-    """groupBy(bucket).applyInPandas with tombstone and filter delivery:
-    a driver exclusion array (or None) is closed into the scoring fn; a
-    BucketedExcl is read per group, each task its own bucket's ids from
-    the tombstone files — constant driver memory at any tombstone count.
-
-    ``make_fn(local_excl) -> (key, seg_pdf) -> pdf`` builds the scoring
-    fn for one bucket's (possibly None) sorted exclusion ids.
-
-    ``incl`` (filter context): a ``doc_id`` relation of ALLOWED docs,
-    keyed on ``bucket_size`` and cogrouped, so each task receives only
-    its bucket's allowed ids as keyword ``incl`` — empty when the
-    bucket has none, which allows nothing (applyInPandas takes two
-    positional parameters, so the optional third one is keyword-only)."""
-    if isinstance(excl, BucketedExcl):
-
-        def fn(key, seg_pdf, **kw):
-            b = int(key[0])
-            ids = excl.ids(b * excl.bucket_size, (b + 1) * excl.bucket_size)
-            return make_fn(ids if ids.size else None)(key, seg_pdf, **kw)
-
-    else:
-        fn = make_fn(excl)
-    if incl is None:
-        return seg.groupBy("bucket").applyInPandas(fn, schema=schema)
-    # the key takes the segments' bucket type: cogroup hash-partitions
-    # each side on its own key, and an int and a long of one value hash
-    # apart, so mixed types split a bucket across tasks
-    doc = F.col("doc_id").cast("long")
-    side = incl.select(
-        (doc / F.lit(bucket_size)).cast(seg.schema["bucket"].dataType).alias("bucket"),
-        doc.alias("doc_id"),
-    )
-
-    def fn2(key, seg_pdf, side_pdf):
-        ids = np.unique(side_pdf["doc_id"].to_numpy().astype(np.int64))
-        return fn(key, seg_pdf, incl=ids)
-
-    return (
-        seg.groupBy("bucket")
-        .cogroup(side.groupBy("bucket"))
-        .applyInPandas(fn2, schema=schema)
-    )
 
 
 _TOPK_SCHEMA = T.StructType(
@@ -561,11 +512,7 @@ def score_msm(
         return score_wand(spark, index_dir, query, k, mode="or")
     if m == len(terms):
         return score_wand(spark, index_dir, query, k, mode="and")
-    seg = pruned_segments(spark, index_dir, meta, terms)
-    return _topk_over_segments(
-        seg, meta, k, excl=load_excl(index_dir, meta.bucket_size),
-        min_match=m,
-    )
+    return _topk_over_segments(spark, index_dir, meta, terms, k, min_match=m)
 
 
 def _idf_map(
@@ -599,93 +546,208 @@ def score_wand(
     empty = spark.createDataFrame([], "doc_id long, score double")
     if not terms:
         return empty
-    seg = pruned_segments(spark, index_dir, meta, terms)
     return _topk_over_segments(
-        seg, meta, k, mode=mode, n_terms=len(terms),
-        excl=load_excl(index_dir, meta.bucket_size), boosts=boosts,
+        spark, index_dir, meta, terms, k, mode=mode, boosts=boosts
     )
 
 
-def pruned_segments(
+def _range_cuts(sc, n_buckets: int) -> list[int]:
+    """Cut points of a grid of ``n_buckets`` buckets into n = min(#buckets,
+    defaultParallelism) contiguous ranges ``[cuts[i], cuts[i + 1])``:
+    the scatter of both distributed plans."""
+    n = min(n_buckets, sc.defaultParallelism)
+    return [n_buckets * i // n for i in range(n + 1)]
+
+
+def _scoring_meta(meta: IndexMeta, stats) -> IndexMeta:
+    """``meta`` under the corpus statistics ``stats`` = (n_docs, avgdl,
+    dfs), when given."""
+    if stats is None:
+        return meta
+    return dataclasses.replace(meta, n_docs=stats[0], avgdl=stats[1])
+
+
+def _scatter(
     spark: SparkSession,
     index_dir: str,
     meta: IndexMeta,
     terms: list[str],
+    excl: "np.ndarray | BucketedExcl | None",
     with_positions: bool = False,
-) -> DataFrame:
-    """The scorers' shared scan prelude: segment relation pruned to the
-    query terms' shard dirs (hive partition pruning) and rows, with
-    df_global resolved. The positional plane (if the index has one) is
-    column-pruned away unless ``with_positions`` — BM25 scoring must not
-    pay its bytes."""
-    return prune_relation(
-        load_segments(spark, index_dir), meta, terms, with_positions=with_positions
+    stats: "tuple[int, float, dict] | None" = None,
+):
+    """The distributed plans' shared scatter: ``(cuts, ranges, read)``.
+    ``ranges`` = one ``(b0, b1, ex)`` per range of ``_range_cuts``, ex
+    the range's slice of a driver exclusion array (else None);
+    ``read(b0, b1, ex) -> (seg, ex)`` is a task's read of its range —
+    the query terms' rows of buckets ``[b0, b1)`` by the task-local
+    plan's pyarrow scan (``read_pruned_segments_local``, positional
+    plane kept under ``with_positions``) and, past the driver cap, the
+    range's tombstone ids from the files (``BucketedExcl.ids``). df is
+    resolved on the driver and shipped in the closure: ``term_dfs`` for
+    several generations or split shards, else the rows' own df_global.
+    ``stats`` = (n_docs, avgdl, dfs) substitutes other corpus statistics
+    (federation's union corpus): its dfs, and the index's own avgdl as
+    ``gen_avgdl`` — the avgdl its block-max bounds were built with, so
+    the kernels inflate them admissibly."""
+    from uci_searchengine_spark.operators.local_search import term_dfs
+
+    if stats is not None:
+        dfs = stats[2]
+    elif meta.seg_split > 1 or meta.gens > 1:
+        dfs = term_dfs(index_dir, meta, terms)
+    else:
+        dfs = None
+    bs = meta.bucket_size
+    n_b = max(1, -(-max(meta.n_docs, meta.next_doc_id) // bs))
+    cuts = _range_cuts(spark.sparkContext, n_b)
+    tomb = excl if isinstance(excl, BucketedExcl) else None
+    ranges = [
+        (b0, b1, None if excl is None or tomb is not None
+         else excl[(excl >= b0 * bs) & (excl < b1 * bs)])
+        for b0, b1 in zip(cuts, cuts[1:])
+    ]
+    read = functools.partial(
+        _read_range, index_dir, meta, terms, with_positions, dfs,
+        stats is not None, tomb,
+    )
+    return cuts, ranges, read
+
+
+def _read_range(
+    index_dir, meta, terms, with_positions, dfs, other_stats, tomb, b0, b1, ex
+):
+    """``_scatter``'s ``read``, bound there: a module function, so a task
+    closure ships it by reference, not by value. ``other_stats``: the
+    scoring statistics are not the index's own (``stats``)."""
+    from uci_searchengine_spark.operators.local_search import (
+        read_pruned_segments_local,
     )
 
+    seg = read_pruned_segments_local(
+        index_dir, meta, terms, with_positions, buckets=(b0, b1), dfs=dfs
+    )
+    if len(seg) and other_stats and "gen_avgdl" not in seg:
+        seg["gen_avgdl"] = meta.avgdl
+    if tomb is not None:
+        ex = tomb.ids(b0 * meta.bucket_size, b1 * meta.bucket_size)
+    return seg, ex
 
-def prune_relation(
-    seg_rel: DataFrame,
+
+def run_buckets(seg: pd.DataFrame, fn, incl: "np.ndarray | None" = None) -> list:
+    """A per-bucket scorer closure ``fn(key, seg_pdf[, incl=])`` called
+    once per bucket of a frame: the loop of every range task
+    (``run_ranges``) and of the task-local twins
+    (``local_search.phrase_topk_local`` / ``boolean_topk_local``).
+    Returns the non-empty outputs."""
+    kw = {} if incl is None else {"incl": incl}
+    parts = []
+    for _, gpdf in seg.groupby("bucket", sort=False):
+        out = fn(None, gpdf.reset_index(drop=True), **kw)
+        if len(out):
+            parts.append(out)
+    return parts
+
+
+def run_ranges(
+    spark: SparkSession,
+    index_dir: str,
     meta: IndexMeta,
     terms: list[str],
+    make_fn,
+    schema,
     with_positions: bool = False,
+    incl: "DataFrame | None" = None,
+    stats: "tuple[int, float, dict] | None" = None,
 ) -> DataFrame:
-    """Apply the query-term pruning + df resolution to an already-loaded
-    segment relation (shared by pruned_segments, ``Searcher.top_k`` and
-    federation, so every relational surface gets identical
-    multi-generation df semantics; the search envelope prunes with the
-    same rules in pyarrow — ``local_search.read_pruned_segments_local``)."""
-    shard_map = _shards_for_terms(terms, meta.num_shards)
-    shards = sorted(set(shard_map.values()))
-    seg = seg_rel.filter(F.col("shard").isin(shards) & F.col("term").isin(terms))
-    if getattr(meta, "positions", False) and not with_positions:
-        seg = seg.drop("positions", "pos_block_off")
-    if getattr(meta, "seg_split", 1) > 1 or getattr(meta, "gens", 1) > 1:
-        # per-row df_global is fragment-local when a shard's buckets were
-        # split across stage-2 tasks (corpus ≫ task memory) AND when the
-        # index holds multiple generations (each gen counted only its own
-        # docs). The pruned scan already covers each query term's ENTIRE
-        # posting list across fragments/generations, so the true df is an
-        # in-plan aggregate + broadcast join — only the query terms' rows
-        # touched.
-        dfs = seg.groupBy("term").agg(F.sum("df").cast("long").alias("_df"))
-        seg = (
-            seg.drop("df_global")
-            .join(F.broadcast(dfs), "term")
-            .withColumnRenamed("_df", "df_global")
-        )
-    # else: idf comes from the df_global column denormalized onto segment
-    # rows at build time — no aggregation at all per query
-    return seg
+    """The gate top-k scorers' distributed plan: ONE Python map stage
+    over the bucket grid's ranges (``_scatter``, the envelope's
+    scatter), ``spark.range(n, numPartitions=n).mapInPandas(task)`` —
+    no segment relation, no shuffle. Each task reads its range
+    (``_scatter``'s ``read``: the query terms' rows, its tombstones)
+    and calls the scorer's per-bucket closure ``make_fn(excl)`` once
+    per bucket (``run_buckets``). Returns the lazy per-bucket outputs
+    (``schema``); the caller adds its global tail (``orderBy … limit``
+    or a per-query window).
+
+    ``incl`` (filter context): a ``doc_id`` relation of ALLOWED docs,
+    keyed by range id and grouped with the range ids in one shuffle of
+    the allowed ids alone — each range id rides along as a row with a
+    null doc_id, so every range runs once, with an empty allowed set
+    (nothing allowed) when none of its docs is. The task body is the
+    same; the closure gets the range's sorted ids as keyword ``incl``."""
+    excl = load_excl(index_dir, meta.bucket_size)
+    cuts, ranges, read = _scatter(
+        spark, index_dir, meta, terms, excl, with_positions, stats
+    )
+
+    def body(i: int, allowed: "np.ndarray | None" = None) -> list:
+        seg, ex = read(*ranges[i])
+        return run_buckets(seg, make_fn(ex), allowed) if len(seg) else []
+
+    ids = spark.range(len(ranges), numPartitions=len(ranges))
+    if incl is None:
+
+        def task(batches):
+            for pdf in batches:
+                for i in pdf["id"].tolist():
+                    if parts := body(i):
+                        yield pd.concat(parts, ignore_index=True)
+
+        return ids.mapInPandas(task, schema)
+    doc = F.col("doc_id").cast("long")
+    bucket = (doc / F.lit(meta.bucket_size)).cast("long")
+    rid = F.when(bucket < cuts[1], 0)
+    for i, c in enumerate(cuts[2:], 1):
+        rid = rid.when(bucket < c, i)
+    keyed = ids.select(
+        F.col("id").alias("rid"), F.lit(None).cast("long").alias("doc_id")
+    ).unionByName(
+        incl.select(rid.otherwise(-1).cast("long").alias("rid"), doc.alias("doc_id"))
+    )
+
+    def group(key, pdf):
+        i = int(key[0])
+        if not 0 <= i < len(ranges):
+            return pd.DataFrame()  # docs past the grid hold no postings
+        allowed = np.unique(pdf["doc_id"].dropna().to_numpy().astype(np.int64))
+        parts = body(i, allowed)
+        return pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
+
+    return keyed.groupBy("rid").applyInPandas(group, schema)
 
 
-def _topk_over_segments(
-    seg: DataFrame,
+def _bucket_topk(
+    spark: SparkSession,
+    index_dir: str,
     meta: IndexMeta,
+    terms: list[str],
     k: int,
     mode: str = "or",
-    n_terms: int | None = None,
-    excl: "np.ndarray | BucketedExcl | None" = None,
     boosts: "dict[str, float] | None" = None,
     min_match: int = 1,
     transform=None,
     incl: "DataFrame | None" = None,
+    stats: "tuple[int, float, dict] | None" = None,
 ) -> DataFrame:
-    """Scoring tail shared by the top-k scorers and serving.Searcher:
-    per-bucket block-max scoring over an (already pruned, df-resolved)
-    segment relation, then global top-k. ``min_match`` and
-    ``transform(bucket) -> (mul, add)`` (a bucket's per-doc score
-    transform, e.g. read from a doc-values plane) pass through to the
-    OR kernel ``_score_bucket``; ``incl`` restricts eligibility to a
-    ``doc_id`` relation of allowed docs (``apply_per_bucket``)."""
+    """Every bucket's top-k (doc_id, score) of the query ``terms``:
+    block-max scoring in ``run_ranges``' map stage, lazy — the top-k
+    scorers' shared body before their global tail
+    (``_topk_over_segments``; federation and more-like-this union or
+    filter the rows first). ``min_match`` and ``transform(bucket) ->
+    (mul, add)`` (a bucket's per-doc score transform, e.g. read from a
+    doc-values plane) pass through to the OR kernel ``_score_bucket``;
+    ``incl`` restricts eligibility to a ``doc_id`` relation of allowed
+    docs; ``stats`` scores with other corpus statistics
+    (``_scatter``)."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    n_docs = meta.n_docs
-    avgdl, bucket_size = meta.avgdl, meta.bucket_size
+    meta_s = _scoring_meta(meta, stats)
+    n_docs, avgdl, bucket_size = meta_s.n_docs, meta_s.avgdl, meta.bucket_size
+    n_terms = len(terms)
 
     def make_fn(excl_local):
         def score_fn(key, seg_pdf, *, incl=None):
-            if not len(seg_pdf):
-                return _empty_topk()
             idf_map = _idf_map(n_docs, seg_pdf, boosts)
             if mode == "and":
                 return _score_bucket_and(
@@ -702,10 +764,23 @@ def _topk_over_segments(
 
         return score_fn
 
-    per_bucket = apply_per_bucket(
-        seg, excl, make_fn, _TOPK_SCHEMA, incl=incl, bucket_size=bucket_size
+    return run_ranges(
+        spark, index_dir, meta, terms, make_fn, _TOPK_SCHEMA, incl=incl,
+        stats=stats,
     )
-    return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _topk_over_segments(
+    spark: SparkSession, index_dir: str, meta: IndexMeta, terms: list[str],
+    k: int, **kw,
+) -> DataFrame:
+    """Top-k (doc_id, score) of the query ``terms`` shared by the top-k
+    scorers and ``serving.Searcher.top_k``: ``_bucket_topk`` (its
+    keywords), then the global orderBy(score desc, doc_id asc).limit(k)
+    — TakeOrderedAndProject right over the map stage."""
+    return _bucket_topk(spark, index_dir, meta, terms, k, **kw).orderBy(
+        F.desc("score"), F.asc("doc_id")
+    ).limit(k)
 
 
 _DOC_COLS = ["doc_id", "url", "title", "text"]
@@ -921,40 +996,17 @@ def topk_count_docs(
     corpus). Returns (rows, total) like ``local_topk_count_docs``."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    from uci_searchengine_spark.operators.local_search import term_dfs
-
-    if stats is None:
-        multi = meta.seg_split > 1 or meta.gens > 1
-        smeta, dfs = meta, term_dfs(index_dir, meta, terms) if multi else None
-    else:
-        smeta = dataclasses.replace(meta, n_docs=stats[0], avgdl=stats[1])
-        dfs = stats[2]
-    bs, own_avgdl, n_terms = meta.bucket_size, meta.avgdl, len(terms)
-    n_b = max(1, -(-max(meta.n_docs, meta.next_doc_id) // bs))
-    sc = spark.sparkContext
-    n = min(n_b, sc.defaultParallelism)
-    cuts = [n_b * i // n for i in range(n + 1)]
-    tomb = excl if isinstance(excl, BucketedExcl) else None
-    ranges = [
-        (b0, b1, None if excl is None or tomb is not None
-         else excl[(excl >= b0 * bs) & (excl < b1 * bs)])
-        for b0, b1 in zip(cuts, cuts[1:])
-    ]
+    smeta, n_terms = _scoring_meta(meta, stats), len(terms)
+    _cuts, ranges, read = _scatter(spark, index_dir, meta, terms, excl, stats=stats)
 
     def task(it):
-        from uci_searchengine_spark.operators import filtered, local_search
+        from uci_searchengine_spark.operators import filtered
 
         for b0, b1, ex in it:
-            seg = local_search.read_pruned_segments_local(
-                index_dir, meta, terms, buckets=(b0, b1), dfs=dfs
-            )
+            seg, ex = read(b0, b1, ex)
             if not len(seg):
                 yield 0, []
                 continue
-            if "gen_avgdl" not in seg and smeta.avgdl != own_avgdl:
-                seg["gen_avgdl"] = own_avgdl  # the avgdl of the stored bounds
-            if tomb is not None:
-                ex = tomb.ids(b0 * bs, b1 * bs)
             incl = None
             if filters:
                 incl = filtered.allowed_ids(
@@ -962,8 +1014,10 @@ def topk_count_docs(
                     lambda: filtered.read_authority(index_dir, (b0, b1)),
                     lambda f: filtered.read_doc_values(index_dir, f, (b0, b1)),
                 )
-            fn = make_envelope_fn(smeta, k, mode, n_terms, boosts)(ex)
-            yield fn(None, seg, incl=incl)
+            yield make_envelope_fn(smeta, k, mode, n_terms, boosts)(ex)(
+                None, seg, incl=incl
+            )
 
+    sc = spark.sparkContext
     parts = sc.parallelize(ranges, len(ranges)).mapPartitions(task).collect()
-    return gather_envelope(index_dir, bs, parts, k, display_terms)
+    return gather_envelope(index_dir, meta.bucket_size, parts, k, display_terms)
